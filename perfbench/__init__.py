@@ -1,0 +1,5 @@
+"""Steady-state benchmark for the ingest, streaming and lake-query layers.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
