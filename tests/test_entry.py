@@ -73,3 +73,28 @@ def test_rotation_spends_check_slots_on_unverified_queries():
     assert not hash_pending_outside, (
         f"hash-pending queries outside the check window: {hash_pending_outside}"
     )
+
+
+def test_rotation_order_is_a_pure_function_of_history():
+    """_rotation_order over hand-built history: the latest round's status
+    wins, stale greens precede recent ones, and with no history the order
+    is registration order."""
+    from user_behavior_spark_pipeline_spark.registry import _rotation_order
+
+    keys = ["a", "b", "c", "d", "e"]
+    oracles = set(keys)
+    assert _rotation_order(keys, [], oracles) == keys
+
+    green, red = {"hash_match": True}, {"hash_match": False}
+    # a: green then red (latest wins -> re-check tier, ahead of greens);
+    # b: red then green (latest wins -> green, vintage r1)
+    history = [{"a": green, "b": red}, {"a": red, "b": green}]
+    assert _rotation_order(["b", "a"], history, oracles) == ["a", "b"]
+
+    # c, d green in r0 (stale), e green in r1 (recent), b green in r1:
+    # stale greens first, registration order within a vintage; a has no
+    # row and outranks every green
+    history = [{"c": green, "d": green}, {"e": green, "b": green}]
+    assert _rotation_order(keys, history, oracles) == ["a", "c", "d", "b", "e"]
+    # rows-only entries queue behind hash-capable ones of the same status
+    assert _rotation_order(["a", "f"], [], {"f"}) == ["f", "a"]

@@ -1,8 +1,8 @@
-"""The materialization seam (materialize.py): the iterative components
-loop — the heaviest consumer of share-once materialization — must produce
-identical output under every mode, so switching a cluster deployment from
-localCheckpoint to reliable checkpoint or persist-with-lineage is a config
-change with no semantic surface (round-4 verdict #3)."""
+"""The share-once seam (materialize.py) and the localCheckpoint pattern
+its callers use: the iterative components loop — the heaviest consumer of
+per-round checkpoints — keeps its chain + clique components, a lazy
+checkpoint truncates lineage and re-reads stably, and the shared and
+keyed caches register and release."""
 
 from __future__ import annotations
 
@@ -23,33 +23,21 @@ def chain_and_clique_pairs(spark):
     )
 
 
-def test_components_identical_under_all_materialize_modes(
-    chain_and_clique_pairs,
-):
+def test_components_chain_and_clique(chain_and_clique_pairs):
     from user_behavior_spark_pipeline_spark.operators.dedup import (
         dedup_components,
     )
 
-    results = {}
-    original = M.get_materialize_mode()
-    try:
-        for mode in M.MODES:
-            M.set_materialize_mode(mode)
-            results[mode] = {
-                r["doc_id"]: r["component"]
-                for r in dedup_components(chain_and_clique_pairs).collect()
-            }
-            M.release_shared()
-    finally:
-        M.set_materialize_mode(original)
-
+    got = {
+        r["doc_id"]: r["component"]
+        for r in dedup_components(chain_and_clique_pairs).collect()
+    }
     expected = (
         {i: 100 for i in range(100, 113)}
         | {i: 200 for i in range(200, 204)}
         | {300: 300, 301: 300}
     )
-    for mode, got in results.items():
-        assert got == expected, f"mode {mode}: {got}"
+    assert got == expected, got
 
 
 def test_release_shared_drains_cache_registry(spark, sf_dir):
@@ -58,31 +46,12 @@ def test_release_shared_drains_cache_registry(spark, sf_dir):
     from user_behavior_spark_pipeline_spark.sources.tables import load_table
 
     df = load_table(spark, sf_dir, "documents").select("doc_id")
-    cached = M.cache_shared(df)
+    cached, n = M.cache_shared(df)
+    assert n == df.count()
     assert cached.storageLevel.useMemory
     released = M.release_shared()
     assert released >= 1
     assert not cached.storageLevel.useMemory
-
-
-def test_invalid_mode_rejected():
-    with pytest.raises(ValueError):
-        M.set_materialize_mode("banana")
-
-
-def test_typoed_env_mode_fails_loudly_at_use(spark):
-    """The env path (UBSP_MATERIALIZE) bypasses set_materialize_mode's
-    validation; a typo'd mode must raise at first materialize(), never
-    silently fall through to some other branch (the review finding:
-    the durability switch silently defeated)."""
-    df = spark.range(3).toDF("x")
-    original = M._mode
-    try:
-        M._mode = "local-checkpoint"  # dash typo
-        with pytest.raises(ValueError, match="UBSP_MATERIALIZE"):
-            M.materialize(df)
-    finally:
-        M._mode = original
 
 
 def test_cache_cap_eviction_warns(spark):
@@ -115,10 +84,11 @@ def test_cache_shared_by_key_shares_and_releases(spark):
         return _b
 
     M.release_keyed()
-    a1 = M.cache_shared_by_key(("t", 1), build("a"))
-    a2 = M.cache_shared_by_key(("t", 1), build("a"))
-    b1 = M.cache_shared_by_key(("t", 2), build("b"))
+    a1 = M.cache_shared_by_key(("t", 1), build("a"), spark)
+    a2 = M.cache_shared_by_key(("t", 1), build("a"), spark)
+    b1 = M.cache_shared_by_key(("t", 2), build("b"), spark)
     assert a1 is a2 and a1 is not b1
+    assert calls == ["a", "b"]  # a warm hit never runs the builder
     assert a1.storageLevel.useMemory
     M.release_shared()  # per-query reclaim must not evict keyed entries
     assert a1.storageLevel.useMemory
@@ -138,36 +108,26 @@ def test_ann_trio_shares_one_baseline(spark, sf_dir):
     M.release_keyed()
 
 
-def test_materialize_lazy_truncates_and_reuses_under_all_modes(spark):
-    """materialize_lazy: the caller's next action materializes the frame;
-    afterwards it behaves exactly like materialize's output — identical
-    rows on re-read (no recompute drift) and truncated lineage under the
-    checkpoint modes (the returned plan no longer references the input's
-    shuffle). Sequential-consumer contract only — fan-out seams keep
-    eager materialize (module docstring)."""
+def test_lazy_local_checkpoint_truncates_and_reuses(spark):
+    """A lazy localCheckpoint (the strictly-sequential call sites in
+    dedup and iceberg): the caller's next action materializes the frame;
+    afterwards re-reads return identical rows (no recompute drift) and
+    the logical plan is truncated to an RDD scan (it no longer references
+    the input's shuffle). Fan-out sites keep the eager form."""
     from pyspark.sql import functions as F
 
-    original = M.get_materialize_mode()
-    try:
-        for mode in M.MODES:
-            M.set_materialize_mode(mode)
-            base = (
-                spark.range(0, 1000)
-                .select((F.col("id") % 97).alias("k"), F.col("id").alias("v"))
-                .groupBy("k")
-                .agg(F.min("v").alias("m"))
-            )
-            lazy = M.materialize_lazy(base, iterative=True)
-            # one sequential action materializes it (the fused dispatch)
-            n = lazy.filter(F.col("m") % 2 == 0).count()
-            rows1 = sorted((r["k"], r["m"]) for r in lazy.collect())
-            rows2 = sorted((r["k"], r["m"]) for r in lazy.collect())
-            assert rows1 == rows2
-            assert n == len([r for r in rows1 if r[1] % 2 == 0])
-            # checkpoint modes truncate the logical plan to an RDD scan
-            if mode in ("local_checkpoint", "reliable_checkpoint"):
-                plan = lazy._jdf.queryExecution().optimizedPlan().toString()
-                assert "Aggregate" not in plan, plan
-            M.release_shared()
-    finally:
-        M.set_materialize_mode(original)
+    base = (
+        spark.range(0, 1000)
+        .select((F.col("id") % 97).alias("k"), F.col("id").alias("v"))
+        .groupBy("k")
+        .agg(F.min("v").alias("m"))
+    )
+    lazy = base.localCheckpoint(eager=False)
+    # one sequential action materializes it (the fused dispatch)
+    n = lazy.filter(F.col("m") % 2 == 0).count()
+    rows1 = sorted((r["k"], r["m"]) for r in lazy.collect())
+    rows2 = sorted((r["k"], r["m"]) for r in lazy.collect())
+    assert rows1 == rows2
+    assert n == len([r for r in rows1 if r[1] % 2 == 0])
+    plan = lazy._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in plan, plan

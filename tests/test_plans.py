@@ -514,9 +514,9 @@ def test_q15_no_nested_loop_and_single_materialized_fact_scan(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
-    # mode-independent materialization pin: the revenue view's two
-    # consumers must NOT each rescan the fact — under local_checkpoint
-    # the lineitem scan vanishes from this plan entirely (0 nodes);
+    # materialization pin: the revenue view's two consumers must NOT
+    # each rescan the fact — the localCheckpoint makes the lineitem
+    # scan vanish from this plan entirely (0 nodes);
     # without materialization it appears twice (plan text prints ~2
     # nodes per logical scan, so > 2 lines means a double scan)
     fact_scans = [
@@ -705,8 +705,8 @@ def test_incremental_merge_equals_recompute_any_split(spark, sf_dir):
 def test_q2_decorrelated_min_no_nested_loop(spark, sf_dir):
     """Q2: the correlated scalar MIN must decorrelate to an aggregate +
     equi hash join-back — never a nested loop — and the region-scoped
-    partsupp view must be materialized (one InMemory scan feeding both
-    the MIN and the join-back)."""
+    partsupp view must be materialized (one checkpointed RDD scan
+    feeding both the MIN and the join-back)."""
     from user_behavior_spark_pipeline_spark.registry import QUERIES
 
     plan = (
@@ -717,9 +717,8 @@ def test_q2_decorrelated_min_no_nested_loop(spark, sf_dir):
     )
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    # materialize() plans as Scan ExistingRDD under the default
-    # local_checkpoint mode, InMemoryTableScan under persist
-    assert "Scan ExistingRDD" in plan or "InMemoryTableScan" in plan
+    # the localCheckpointed scope plans as Scan ExistingRDD
+    assert "Scan ExistingRDD" in plan
 
 
 def test_q9_six_table_rollup_hash_joins_only(spark, sf_dir):

@@ -1,79 +1,31 @@
-"""Share-once materialization seam (SCALE.md "Durability caveat").
+"""Share-once seam for corpus-sized and cross-query intermediates
+(SCALE.md "Durability caveat").
 
-Dedup/similarity pipelines materialize shared intermediates (shingle
-tables, signatures, PQ codes, per-round component labels) exactly once so
-fan-out consumers and iterative loops don't recompute them. HOW to
-materialize is a deployment decision, not an algorithm decision:
+Durability is a per-call-site choice made in code: small derived tables
+truncate lineage with ``df.localCheckpoint()`` at their call site, and
+corpus-sized frames keep lineage through :func:`cache_shared` — a lost
+executor recomputes them instead of failing the job, and checkpointing a
+corpus-sized frame would double its storage.
 
-- ``local_checkpoint`` (default): eager, truncates lineage, blocks live
-  unreplicated on executors. Right for single-JVM local mode and
-  minutes-long jobs; an executor loss on a real cluster kills the job.
-- ``reliable_checkpoint``: eager, writes to the Spark checkpoint
-  directory (set ``spark.sparkContext.setCheckpointDir`` to durable
-  storage on a cluster; a temp dir is auto-provisioned otherwise so the
-  mode is testable out of the box). Survives executor loss; costs a
-  write per materialization.
-- ``persist``: MEMORY_AND_DISK + eager count. Keeps LINEAGE — a lost
-  executor recomputes instead of failing — and evicts under memory
-  pressure. The cache lives until released; pair with
-  :func:`release_shared` in long-lived sessions.
-
-Round-4 reviews picked per-site defaults by hand (corpus-sized frames →
-persist-with-lineage, small derived tables → localCheckpoint); this seam
-makes the remaining localCheckpoint sites a config switch
-(``set_materialize_mode`` or env ``UBSP_MATERIALIZE``) instead of a code
-edit, per the round-4 verdict.
-
-Separately, :func:`cache_shared` is the corpus-sized-intermediate path
-(ALWAYS persist-with-lineage — mode-independent, the durability rule) and
-registers its frame so sessions running many queries can reclaim executor
-storage with :func:`release_shared` between queries instead of leaking
-cached blocks for the session's lifetime.
+:func:`cache_shared` registers its frame so sessions running many queries
+reclaim executor storage with :func:`release_shared` between queries.
+:func:`cache_shared_by_key` pins small frames several registered queries
+rebuild identically; :func:`release_keyed` drains those.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-MODES = ("local_checkpoint", "reliable_checkpoint", "persist")
-
-_mode: str = os.environ.get("UBSP_MATERIALIZE", "local_checkpoint")
-
-# frames cached by cache_shared (and materialize(mode=persist)) that are
-# still holding executor storage; release_shared drains it. Bounded:
-# sessions that never call release_shared (pytest, the correctness
-# driver, interactive use) must not accumulate pinned CacheManager
-# entries forever — past the cap the OLDEST frame is unpersisted (its
-# lineage recomputes if some plan still needs it: slower, never wrong).
+# frames cached by cache_shared that are still holding executor storage;
+# release_shared drains it. Bounded: sessions that never call
+# release_shared (pytest, the oracle sweep, interactive use) must
+# not accumulate pinned CacheManager entries forever — past the cap the
+# OLDEST frame is unpersisted (its lineage recomputes if some plan still
+# needs it: slower, never wrong).
 _SHARED_CACHES: list[DataFrame] = []
 _MAX_SHARED_CACHES = 16
-
-
-def set_materialize_mode(mode: str) -> None:
-    if mode not in MODES:
-        raise ValueError(f"materialize mode {mode!r} not in {MODES}")
-    global _mode
-    _mode = mode
-
-
-def get_materialize_mode() -> str:
-    return _mode
-
-
-def _checked_mode() -> str:
-    # the env path skips set_materialize_mode's validation — a typo'd
-    # UBSP_MATERIALIZE must fail loudly at first use, not silently fall
-    # through to some other branch (the durability switch exists exactly
-    # for deployments where the wrong mode loses jobs)
-    if _mode not in MODES:
-        raise ValueError(
-            f"UBSP_MATERIALIZE={_mode!r} is not one of {MODES}"
-        )
-    return _mode
 
 
 def _register_cache(cached: DataFrame) -> None:
@@ -101,93 +53,14 @@ def _register_cache(cached: DataFrame) -> None:
             pass
 
 
-def _ensure_checkpoint_dir(df: DataFrame) -> None:
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        # auto-provision so the mode works out of the box; production
-        # clusters should point this at durable (replicated) storage.
-        # Spark never deletes reliable-checkpoint files itself unless
-        # spark.cleaner.referenceTracking.cleanCheckpoints was set before
-        # the context started (it usually wasn't), so register the temp
-        # dir for removal at interpreter exit — iterative loops can write
-        # dozens of per-round checkpoints per query and a long-lived
-        # session would otherwise grow /tmp without bound (ADVICE r05).
-        path = tempfile.mkdtemp(prefix="ubsp-ckpt-")
-        sc.setCheckpointDir(path)
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-
-
-def materialize(df: DataFrame, iterative: bool = False) -> DataFrame:
-    """Eagerly materialize a shared/iterative intermediate once, per the
-    session's materialization mode. Eagerness is part of the contract: a
+def cache_shared(df: DataFrame) -> tuple[DataFrame, int]:
+    """Corpus-sized shared intermediate: persist MEMORY_AND_DISK WITH
+    lineage plus an eager count, registered for :func:`release_shared`
+    and bounded by the cache cap. Eagerness is part of the contract: a
     LAZY persist under a fan-out plan is populated concurrently by its
-    consumers, each computing the full lineage (SCALE.md).
-
-    ``iterative=True`` marks call sites inside loops whose round N plan
-    references round N-1's (components, incremental dedup): those need
-    LINEAGE TRUNCATION, not just caching — under plain persist the
-    logical plan nests a copy of every prior round and analysis cost
-    grows exponentially with round count. persist mode therefore
-    escalates iterative sites to reliable checkpoint (still durable,
-    and truncating); the other two modes truncate already."""
-    mode = _checked_mode()
-    if mode == "local_checkpoint":
-        return df.localCheckpoint()
-    if mode == "reliable_checkpoint" or iterative:
-        _ensure_checkpoint_dir(df)
-        return df.checkpoint()
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    _register_cache(cached)
-    return cached
-
-
-def materialize_lazy(df: DataFrame, iterative: bool = False) -> DataFrame:
-    """:func:`materialize` for STRICTLY SEQUENTIAL chains: mark the frame
-    for lineage-truncating materialization but let the CALLER'S next
-    action do the computing. The eager seam dispatches one blocking Spark
-    job for the checkpoint and the caller immediately dispatches a second
-    (a convergence count, a consumer build) over the just-materialized
-    rows; when the two are back to back on one driver thread, fusing them
-    halves the job dispatches — in iterative loops (components rounds)
-    that is one scheduling round-trip saved per iteration.
-
-    Contract: the caller must run ONE action (or strictly sequential
-    actions) over the returned frame before any fan-out — a lazy frame
-    first touched concurrently from two driver threads computes its
-    lineage in both, the exact pathology materialize()'s eagerness
-    exists to prevent (module docstring). Keep :func:`materialize` at
-    fan-out seams and thread boundaries."""
-    mode = _checked_mode()
-    if mode == "local_checkpoint":
-        return df.localCheckpoint(eager=False)
-    if mode == "reliable_checkpoint" or iterative:
-        _ensure_checkpoint_dir(df)
-        return df.checkpoint(eager=False)
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _register_cache(cached)
-    return cached
-
-
-def cache_shared(df: DataFrame) -> DataFrame:
-    """Corpus-sized shared intermediate: persist WITH lineage + eager
-    count, regardless of mode — a lost executor must recompute, never
-    fail the job, and checkpointing a corpus-sized frame would double its
-    storage (the durability rule the round-4 reviews applied per-site).
-    Registered for :func:`release_shared` and bounded by the cache cap."""
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    _register_cache(cached)
-    return cached
-
-
-def cache_shared_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """cache_shared, returning the eager count too — call sites that
-    need the row count (bloom sizing, LSH auto-knobs) would otherwise
-    run a second count job over the cache."""
+    consumers, each computing the full lineage. Returns ``(frame,
+    count)`` — the count is free, so sizing callers (bloom filters, LSH
+    auto-knobs) need no second job."""
     cached = df.persist(StorageLevel.MEMORY_AND_DISK)
     n = cached.count()
     _register_cache(cached)
@@ -197,43 +70,26 @@ def cache_shared_counted(df: DataFrame) -> tuple[DataFrame, int]:
 _KEYED_SHARED: dict[tuple, DataFrame] = {}
 
 
-def cache_shared_by_key(key, builder, spark=None, eager=True) -> DataFrame:
+def cache_shared_by_key(key, builder, spark: SparkSession, eager=True) -> DataFrame:
     """SESSION-LIFETIME keyed share for small derived frames that several
     REGISTERED QUERIES recompute identically (VERDICT r05 #4: the three
-    certified ANN queries each rebuilt the same exact-top-k baseline over
-    the same planted corpus, ~+1 s each at sf0.1).
-
-    Unlike :func:`cache_shared` (corpus-sized, drained per-query by
-    :func:`release_shared`), entries here survive release_shared — the
-    whole point is reuse across queries — so this is ONLY for frames that
-    are small enough to pin for the session (the ANN baseline is
-    num_queries x k rows). The key is namespaced by the builder frame's
-    Spark application id, so a cached frame from a stopped session can
-    never be served to a new one; :func:`release_keyed` clears
-    explicitly.
-
-    Pass ``spark`` (the live session) when available: the hit check then
-    runs BEFORE ``builder()``, so a warm hit skips plan construction
-    entirely — measured 0.3–0.6 s of py4j expression-building per hit
-    for the MEM-runs pipeline, paid on every warm sample without this.
-    Without ``spark`` the builder must run first to learn the
-    application id (the legacy path, semantics unchanged).
+    certified ANN queries each rebuilt the same exact-top-k baseline).
+    Entries survive :func:`release_shared` — reuse across queries is the
+    point — so this is ONLY for frames small enough to pin for the
+    session. The key is namespaced by ``spark``'s application id, so a
+    frame from a stopped session is never served to a new one;
+    :func:`release_keyed` clears explicitly. The hit check runs BEFORE
+    ``builder()``, so a warm hit skips plan construction entirely
+    (0.3–0.6 s of py4j expression-building).
 
     ``eager=False`` registers the persist WITHOUT the eager count: the
     caller's next action populates the cache as a side effect, saving one
     blocking driver job per cold build. ONLY for frames whose first
     consumer references them exactly once (the ANN certificate's exact
     baseline feeds one join) — a lazily-persisted frame first touched by
-    two concurrent stages computes its lineage in both (the fan-out
-    pathology materialize()'s eagerness exists to prevent). Later
-    consumers via the same key read the by-then-populated cache."""
-    if spark is not None:
-        full_key = (spark.sparkContext.applicationId, key)
-        hit = _KEYED_SHARED.get(full_key)
-        if hit is not None:
-            return hit
-    df = builder()
-    full_key = (df.sparkSession.sparkContext.applicationId, key)
+    two concurrent stages computes its lineage in both. Later consumers
+    via the same key read the by-then-populated cache."""
+    full_key = (spark.sparkContext.applicationId, key)
     hit = _KEYED_SHARED.get(full_key)
     if hit is not None:
         return hit
@@ -244,7 +100,7 @@ def cache_shared_by_key(key, builder, spark=None, eager=True) -> DataFrame:
     # sessions (nothing in this repo does).
     for stale in [k for k in _KEYED_SHARED if k[0] != full_key[0]]:
         _KEYED_SHARED.pop(stale, None)
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    cached = builder().persist(StorageLevel.MEMORY_AND_DISK)
     if eager:
         cached.count()
     _KEYED_SHARED[full_key] = cached
@@ -265,12 +121,12 @@ def release_keyed() -> int:
 
 
 def release_shared() -> int:
-    """Unpersist every frame registered by cache_shared/materialize since
-    the last release. Callers that hold a RETURNED plan referencing a
-    shared cache (e.g. bloom_semi_join's key set) should execute the plan
-    before releasing — after release the plan still computes correctly,
-    it just recomputes the intermediate from lineage. Returns the number
-    of frames released."""
+    """Unpersist every frame registered by cache_shared since the last
+    release. Callers that hold a RETURNED plan referencing a shared cache
+    (e.g. bloom_semi_join's key set) should execute the plan before
+    releasing — after release the plan still computes correctly, it just
+    recomputes the intermediate from lineage. Returns the number of
+    frames released."""
     n = 0
     while _SHARED_CACHES:
         try:

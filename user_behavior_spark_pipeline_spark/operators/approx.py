@@ -160,13 +160,13 @@ def heavy_hitters_certified(
     full-vocabulary shuffle."""
     if phi <= 1.0 / (k + 1):
         raise ValueError(f"recall guarantee needs phi > 1/(k+1): {phi=} {k=}")
-    from ..materialize import materialize
-
     grams = documents.select(F.explode(bigrams_col()).alias("gram"))
     # small post-agg table feeding three consumers (scalar n, threshold
     # filter, certify join) — materialize so the corpus explode runs once
-    exact = materialize(
-        grams.groupBy("gram").agg(F.count(F.lit(1)).alias("exact_count"))
+    exact = (
+        grams.groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("exact_count"))
+        .localCheckpoint()
     )
     n = exact.agg(F.sum("exact_count").alias("n")).scalar()
     cand = heavy_hitter_candidates(grams, "gram", k)

@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..materialize import materialize
 from pyspark.sql.window import Window
 
 
@@ -103,7 +102,7 @@ def contamination_report(
     # hits feeds BOTH rollups below; pin it so the train-side shingle
     # pipeline + membership join run once (hits is small by construction:
     # only train shingles colliding with the eval set survive)
-    hits = materialize(tr.join(F.broadcast(ev), "shingle").distinct())
+    hits = tr.join(F.broadcast(ev), "shingle").distinct().localCheckpoint()
     per_pair = hits.groupBy("eval_doc_id", "train_doc_id").agg(
         F.count(F.lit(1)).alias("shared")
     )

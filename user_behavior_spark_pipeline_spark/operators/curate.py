@@ -68,7 +68,7 @@ def curate_corpus(
     # SCALE.md durability caveat).
     from ..materialize import cache_shared
 
-    survivors = cache_shared(
+    survivors, _ = cache_shared(
         quality_docs.groupBy("text")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id", "text")

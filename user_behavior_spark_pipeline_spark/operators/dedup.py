@@ -30,12 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..materialize import (
-    cache_shared,
-    cache_shared_counted,
-    materialize,
-    materialize_lazy,
-)
+from ..materialize import cache_shared
 
 NUM_HASHES = 64
 NUM_BANDS = 32  # 2 rows per band
@@ -226,12 +221,6 @@ def exact_duplicates_hashed(
     return singles.unionByName(dup_exact)
 
 
-def dedup_keep_first(documents: DataFrame, key: str = "text") -> DataFrame:
-    """dropDuplicates API surface (OP-X-DEDUP) — keeps an arbitrary row per
-    key; use exact_duplicates for a deterministic representative."""
-    return documents.dropDuplicates([key])
-
-
 def shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document, as 64-bit hashes:
     (doc_id, shingle long).
@@ -365,13 +354,13 @@ def ngram_jaccard_pairs(
     capped shingle is involved, and the boilerplate-only pair explosion
     is gone."""
     # the shingle set feeds three plan branches (sizes + both join sides);
-    # eager materialize (materialize.py seam) builds it ONCE — a lazy persist doesn't
+    # an eager localCheckpoint builds it ONCE — a lazy persist doesn't
     # help here because the branches' stages run concurrently and each
     # computes the unpopulated cache from scratch
     sh = shingles(documents, n)
     if max_shingle_df is not None:
         sh = cap_shingle_df(sh, max_shingle_df)
-    sh = materialize(sh)
+    sh = sh.localCheckpoint()
     return _pair_jaccard(sh).filter(
         F.col("jaccard_x1e6") >= int(threshold * 1_000_000)
     )
@@ -472,8 +461,8 @@ def dedup_report(
       verbatim run (>= substr_n tokens, either side of the pair).
 
     One shingle table feeds BOTH the Jaccard and containment signals
-    (materialized once via the seam); the exact group is one
-    text-groupBy; coverage explodes only run intervals. Every signal is
+    (checkpointed once); the exact group is one text-groupBy; coverage
+    explodes only run intervals. Every signal is
     the same computation its standalone operator runs — this is a join,
     not a re-derivation, so the standalone oracles transfer.
 
@@ -513,7 +502,7 @@ def dedup_report(
             share_key=share_key,
         )
         if share_key is None:
-            r = materialize(r)
+            r = r.localCheckpoint()
         return r
 
     from concurrent.futures import ThreadPoolExecutor
@@ -524,7 +513,7 @@ def dedup_report(
         sh = shingles(documents, n)
         if max_shingle_df is not None:
             sh = cap_shingle_df(sh, max_shingle_df)
-        sh = materialize(sh)
+        sh = sh.localCheckpoint()
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
         a = sh.select(F.col("doc_id").alias("doc_id_1"), "shingle")
         b = sh.select(F.col("doc_id").alias("doc_id_2"), "shingle")
@@ -545,10 +534,12 @@ def dedup_report(
         # action, which references overlap exactly once through jpairs)
         # populates it, and the final plan's `contained` branch then
         # reads the populated checkpoint. One blocking driver dispatch
-        # fewer per report (materialize_lazy contract; the concurrent
+        # fewer per report (strictly sequential consumer; the concurrent
         # runs chain never touches overlap).
-        overlap = materialize_lazy(
-            shared.join(s1, "doc_id_1").join(s2, "doc_id_2")
+        overlap = (
+            shared.join(s1, "doc_id_1")
+            .join(s2, "doc_id_2")
+            .localCheckpoint(eager=False)
         )
         jpairs = overlap.select(
             "doc_id_1",
@@ -682,7 +673,7 @@ def shingle_containment_pairs(
     sh = shingles(documents, n)
     if max_shingle_df is not None:
         sh = cap_shingle_df(sh, max_shingle_df)
-    sh = materialize(sh)
+    sh = sh.localCheckpoint()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_id_1"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_id_2"), "shingle")
@@ -956,7 +947,7 @@ def incremental_substring_verdict(
             )
         )
 
-    new_a = materialize(_anchors(new_docs, "n_id", "n_pos"))
+    new_a = _anchors(new_docs, "n_id", "n_pos").localCheckpoint()
     new_hashes = new_a.select(F.xxhash64("anchor").alias("_h")).distinct()
     # no broadcast hint: the hash set is DELTA-cardinality (usually tiny,
     # but data-dependent) — AQE broadcasts it while it fits and falls back
@@ -969,7 +960,7 @@ def incremental_substring_verdict(
     if max_anchor_df is not None:
         # two consumers (df job + anti join) — materialize the delta-pruned
         # corpus anchors once instead of re-running the semi join per branch
-        corp_a = materialize(corp_a)
+        corp_a = corp_a.localCheckpoint()
         over_cap = (
             corp_a.select("anchor", "c_id")
             .distinct()
@@ -987,13 +978,14 @@ def incremental_substring_verdict(
     )
     w = Window.partitionBy("n_id", "c_id", "_diag").orderBy("n_pos")
     # runs feeds best AND covered — materialize once (fan-out rule)
-    runs = materialize(
+    runs = (
         matches.withColumn("_grp", F.col("n_pos") - F.row_number().over(w))
         .groupBy("n_id", "c_id", "_diag", "_grp")
         .agg(
             F.min("n_pos").alias("start_n"),
             (F.count(F.lit(1)) + F.lit(n - 1)).cast("long").alias("run_len"),
         )
+        .localCheckpoint()
     )
     best = runs.groupBy("n_id").agg(
         F.max("run_len").alias("max_run_tokens"),
@@ -1115,18 +1107,6 @@ def strip_duplicated_substrings(
     )
 
 
-def minhash_signatures(documents: DataFrame, n: int = 3) -> DataFrame:
-    """64 minhashes per doc in one aggregation pass: min(xxhash64(i ++ s))."""
-    sh = shingles(documents, n)
-    # generated-SQL aggregates: one gateway round-trip per column instead
-    # of four (lit/col/xxhash64/min) — identical Catalyst tree
-    aggs = [
-        F.expr(f"min(xxhash64({i}, shingle))").alias(f"h{i}")
-        for i in range(NUM_HASHES)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_lsh_pairs(
     documents: DataFrame,
     n: int = 3,
@@ -1146,12 +1126,12 @@ def minhash_lsh_pairs(
     balloons candidates."""
     rows_per_band = NUM_HASHES // NUM_BANDS
     # the shingle set feeds BOTH the signature pass and the exact-Jaccard
-    # verify pass — eager materialize (seam) builds it once (a lazy
+    # verify pass — an eager localCheckpoint builds it once (a lazy
     # persist is computed N× by the N concurrent downstream stages)
     sh = shingles(documents, n)
     if max_shingle_df is not None:
         sh = cap_shingle_df(sh, max_shingle_df)
-    sh = materialize(sh)
+    sh = sh.localCheckpoint()
     # generated-SQL aggregates and band structs: one gateway round-trip
     # per column / one for the whole band array instead of hundreds of
     # per-op Column calls — identical Catalyst trees
@@ -1179,7 +1159,7 @@ def minhash_lsh_pairs(
             F.expr(f"explode(array({band_structs}))").alias("bb"),
         )
         .select("doc_id", "bb.band", "bb.bucket")
-        .transform(materialize)
+        .localCheckpoint()
     )
     left = bands.select(F.col("doc_id").alias("doc_id_1"), "band", "bucket")
     right = bands.select(F.col("doc_id").alias("doc_id_2"), "band", "bucket")
@@ -1330,7 +1310,7 @@ def embedding_near_dup_lsh(
         # materialize the (possibly derived) embeddings ONCE: the count
         # here and the _prep pass below would otherwise each execute the
         # full upstream pipeline
-        embeddings, n_emb = cache_shared_counted(
+        embeddings, n_emb = cache_shared(
             embeddings.select("vec_id", "embedding")
         )
         bits_per_table, auto_tables = lsh_auto_knobs(n_emb)
@@ -1369,7 +1349,7 @@ def embedding_near_dup_lsh(
                 }
             )
 
-    prepped = cache_shared(
+    prepped, _ = cache_shared(
         embeddings.select("vec_id", "embedding")
         .mapInPandas(_prep, "vec_id long, ne array<double>, sig_arr array<long>")
     )
@@ -1509,7 +1489,7 @@ def simhash_near_pairs(
         "doc_id",
         "simhash",
         F.expr(f"explode(array({band_structs}))").alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.bucket").transform(materialize)
+    ).select("doc_id", "simhash", "bb.band", "bb.bucket").localCheckpoint()
     left = bands.select(
         F.col("doc_id").alias("doc_id_1"), F.col("simhash").alias("sig1"), "band", "bucket"
     )
@@ -1556,9 +1536,9 @@ def dedup_components(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
     Correctness invariant: a label is always the id of a node in the same
     component, and both steps are monotone non-increasing, so the fixpoint
     is the component min — the union-find property test stays the oracle.
-    Converged when no label changes. Label state is checkpointed via
-    materialize (seam) each round to keep lineage flat — the standard
-    large-graph pattern short of bringing in GraphFrames."""
+    Converged when no label changes. Label state is localCheckpointed
+    each round to keep lineage flat — the standard large-graph pattern
+    short of bringing in GraphFrames."""
     global _LAST_COMPONENT_ROUNDS
     # Both edge orientations come from ONE explode over the pair rows —
     # not a two-branch union. The union form referenced the (possibly
@@ -1583,7 +1563,7 @@ def dedup_components(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
             )
         )
         .select("e.src", "e.dst")
-        .transform(materialize)
+        .localCheckpoint()
     )
     labels = (
         edges.select(F.col("src").alias("doc_id"))
@@ -1622,14 +1602,13 @@ def dedup_components(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
                 F.coalesce(F.col("p_comp"), F.col("component")).alias("component"),
                 "prev",
             )
-            # iterative=True: round N's plan references round N-1's —
-            # persist mode must truncate lineage here or analysis cost
-            # grows exponentially with rounds (materialize.py docstring).
-            # LAZY: the convergence count right below is the round's one
-            # next action, so it materializes the checkpoint in the same
-            # job — one blocking dispatch per round instead of two
-            # (materialize_lazy contract: strictly sequential consumer)
-            .transform(lambda d: materialize_lazy(d, iterative=True))
+            # round N's plan references round N-1's — the checkpoint
+            # truncates lineage, or analysis cost grows exponentially
+            # with rounds. LAZY: the convergence count right below is
+            # the round's one next action, so it materializes the
+            # checkpoint in the same job — one blocking dispatch per
+            # round instead of two (strictly sequential consumer)
+            .localCheckpoint(eager=False)
         )
         # prev carried through the checkpoint so convergence is a cheap
         # filter on materialized data, not a second join+job — and the
@@ -1885,12 +1864,12 @@ def incremental_near_dup(
         # to BOTH sides so the Jaccard space stays consistent; the list
         # itself is tiny (only shingles in > max_df docs) → broadcast
         # anti-join on the delta side.
-        corpus_sh = materialize(corpus_sh)
+        corpus_sh = corpus_sh.localCheckpoint()
         hot = _hot_values(corpus_sh, "shingle", max_shingle_df)
         corpus_sh = corpus_sh.join(F.broadcast(hot), "shingle", "left_anti")
         new_sh = new_sh.join(F.broadcast(hot), "shingle", "left_anti")
-    new_sh = materialize(new_sh)
-    corpus_sh = materialize(corpus_sh)
+    new_sh = new_sh.localCheckpoint()
+    corpus_sh = corpus_sh.localCheckpoint()
     new_sizes = new_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_new"))
     corpus_sizes = corpus_sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_corp")

@@ -53,7 +53,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..materialize import materialize
 from .roaring import (
     build_roaring_array,
     roaring_array_positions,
@@ -209,13 +208,11 @@ def delta_live_row_stats(
     # the downstream Python bitmap decode AND the ordinal explode onto
     # a single task (a real deployment's parquet scan brings its own
     # parallelism; the stand-in must too)
-    live = materialize(
-        live.repartition(
-            logs.sparkSession.sparkContext.defaultParallelism,
-            "table_id",
-            "path",
-        )
-    )
+    live = live.repartition(
+        logs.sparkSession.sparkContext.defaultParallelism,
+        "table_id",
+        "path",
+    ).localCheckpoint()
     with_dv = live.filter(F.col("dv_storage").isNotNull())
 
     # sidecar join: derive deletion_vector_<uuid>.bin names for 'u'
@@ -305,7 +302,7 @@ def delta_live_row_stats(
                 rows, columns=[f.name for f in DV_POS_SCHEMA.fields]
             )
 
-    decoded = materialize(joined.mapInPandas(_decode, DV_POS_SCHEMA))
+    decoded = joined.mapInPandas(_decode, DV_POS_SCHEMA).localCheckpoint()
     bad = decoded.filter(F.col("dv_error").isNotNull()).select(
         "table_id", "path"
     )

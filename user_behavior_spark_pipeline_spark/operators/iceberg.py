@@ -40,7 +40,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..materialize import materialize, materialize_lazy
 from .avro import avro_container_records, build_avro_container, zigzag_encode
 
 #: table metadata JSON — Iceberg's dashed key names, verbatim.
@@ -134,7 +133,7 @@ def _resolve_reachable_entries(
     list/entry(/content) pivots over its checkpoint, each a driver
     dispatch. All pivots group on the same (table_id, file_name,
     rec_idx) key, so ONE fused aggregation carries every consumer's
-    columns: the walk is materialize_lazy (single consumer — this
+    columns: the walk is a lazy localCheckpoint (single consumer — this
     pivot) and the fused pivot is the only eager job. Per-consumer
     group sets are preserved exactly — manifest-list groups and
     content-row groups entering the entry slice are dropped by the
@@ -171,8 +170,10 @@ def _resolve_reachable_entries(
     )
     # the Avro walk feeds exactly ONE consumer (the fused pivot), so it
     # is marked lazy and computed inside the pivot's materialize job
-    longs = materialize_lazy(
-        avro_rows_keyed(files).filter(F.col("parse_error").isNull())
+    longs = (
+        avro_rows_keyed(files)
+        .filter(F.col("parse_error").isNull())
+        .localCheckpoint(eager=False)
     )
 
     def mx(field: str, alias: str):
@@ -205,10 +206,11 @@ def _resolve_reachable_entries(
             ),
             F.max(F.col("field") == "id").alias("_has_id"),
         ]
-    fused = materialize(
+    fused = (
         longs.filter(F.col("field").isin(*all_fields))
         .groupBy("table_id", "file_name", "rec_idx")
         .agg(*aggs)
+        .localCheckpoint()
     )
     # manifest-list rows: which manifests the current snapshot reaches
     # (rows from entry/content files fall out via manifest IS NULL +

@@ -100,13 +100,6 @@ def customers_with_orders(customer: DataFrame, orders: DataFrame) -> DataFrame:
     ).select("c_custkey", "c_name", "c_mktsegment")
 
 
-def customers_without_orders(customer: DataFrame, orders: DataFrame) -> DataFrame:
-    """Left-anti join (NOT EXISTS)."""
-    return customer.join(
-        orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti"
-    ).select("c_custkey", "c_name", "c_mktsegment")
-
-
 def customers_without_big_orders(
     customer: DataFrame, orders: DataFrame, threshold: float = 450000.0
 ) -> DataFrame:
@@ -434,7 +427,6 @@ def dormant_rich_customers(
     derives country codes from c_phone substrings; this corpus has no
     phone column (TESTDATA.md), so c_nationkey ≤ max_nationkey stands in
     for the IN-list of codes."""
-    from ..materialize import materialize
 
     spark = customer.sparkSession
     # the pool feeds THREE consumers (the scalar COUNT, the scalar SUM,
@@ -442,14 +434,16 @@ def dormant_rich_customers(
     # customer fact is scanned three times (measured). Materialize the
     # filtered two-predicate projection once and let Catalyst plan the
     # scalar subqueries + anti join over the checkpoint.
-    pool = materialize(
-        customer.filter(F.col("c_nationkey") <= max_nationkey).select(
+    pool = (
+        customer.filter(F.col("c_nationkey") <= max_nationkey)
+        .select(
             "c_custkey",
             "c_nationkey",
             F.round(F.col("c_acctbal") * 100)
             .cast("long")
             .alias("bal_c"),
         )
+        .localCheckpoint()
     )
     return spark.sql(
         """
@@ -717,9 +711,9 @@ def bloom_semi_join(
     # partition from lineage, where a localCheckpoint block is simply
     # gone and fails the job (SCALE.md, durability caveat). The count()
     # below doubles as the eager materialization.
-    from ..materialize import cache_shared_counted
+    from ..materialize import cache_shared
 
-    kd, n_keys = cache_shared_counted(
+    kd, n_keys = cache_shared(
         keys.select(F.col(keys_key).cast(common).alias("_k")).distinct()
     )
     m_bits = min(max(64, n_keys * bits_per_key), max_bits)
@@ -791,7 +785,6 @@ def top_revenue_suppliers(
     max-revenue suppliers return (set semantics, same as canonical
     Q15's view form), ordered by s_suppkey. Revenue is integer-exact
     (money_e4 per row, decimal accumulation — sum_money above)."""
-    from ..materialize import materialize
     rev = money_e4(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")))
     revenue = (
         lineitem.filter(
@@ -801,7 +794,7 @@ def top_revenue_suppliers(
         .groupBy("l_suppkey")
         .agg(sum_money(rev).alias("total_revenue_x10000"))
     )
-    revenue = materialize(revenue)
+    revenue = revenue.localCheckpoint()
     top = revenue.agg(
         F.max("total_revenue_x10000").alias("max_revenue_x10000")
     )
@@ -1215,29 +1208,26 @@ def min_cost_supplier(
     lesson, ADVICE r07); part's LIKE + size filters prune before its
     join. All ties at the minimum are returned (no LIMIT), so the result
     set is deterministic without a tie-break."""
-    from ..materialize import materialize
 
     spark = part.sparkSession
     ps = derived_partsupp(lineitem)
-    scoped = materialize(
-        spark.sql(
-            """
-            SELECT ps_partkey, ps_suppkey, ps_supplycost_x100, s_name,
-                   n_name,
-                   CAST(ROUND(s_acctbal * 100) AS BIGINT) AS s_acctbal_x100
-            FROM {ps}
-            JOIN {supplier} ON s_suppkey = ps_suppkey
-            JOIN {nation} ON n_nationkey = s_nationkey
-            JOIN {region} ON r_regionkey = n_regionkey
-            WHERE r_name = :region_name
-            """,
-            args={"region_name": str(region_name)},
-            ps=ps,
-            supplier=supplier,
-            nation=nation,
-            region=region,
-        )
-    )
+    scoped = spark.sql(
+        """
+        SELECT ps_partkey, ps_suppkey, ps_supplycost_x100, s_name,
+               n_name,
+               CAST(ROUND(s_acctbal * 100) AS BIGINT) AS s_acctbal_x100
+        FROM {ps}
+        JOIN {supplier} ON s_suppkey = ps_suppkey
+        JOIN {nation} ON n_nationkey = s_nationkey
+        JOIN {region} ON r_regionkey = n_regionkey
+        WHERE r_name = :region_name
+        """,
+        args={"region_name": str(region_name)},
+        ps=ps,
+        supplier=supplier,
+        nation=nation,
+        region=region,
+    ).localCheckpoint()
     return spark.sql(
         """
         WITH mn AS (SELECT ps_partkey, MIN(ps_supplycost_x100) AS min_cost
@@ -1324,25 +1314,22 @@ def important_stock(
     lesson). The scoped view is MATERIALIZED: it feeds the aggregate and
     both scalars (Spark inlines CTEs). Values accumulate in
     decimal(38,0) (sum_money rationale)."""
-    from ..materialize import materialize
 
     spark = lineitem.sparkSession
     ps = derived_partsupp(lineitem)
-    scoped = materialize(
-        spark.sql(
-            """
-            SELECT ps_partkey, ps_supplycost_x100 * ps_availqty AS v
-            FROM {ps}
-            JOIN {supplier} ON s_suppkey = ps_suppkey
-            JOIN {nation} ON n_nationkey = s_nationkey
-            WHERE n_name IN (:nation_a, :nation_b)
-            """,
-            args={"nation_a": str(nation_a), "nation_b": str(nation_b)},
-            ps=ps,
-            supplier=supplier,
-            nation=nation,
-        )
-    )
+    scoped = spark.sql(
+        """
+        SELECT ps_partkey, ps_supplycost_x100 * ps_availqty AS v
+        FROM {ps}
+        JOIN {supplier} ON s_suppkey = ps_suppkey
+        JOIN {nation} ON n_nationkey = s_nationkey
+        WHERE n_name IN (:nation_a, :nation_b)
+        """,
+        args={"nation_a": str(nation_a), "nation_b": str(nation_b)},
+        ps=ps,
+        supplier=supplier,
+        nation=nation,
+    ).localCheckpoint()
     return spark.sql(
         """
         SELECT ps_partkey,

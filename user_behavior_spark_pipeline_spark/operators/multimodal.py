@@ -3578,14 +3578,13 @@ def image_near_dup_pairs(
     value) cannot OOM an executor or explode O(g²) pairs. The exclusion
     is REPORTED, not silent: image_hot_buckets over the same hashed
     frame lists every capped bucket with its size."""
-    from ..materialize import materialize
     from .dedup import _drop_hot_values
 
     # materialize the decode output BEFORE the guard: the hot-list agg
     # and the anti-join left side are two consumers, and two reads of an
     # unmaterialized Python stage would run the decode twice
     hashed = _drop_hot_values(
-        image_ahash(media).transform(materialize), "ahash", max_bucket
+        image_ahash(media).localCheckpoint(), "ahash", max_bucket
     )
     # ONE pass: a self-join on an unmaterialized Python stage would run
     # the whole decode+hash pipeline TWICE (measured 20x bloat — the
@@ -3703,13 +3702,10 @@ def image_near_dup_pairs_hamming(
     band it was (bounded recall at degenerate keys) — which is why the
     exclusion is REPORTED, not silent: image_hot_bands over the same
     hashed frame names every capped (band, bucket) with its size."""
-    from ..materialize import materialize
     from .dedup import _drop_hot_values
 
     bands = _drop_hot_values(
-        _ahash_band_keys(image_ahash(media), max_hamming).transform(
-            materialize
-        ),
+        _ahash_band_keys(image_ahash(media), max_hamming).localCheckpoint(),
         "band_key",
         max_bucket,
     )

@@ -52,8 +52,3 @@ def users_except(
     return _users_of(events, type_a, lo, hi).subtract(
         _users_of(events, type_b, lo, hi)
     )
-
-
-def users_union(events: DataFrame, type_a: str, type_b: str) -> DataFrame:
-    """UNION DISTINCT of the two user sets."""
-    return _users_of(events, type_a).union(_users_of(events, type_b)).distinct()

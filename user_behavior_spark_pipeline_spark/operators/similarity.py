@@ -29,7 +29,7 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..materialize import cache_shared, cache_shared_counted, materialize
+from ..materialize import cache_shared
 
 EMBED_DIM = 64
 
@@ -251,38 +251,6 @@ def pair_dot_udf():
         return pd.Series(np.einsum("ij,ij->i", a, b))
 
     return dots
-
-
-def multi_table_signature_udf(
-    num_tables: int, bits_per_table: int, dim: int = EMBED_DIM, seed_base: int = 1000
-):
-    """pandas_udf: embedding -> array of ``num_tables`` independent
-    sign-random-projection signatures.
-
-    The JVM-expression form (``lsh_signature_col`` per bit) builds a
-    ``tables × bits`` tree of aggregate lambdas — fine for one 8-bit
-    signature, but at 6 tables × 8 bits the expression tree dominates
-    planning and evaluation. Here all ``tables·bits`` plane dots run as ONE
-    numpy matmul per Arrow batch and the bits are packed with one shift-or
-    pass. Same planes (same seeds) as the expression form."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    planes = multi_table_planes(num_tables, bits_per_table, dim, seed_base)
-
-    # NB: no type hints — `from __future__ import annotations` stringifies
-    # them, which pandas_udf's signature inference rejects
-    @pandas_udf("array<long>")
-    def sigs(batch):
-        x = np.array(batch.tolist(), dtype=np.float64)
-        bits = (x @ planes.T > 0).astype(np.int64)  # (n, tables*bits)
-        bits = bits.reshape(len(x), num_tables, bits_per_table)
-        weights = 1 << np.arange(bits_per_table, dtype=np.int64)
-        packed = (bits * weights).sum(axis=2)  # (n, tables)
-        return pd.Series(list(packed))
-
-    return sigs
 
 
 def lsh_bucketed_topk(
@@ -643,7 +611,7 @@ def _pq_scored(
                 }
             )
 
-    encoded, n_corpus = cache_shared_counted(
+    encoded, n_corpus = cache_shared(
         embeddings.select("vec_id", "embedding")
         .mapInPandas(
             _encode, "neighbor_id long, codes array<long>, res array<double>"
@@ -839,7 +807,7 @@ def pq_rerank_topk(
                     + F.lit(float(margin_factor)) * F.col("rnorm")
                 ).alias("u"),
             )
-            .transform(materialize)
+            .localCheckpoint()
         )
     qs = embeddings.filter(F.col("vec_id") < num_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
@@ -871,7 +839,7 @@ def pq_rerank_topk(
                 )
             )
             .select("query_id", "neighbor_id", "cosine")
-            .transform(materialize)
+            .localCheckpoint()
         )
         topk = _rank_topk(rescored, k)
         if r >= r_cap:

@@ -92,7 +92,7 @@ def distribution_drift(events: DataFrame) -> DataFrame:
     # per_type feeds two branches (grand totals + the final projection);
     # pin it (it's #event-types rows, derived from the full scan) so the
     # events table is scanned twice total (bounds + per_type), not thrice
-    per_type = cache_shared(
+    per_type, _ = cache_shared(
         events.crossJoin(F.broadcast(bounds))
         .select("event_type", in_a.alias("in_a"))
         .groupBy("event_type")
@@ -197,7 +197,7 @@ def robust_outlier_counts(
     from ..materialize import cache_shared
 
     cents = F.round(F.col("value") * 100).cast("long")
-    typed = cache_shared(events.select("event_type", cents.alias("cents")))
+    typed, _ = cache_shared(events.select("event_type", cents.alias("cents")))
     med = typed.groupBy("event_type").agg(
         F.percentile(F.col("cents"), F.lit(0.5)).alias("med")
     )

@@ -181,7 +181,7 @@ def distinctive_tokens(
     # lost executor should recompute, not kill the job (SCALE.md).
     from ..materialize import cache_shared
 
-    tf = cache_shared(
+    tf, _ = cache_shared(
         tok.groupBy("lang", "token")
         .agg(F.count(F.lit(1)).alias("tf_lang"))
     )
@@ -295,7 +295,7 @@ def unigram_nll(documents: DataFrame) -> DataFrame:
     # the vocabulary feeds two branches (totals + per-token NLL); pin it
     # (persist-with-lineage, vocabulary-sized) so the corpus explode isn't
     # recomputed per branch — same rationale as distinctive_tokens
-    counts = cache_shared(
+    counts, _ = cache_shared(
         tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     )
     totals = counts.agg(

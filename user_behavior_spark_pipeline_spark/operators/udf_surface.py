@@ -78,24 +78,6 @@ def per_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def per_user_stats_native(events: DataFrame) -> DataFrame:
-    """The native twin of per_user_stats (what you'd actually deploy)."""
-    from pyspark.sql import functions as F
-
-    cents = F.round(F.col("value") * 100).cast("long")
-    total, n = F.sum(cents), F.count(F.lit(1))
-    # integer half-up, matching the pandas kernel bit-for-bit (`div` is
-    # Spark's integer division — no float round-off at any magnitude)
-    return events.groupBy("user_id").agg(
-        n.alias("n_events"),
-        total.alias("total_cents"),
-        F.expr(
-            "(2 * sum(cast(round(value * 100) as bigint)) + count(1)) div "
-            "(2 * count(1))"
-        ).alias("avg_value_x100"),
-    )
-
-
 def per_type_stats_grouped_agg(events: DataFrame) -> DataFrame:
     """Grouped-aggregate pandas_udf (the UDAF tier): a whole group's column
     arrives as one pandas Series, returns one scalar. Integer-exact math so

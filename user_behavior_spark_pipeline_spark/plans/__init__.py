@@ -22,10 +22,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df)
 
 
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in explain_str(df)
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters lists that appear in the formatted plan."""
     out = []

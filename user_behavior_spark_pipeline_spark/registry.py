@@ -9458,271 +9458,69 @@ def x_join_bloom_semi(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Registration-order rotation for driver coverage (VERDICT r1 #3).
-#
-# The correctness driver checks the FIRST 50 registered queries only, in
-# dict insertion order. Re-key the registries so queries with no
-# CORRECTNESS row yet come first, previously-checked-but-not-green entries
-# next (for re-verification after fixes), and verified-green entries last.
-# The status history is read from every CORRECTNESS_r*.json the driver has
-# dropped in the repo root, so this stays correct each round with no
-# manual list maintenance. Definition order above is unchanged — only dict
-# insertion order (what queries() iterates) rotates.
+# Registration-order rotation for check coverage (VERDICT r1 #3): the
+# correctness check reads the FIRST 50 queries() entries only, so the
+# registries are re-keyed by the CORRECTNESS_r*.json status history.
+# Definition order above is unchanged — only dict insertion order rotates.
 # ---------------------------------------------------------------------------
 
 
-_HISTORY_CACHE: dict[str, tuple[str, int]] | None = None
-
-
-def _correctness_history() -> dict[str, tuple[str, int]]:
-    """name -> ('green' | 'checked', round_index) where 'green' means
-    hash-verified in its LATEST check and 'checked' means the latest
-    recorded check was not hash-green (errored / hash-fail / rows-only).
-    round_index is the ordinal of the round file that produced the latest
-    status — the rotation uses it to send STALE greens (oldest re-verify
-    vintage) to the front of the green tail.
-
-    The LATEST round's verdict wins: an early version of this map was
-    once-green-always-green, which parked a query that regressed in a
-    later round (hash_match=false after an earlier true) in the green
-    tail — outside the driver's 50-slot window — instead of the
-    re-verification slots. Rounds are iterated in filename order and
-    each row OVERWRITES, so the newest recorded status is the one that
-    rotates. Cached per process: both _rotated calls (QUERIES and
-    ORACLES) must see the same ordering, and the glob+parse is
-    import-time I/O."""
-    global _HISTORY_CACHE
-    if _HISTORY_CACHE is not None:
-        return _HISTORY_CACHE
+def _correctness_rounds() -> list[dict]:
+    """Every parseable CORRECTNESS_r*.json in the repo root, in filename
+    (= round) order — the rotation's only import-time I/O."""
     import glob
     import json
     import os
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    status: dict[str, tuple[str, int]] = {}
-    for rnd, path in enumerate(
-        sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    ):
+    rounds = []
+    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         try:
             with open(path) as f:
                 data = json.load(f)
         except (OSError, ValueError):
             continue
-        if not isinstance(data, dict):
-            continue
+        if isinstance(data, dict):
+            rounds.append(data)
+    return rounds
+
+
+def _rotation_order(keys, history: list[dict], oracle_keys) -> list[str]:
+    """Order ``keys`` for the 50-slot check window from ``history`` (the
+    per-round CORRECTNESS maps, oldest first). Priority = what a check
+    slot can still LEARN: (1) oracle-backed never-checked (can turn
+    hash-green, no row yet), (2) oracle-backed re-checks (can turn
+    hash-green), (3) rows-only first-looks (gain their only possible
+    row), (4) rows-only re-checks (row already exists, nothing new),
+    (5) hash-green, STALEST vintage first — a green earned rounds ago
+    predates every later refactor, so its re-confirmation is worth more
+    than re-checking last round's. Rows-only entries queue behind every
+    hash-capable one (r02: a rows-only first-look pushed a fixable query
+    to slot 51). Registration order is kept within a tier; with no
+    history the order is registration order.
+
+    The LATEST round's status wins: a once-green-always-green reading
+    parked a query that regressed in a later round in the green tail,
+    outside the window, instead of the re-verification slots."""
+    status: dict[str, tuple[bool, int]] = {}
+    for rnd, data in enumerate(history):
         for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            status[name] = (
-                "green" if row.get("hash_match") is True else "checked",
-                rnd,
-            )
-    _HISTORY_CACHE = status
-    return status
+            if isinstance(row, dict):
+                status[name] = (row.get("hash_match") is True, rnd)
+
+    def rank(k: str) -> tuple[int, int]:
+        rows_only = 2 * (k not in oracle_keys)
+        if k not in status:
+            return (rows_only, 0)
+        green, rnd = status[k]
+        return (4, rnd) if green else (rows_only + 1, 0)
+
+    return sorted(keys, key=rank)
 
 
-# Queries whose implementation or oracle changed in the CURRENT round:
-# the rotation promotes these to the front of the green tail so the
-# driver's 50-slot window re-earns their green on the new code. Round 7:
-# the round's additions (TPC Q4/Q6/Q8/Q12/Q13/Q14/Q15/Q16/Q17/
-# Q19/Q21/Q22, semantic dedup, heavy hitters, reservoir sample) are
-# never-checked and rank ahead of every green automatically (with the
-# DQ suite, outlier monitor, streaming heavy hitters and the privacy
-# pair, incremental rollup maintenance and the streaming DQ monitor,
-# 22 never-checked);
-# the other r07 changes touch timing (bench scheduler) and pytest-only
-# surface (decode_real PNG) — EXCEPT x_sim_ivf: the ADVICE r07 #1/#2
-# hardening (deterministic centroid tie-break, zero-norm training
-# guard) is a no-op on the fixtures but does change the IVF
-# implementation, so its r06 green re-earns a slot. The window is then
-# 22 never-checked + x_sim_ivf + the 23 pre-r04 stale greens (VERDICT
-# r06 #2) + the 4 stalest r04-vintage greens — still draining the
-# entire pre-r04 tail in one round.
-# Everything else in the window comes from the stalest-vintage-first
-# green ordering (see _rotated).
-def _derive_touched(
-    seed_fns: frozenset[str],
-    sql_tokens: frozenset[str] = frozenset(),
-    extra: frozenset[str] = frozenset(),
-) -> frozenset[str]:
-    """DERIVE the touched-query set from the operator FUNCTIONS the round
-    changed (ADVICE r08 #1: hand-listing callers is exactly how
-    x_sim_ivf_exhaustive escaped the r08 re-check window after its
-    operator changed underneath it).
-
-    Mechanism: a static over-approximate caller closure — parse every
-    module in ``operators/``, and fixpoint-expand the touched set with any
-    top-level function whose source mentions a touched name (word-bounded
-    match, so ``normalized`` does not claim ``normalized_vectors``). Then
-    a registered query is touched iff its own source mentions a touched
-    function or one of ``sql_tokens`` (for oracle-constant edits), or it
-    is hand-listed in ``extra`` (for inline-oracle / predicate edits with
-    no operator seam). Over-approximation only costs re-check slots;
-    under-approximation is a silent certification hole."""
-    import ast
-    import os
-    import re
-
-    op_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "operators")
-    fn_src: dict[str, str] = {}
-    for fname in sorted(os.listdir(op_dir)):
-        if not fname.endswith(".py"):
-            continue
-        with open(os.path.join(op_dir, fname)) as f:
-            src = f.read()
-        for node in ast.parse(src).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                seg = ast.get_source_segment(src, node) or ""
-                # last definition wins on cross-module name collisions —
-                # acceptable for an over-approximation keyed on mentions
-                fn_src[node.name] = fn_src.get(node.name, "") + "\n" + seg
-
-    touched = set(seed_fns)
-    changed = True
-    while changed:
-        changed = False
-        pat = re.compile(r"\b(" + "|".join(map(re.escape, sorted(touched))) + r")\b")
-        for name, src in fn_src.items():
-            if name not in touched and pat.search(src):
-                touched.add(name)
-                changed = True
-    qpat = re.compile(
-        r"\b(" + "|".join(map(re.escape, sorted(touched | sql_tokens))) + r")\b"
-    )
-    import inspect
-
-    out = set(extra)
-    for qname, qfn in QUERIES.items():
-        try:
-            qsrc = inspect.getsource(qfn)
-        except OSError:
-            qsrc = ""
-        if qpat.search(qsrc):
-            out.add(qname)
-    return frozenset(out)
-
-
-_TOUCHED_THIS_ROUND = _derive_touched(
-    # r15 changed operator functions: the ADVICE r14 four (merges.txt
-    # line-0-only header skip, Avro union FULLNAME exact match, the
-    # usecmap comment/string-context anchor, the deterministic staged
-    # fixture trees) and the new trainer-handoff writer module
-    seed_fns=frozenset(
-        {
-            "load_gpt2_tokenizer",
-            "gen_scaled_tokenizer",
-            "_resolve_type",
-            "_embedded_cmap_mode",
-            "_strip_ps_comments_and_strings",
-            "write_packed_shards",
-            "packed_sample_stats",
-            "h264_nal_table",
-            "synth_h264_media",
-            "h264_nal_rows",
-            "flac_audio_stats",
-            "synth_flac_media",
-            "flac_decode",
-            "temperature_mixture",
-            "epoch_shuffle",
-            "_tar_shard_bytes",
-            "_npz_shard_bytes",
-        }
-    ),
-    sql_tokens=frozenset(),
-    # every query reading a _stage_lake_frames tree (the staging layer
-    # switched to deterministic on-disk keys — registry-side change)
-    extra=frozenset(
-        {
-            "x_trainer_shards_tar",
-            "x_trainer_shards_npz",
-            "x_delta_checkpoint",
-            "x_delta_deletion_vectors",
-            "x_iceberg_live_files",
-            "x_iceberg_live_rows",
-            "x_webdataset_members",
-            "x_webdataset_samples",
-            "x_stream_webdataset",
-            "x_multimodal_tiff",
-            "x_pdf_text",
-            "x_pdf_modern",
-            "x_warc_records",
-            "x_warc_text",
-            "x_warc_http",
-            "x_warc_digest",
-            "x_curate_crawl",
-            "x_stream_warc",
-        }
-    ),
-)
-
-
-def _rotated(keys):
-    status = _correctness_history()
-    never_checked = [k for k in keys if k not in status]
-    # Priority = what a check slot can still LEARN: (1) oracle-backed
-    # never-checked (can turn hash-green, no row yet), (2) oracle-backed
-    # re-checks (can turn hash-green), (3) rows-only first-looks (gain
-    # their only possible row), (4) rows-only re-checks (row already
-    # exists, nothing new), (5) green. Rows-only entries queue behind
-    # every hash-capable one — r02: a rows-only first-look pushed the
-    # fixable x_multimodal_decode_q to slot 51; r03 audit: three
-    # rows-only RE-checks were holding slots while two rows-only
-    # first-looks sat outside the window.
-    never_oracle = [k for k in never_checked if k in ORACLES]
-    never_rows_only = [k for k in never_checked if k not in ORACLES]
-    checked = [k for k in keys if status.get(k, (None, 0))[0] == "checked"]
-    checked_oracle = [k for k in checked if k in ORACLES]
-    checked_rows_only = [k for k in checked if k not in ORACLES]
-    green = [k for k in keys if status.get(k, (None, 0))[0] == "green"]
-    # Within the green tail (r14 refinement): the ANCIENT cohort — all
-    # greens at the single OLDEST outstanding vintage — goes first, so
-    # a standing drain criterion ("nothing older than rN", VERDICT r11
-    # #/r13 #4) cannot be starved by a touched-heavy round; the
-    # builder's own two-scale sweep certifies touched queries locally
-    # the round they change, so deferring a RECENT-vintage touched
-    # green one round loses less than leaving a 6-round-stale green
-    # unconfirmed another round.
-    oldest = min((status[k][1] for k in green), default=None)
-    ancient = [k for k in green if status[k][1] == oldest]
-    ancient_set = set(ancient)
-    # Then queries whose IMPLEMENTATION or ORACLE changed this round —
-    # their historical green predates the change, so a re-check slot
-    # re-earns it; STALEST vintage first, so any window overflow
-    # defers the most recently certified. Update per round.
-    touched = sorted(
-        (
-            k
-            for k in green
-            if k in _TOUCHED_THIS_ROUND and k not in ancient_set
-        ),
-        key=lambda k: status[k][1],
-    )
-    # Remaining untouched greens: STALEST vintage first (VERDICT r05
-    # #5) — a green earned in r02 predates the materialization seam,
-    # shared caches and every later refactor, so its driver
-    # re-confirmation is worth more than re-checking last round's;
-    # stable on registration order within a vintage.
-    untouched = sorted(
-        (
-            k
-            for k in green
-            if k not in _TOUCHED_THIS_ROUND and k not in ancient_set
-        ),
-        key=lambda k: status[k][1],
-    )
-    return (
-        never_oracle
-        + checked_oracle
-        + never_rows_only
-        + checked_rows_only
-        + ancient
-        + touched
-        + untouched
-    )
-
-
-QUERIES = {k: QUERIES[k] for k in _rotated(QUERIES)}
-ORACLES = {k: ORACLES[k] for k in _rotated(ORACLES)}
+_HISTORY = _correctness_rounds()
+QUERIES = {k: QUERIES[k] for k in _rotation_order(QUERIES, _HISTORY, ORACLES)}
+ORACLES = {k: ORACLES[k] for k in _rotation_order(ORACLES, _HISTORY, ORACLES)}
 
 
 def prepare_staged(spark: SparkSession, sf_dir: str) -> None:
