@@ -42,14 +42,3 @@ def _release_shared_caches():
     )
 
     release_shared()
-
-
-# Environment watch (VERDICT r13 #8): the transformWithStateInPandas
-# WIRE test (test_streaming.py::
-# test_transform_with_state_matches_apply_in_pandas_with_state) gates
-# itself at RUNTIME on `google.protobuf` via
-# has_transform_with_state_support() — if the container ever gains
-# protobuf, the test un-skips by itself on the next full run; nothing
-# here needs flipping. Record its first green run in that round's
-# CHANGES file. The fold semantics stay certified protobuf-free
-# (test_transform_with_state_fold_semantics_without_protobuf).

@@ -36,7 +36,7 @@ event_st = st.dictionaries(st.sampled_from(FIELDS), value_st, max_size=len(FIELD
 def test_missing_fields_null_present_fields_roundtrip(spark, events):
     rows = [(json.dumps(e),) for e in events]
     raw = spark.createDataFrame(rows, "value string")
-    out = parse_events(raw, keep_raw=True).collect()
+    out = parse_events(raw).collect()
     assert len(out) == len(events)
     for row, event in zip(out, events):
         for f in FIELDS:
@@ -56,7 +56,7 @@ def test_malformed_json_yields_null_struct_not_crash(spark, garbage):
     validity filter would drop them) — never an exception."""
     rows = [(g,) for g in garbage]
     raw = spark.createDataFrame(rows, "value string")
-    out = parse_events(raw, keep_raw=True).collect()
+    out = parse_events(raw).collect()
     assert len(out) == len(garbage)
     for row, g in zip(out, garbage):
         try:

@@ -82,6 +82,46 @@ def test_checkpoint_restart_exactly_once(spark, records, tmp_path):
     assert final.distinct().count() == final.count()
 
 
+def test_default_trigger_stream_lands_late_file_once(spark, records, tmp_path):
+    """The continuously running shape (available_now=False: Spark's default
+    trigger, as the steady-state ingest benchmark runs it): the sink equals
+    batch validate_events over the same records, partitioned by event_type,
+    and a file dropped after the first commit lands exactly once."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    first = records.filter("offset % 2 = 0")
+
+    def _drop(df, name):
+        # write aside, then rename in: the source never lists a partial file
+        stage = str(tmp_path / ("stage_" + name))
+        df.coalesce(1).write.json(stage)
+        part = next(f for f in os.listdir(stage) if f.endswith(".json"))
+        os.rename(os.path.join(stage, part), os.path.join(src, f"{name}.json"))
+
+    _drop(first, "a")
+    q = write_validated_stream(
+        file_stream_source(spark, src), out, ckpt, available_now=False
+    )
+    try:
+        q.processAllAvailable()
+        n1 = spark.read.parquet(out).count()
+        _drop(records.filter("offset % 2 = 1"), "b")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    key = lambda df: sorted(
+        (r["raw_event"], r["event_type"], r["direction"]) for r in df.collect()
+    )
+    batch = validate_events(records)
+    assert n1 == validate_events(first).count() < batch.count()
+    assert key(spark.read.parquet(out)) == key(batch)
+    types = {r["event_type"] for r in batch.select("event_type").collect()}
+    assert {d for d in os.listdir(out) if d.startswith("event_type=")} == {
+        f"event_type={t}" for t in types
+    }
+
+
 def test_fanout_foreachbatch(spark, records, tmp_path):
     src = str(tmp_path / "src")
     _stage_json(records, src)
@@ -155,43 +195,6 @@ def test_stateful_totals_across_many_batches(spark, sf_dir, tmp_path):
     got = got.sort_values("user_id").reset_index(drop=True)
     want = want.sort_values("user_id").reset_index(drop=True)
     assert got.equals(want)
-
-
-def test_transform_with_state_matches_apply_in_pandas_with_state(
-    spark, sf_dir, tmp_path
-):
-    """Both arbitrary-state APIs (applyInPandasWithState and the Spark 4
-    transformWithStateInPandas) must produce identical end states."""
-    from user_behavior_spark_pipeline_spark.sources.tables import load_table
-    from user_behavior_spark_pipeline_spark.streaming.jobs import (
-        final_user_totals,
-        has_transform_with_state_support,
-        stateful_user_totals_stream,
-        transform_with_state_totals_stream,
-    )
-
-    if not has_transform_with_state_support():
-        pytest.skip("google.protobuf unavailable — transformWithState needs it")
-
-    events = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "events_src")
-    events.coalesce(4).write.mode("overwrite").parquet(src)
-
-    def _stream():
-        return (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-            .select("user_id", "value")
-        )
-
-    q1 = stateful_user_totals_stream(_stream(), query_name="apips_totals")
-    q1.awaitTermination()
-    q2 = transform_with_state_totals_stream(_stream(), query_name="tws_totals")
-    q2.awaitTermination()
-    a = final_user_totals(spark, "apips_totals").toPandas().sort_values("user_id")
-    b = final_user_totals(spark, "tws_totals").toPandas().sort_values("user_id")
-    assert a.reset_index(drop=True).equals(b.reset_index(drop=True))
 
 
 def test_left_outer_stream_stream_join_emits_null_after_watermark(
@@ -355,69 +358,6 @@ def test_late_event_beyond_watermark_is_dropped(spark, tmp_path):
     assert [r["n"] for r in final] == [2]
 
 
-def test_transform_with_state_fold_semantics_without_protobuf(spark, sf_dir):
-    """The transformWithStateInPandas operator's FOLD logic, verified
-    protobuf-free: drive TotalsProcessor directly with a fake ValueState
-    and per-user Arrow batches, and require its end state to equal the
-    batch GROUP BY — the same oracle the wire-level equivalence test
-    (skipped where protobuf is absent) asserts against
-    applyInPandasWithState. Only the state-server WIRE hop remains
-    environment-gated; the operator's semantics are not."""
-    import pandas as pd
-
-    from user_behavior_spark_pipeline_spark.sources.tables import load_table
-    from user_behavior_spark_pipeline_spark.streaming.jobs import (
-        _totals_processor_class,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, FakeValueState())
-
-    events = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "value")
-        .toPandas()
-    )
-    TotalsProcessor = _totals_processor_class()
-    results = {}
-    for uid, grp in events.groupby("user_id"):
-        proc = TotalsProcessor()
-        proc.init(FakeHandle())
-        # split into multiple batches to exercise state carry-over
-        batches = [grp.iloc[: len(grp) // 2], grp.iloc[len(grp) // 2 :]]
-        out = None
-        for b in [b for b in batches if len(b)]:
-            out = pd.concat(list(proc.handleInputRows((uid,), [b], None)))
-        proc.close()
-        results[uid] = (
-            int(out["n_events"].iloc[-1]),
-            int(out["total_cents"].iloc[-1]),
-        )
-
-    expected = {
-        uid: (len(grp), int((grp["value"] * 100).round().astype("int64").sum()))
-        for uid, grp in events.groupby("user_id")
-    }
-    assert results == expected
-
-
 def test_bucketed_stream_stream_join_equals_plain(spark, tmp_path):
     """The skew-immune (user, time_bucket) join must return EXACTLY the
     plain interval join's rows — including pairs that straddle a bucket
@@ -428,7 +368,8 @@ def test_bucketed_stream_stream_join_equals_plain(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from user_behavior_spark_pipeline_spark.streaming.jobs import (
-        stream_stream_join_bucketed_stream,
+        _interval_join_plain,
+        _memory_sink,
         stream_stream_join_stream,
     )
 
@@ -458,23 +399,19 @@ def test_bucketed_stream_stream_join_equals_plain(spark, tmp_path):
         )
 
     c, p = _streams()
-    with pytest.warns(UserWarning, match="skew_safe=False"):
-        stream_stream_join_stream(
-            c, p, query_name="ss_eq_plain", horizon="10 seconds", skew_safe=False
-        ).awaitTermination()
-    c, p = _streams()
-    stream_stream_join_bucketed_stream(
-        c, p, query_name="ss_eq_bucketed", horizon_seconds=10
+    _memory_sink(
+        _interval_join_plain(c, p, 10, "1 second", "inner"),
+        "ss_eq_plain",
+        "append",
     ).awaitTermination()
-    # round 6: the default entry point is the skew-safe path — same rows.
     c, p = _streams()
     stream_stream_join_stream(
-        c, p, query_name="ss_eq_default", horizon="10 seconds"
+        c, p, query_name="ss_eq_bucketed", horizon_seconds=10
     ).awaitTermination()
     # subdivided buckets (burst defense, S=4: width ceil(10/4)=3 s, 5-way
     # explode) must ALSO return exactly the plain join's rows
     c, p = _streams()
-    stream_stream_join_bucketed_stream(
+    stream_stream_join_stream(
         c, p, query_name="ss_eq_sub4", horizon_seconds=10, subdivisions=4
     ).awaitTermination()
     plain = sorted(
@@ -483,15 +420,11 @@ def test_bucketed_stream_stream_join_equals_plain(spark, tmp_path):
     bucketed = sorted(
         map(tuple, spark.table("ss_eq_bucketed").collect())
     )
-    default = sorted(
-        map(tuple, spark.table("ss_eq_default").collect())
-    )
     sub4 = sorted(
         map(tuple, spark.table("ss_eq_sub4").collect())
     )
     assert len(plain) > 400  # hot key produces multi-purchase matches
     assert bucketed == plain
-    assert default == plain
     assert sub4 == plain
 
 
@@ -505,7 +438,8 @@ def test_left_outer_bucketed_hot_key_nulls_exactly_once(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from user_behavior_spark_pipeline_spark.streaming.jobs import (
-        stream_stream_left_join_bucketed_stream,
+        _interval_join_plain,
+        parquet_sink,
         stream_stream_left_join_stream,
     )
 
@@ -554,18 +488,17 @@ def test_left_outer_bucketed_hot_key_nulls_exactly_once(spark, tmp_path):
             .filter(F.col("user_id") >= 0)
         )
 
-    bucketed = _run(
-        stream_stream_left_join_bucketed_stream, "bucketed", horizon_seconds=10
-    )
-    with pytest.warns(UserWarning, match="skew_safe=False"):
-        plain = _run(
-            stream_stream_left_join_stream,
-            "plain",
-            horizon="10 seconds",
-            skew_safe=False,
+    def _plain(c, p, out, ckpt):
+        return parquet_sink(
+            _interval_join_plain(c, p, 10, "1 second", "left_outer"), out, ckpt
         )
+
+    bucketed = _run(
+        stream_stream_left_join_stream, "bucketed", horizon_seconds=10
+    )
+    plain = _run(_plain, "plain")
     sub4 = _run(
-        stream_stream_left_join_bucketed_stream,
+        stream_stream_left_join_stream,
         "sub4",
         horizon_seconds=10,
         subdivisions=4,
@@ -718,8 +651,8 @@ def test_warc_ingest_stream_batch_equiv(spark, tmp_path):
         warc_records,
     )
     from user_behavior_spark_pipeline_spark.streaming.jobs import (
-        warc_archive_stream_source,
-        warc_ingest_stream,
+        landing_stream_source,
+        parquet_sink,
     )
 
     docs = spark.createDataFrame(
@@ -730,23 +663,25 @@ def test_warc_ingest_stream_batch_equiv(spark, tmp_path):
     archives.filter("archive_id < 6").repartition(2).write.mode(
         "append"
     ).parquet(src)
-    q = warc_ingest_stream(
-        warc_archive_stream_source(spark, src, max_files_per_trigger=1),
-        out,
-        ckpt,
-    )
-    q.awaitTermination()
+
+    def _ingest():
+        parquet_sink(
+            warc_records(
+                landing_stream_source(
+                    spark, src, "archive_id", max_files_per_trigger=1
+                )
+            ),
+            out,
+            ckpt,
+        ).awaitTermination()
+
+    _ingest()
     n1 = spark.read.parquet(out).count()
     # late-landing archives: only the delta is processed on restart
     archives.filter("archive_id >= 6").repartition(2).write.mode(
         "append"
     ).parquet(src)
-    q2 = warc_ingest_stream(
-        warc_archive_stream_source(spark, src, max_files_per_trigger=1),
-        out,
-        ckpt,
-    )
-    q2.awaitTermination()
+    _ingest()
 
     batch = warc_records(archives)
     key = lambda r: (r.archive_id, r.record_idx)
@@ -768,8 +703,8 @@ def test_avro_ingest_stream_batch_equiv(spark, tmp_path):
         synth_avro_media,
     )
     from user_behavior_spark_pipeline_spark.streaming.jobs import (
-        avro_ingest_stream,
-        avro_stream_source,
+        landing_stream_source,
+        parquet_sink,
     )
 
     docs = spark.createDataFrame(
@@ -780,22 +715,24 @@ def test_avro_ingest_stream_batch_equiv(spark, tmp_path):
     media.filter("media_id < 6").repartition(2).write.mode(
         "append"
     ).parquet(src)
-    q = avro_ingest_stream(
-        avro_stream_source(spark, src, max_files_per_trigger=1),
-        out,
-        ckpt,
-    )
-    q.awaitTermination()
+
+    def _ingest():
+        parquet_sink(
+            avro_records(
+                landing_stream_source(
+                    spark, src, "media_id", max_files_per_trigger=1
+                )
+            ),
+            out,
+            ckpt,
+        ).awaitTermination()
+
+    _ingest()
     n1 = spark.read.parquet(out).count()
     media.filter("media_id >= 6").repartition(2).write.mode(
         "append"
     ).parquet(src)
-    q2 = avro_ingest_stream(
-        avro_stream_source(spark, src, max_files_per_trigger=1),
-        out,
-        ckpt,
-    )
-    q2.awaitTermination()
+    _ingest()
 
     batch = avro_records(media)
     key = lambda r: (r.media_id, r.rec_idx, r.field)

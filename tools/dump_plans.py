@@ -3,8 +3,10 @@
 
 Usage: python tools/dump_plans.py OUTDIR [name ...]
 
-Used by the optimization rounds to capture before/after physical plans
-(plans/r15/<query>_{before,after}.txt). Plan capture is driver-side
+Capture the plans at two commits and diff the directories to show a
+change keeps (or moves) physical plans, e.g.
+``python tools/dump_plans.py /tmp/plans_after x_stream_stream_join``
+writes /tmp/plans_after/x_stream_stream_join.txt. Plan capture is driver-side
 only — the DataFrame is built but not executed (streaming fixtures that
 run during construction still run, as they do for any caller).
 """

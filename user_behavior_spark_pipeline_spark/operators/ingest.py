@@ -47,7 +47,6 @@ def parse_events(
     raw: DataFrame,
     schema: StructType = EVENT_SCHEMA,
     value_col: str = "value",
-    keep_raw: bool = True,
 ) -> DataFrame:
     """Kafka-shaped records -> flattened event rows.
 
@@ -59,9 +58,7 @@ def parse_events(
     """
     value_str = cast_to_string(value_col)
     parsed = F.from_json(value_str, schema).alias("json")
-    cols = []
-    if keep_raw:
-        cols.append(value_str.alias("raw_event"))
+    cols = [value_str.alias("raw_event")]
     if "timestamp" in raw.columns:
         cols.append(F.col("timestamp"))
     out = raw.select(*cols, parsed)

@@ -87,7 +87,6 @@ def range_join_banded(
     lo_col: str,
     hi_col: str,
     band_width: float,
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
     """Join each fact row to the interval rows with ``lo <= value < hi``,
     as a banded equi-join.
@@ -98,10 +97,8 @@ def range_join_banded(
     width / interval_len). Intervals may overlap — a fact row then matches
     each containing interval, exactly like the theta-join would.
 
-    ``broadcast_intervals=True`` (default) is right while the EXPLODED
-    interval table fits the broadcast budget; pass False for a large
-    interval side and the same banded equi-join shuffles both sides on
-    the band key instead — still an equi-join, never a nested loop."""
+    The EXPLODED interval table is broadcast, so it must fit the
+    broadcast budget (interval sides are dimension-sized: tiers, bands)."""
     banded_facts = facts.withColumn(
         "_band", F.floor(F.col(value_col) / band_width).cast("long")
     )
@@ -120,11 +117,11 @@ def range_join_banded(
     # up to executor-OOM / 'too long sequence' scale — before the filter
     # can reject its matches. Dropping them first makes the sequence
     # provably ascending (hi > lo ⇒ ceil(hi/w) − 1 ≥ floor(lo/w)).
-    banded_ivals = intervals.filter(F.col(hi_col) > F.col(lo_col)).withColumn(
-        "_band", F.explode(F.sequence(lo_band, hi_band))
+    banded_ivals = F.broadcast(
+        intervals.filter(F.col(hi_col) > F.col(lo_col)).withColumn(
+            "_band", F.explode(F.sequence(lo_band, hi_band))
+        )
     )
-    if broadcast_intervals:
-        banded_ivals = F.broadcast(banded_ivals)
     return (
         banded_facts.join(banded_ivals, "_band")
         .filter(

@@ -4396,10 +4396,8 @@ def x_stream_webdataset(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from .streaming.jobs import (
-        webdataset_ingest_stream,
-        webdataset_stream_source,
-    )
+    from .operators.webdataset import webdataset_members
+    from .streaming.jobs import landing_stream_source, parquet_sink
 
     # staged 4-file shard source (r14); sink + checkpoint stay FRESH
     # per run — reusing a checkpoint would replay nothing and read a
@@ -4407,8 +4405,12 @@ def x_stream_webdataset(spark, sf_dir):
     _shards, src = _stage_wds_shards(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="ubsp_wds_out_")
     ckpt = tempfile.mkdtemp(prefix="ubsp_wds_ckpt_")
-    q = webdataset_ingest_stream(
-        webdataset_stream_source(spark, src, max_files_per_trigger=2),
+    q = parquet_sink(
+        webdataset_members(
+            landing_stream_source(
+                spark, src, "shard_id", max_files_per_trigger=2
+            )
+        ),
         out,
         ckpt,
     )
@@ -4524,16 +4526,20 @@ def x_stream_jsonl(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from .operators.webdataset import synth_jsonl_shards
-    from .streaming.jobs import jsonl_ingest_stream, jsonl_stream_source
+    from .operators.webdataset import jsonl_shard_lines, synth_jsonl_shards
+    from .streaming.jobs import landing_stream_source, parquet_sink
 
     src_dir = _staged_media_dir(
         spark, sf_dir, "jsonl_stream_src", synth_jsonl_shards
     )
     out = tempfile.mkdtemp(prefix="ubsp_jsonl_out_")
     ckpt = tempfile.mkdtemp(prefix="ubsp_jsonl_ckpt_")
-    q = jsonl_ingest_stream(
-        jsonl_stream_source(spark, src_dir, max_files_per_trigger=2),
+    q = parquet_sink(
+        jsonl_shard_lines(
+            landing_stream_source(
+                spark, src_dir, "shard_id", max_files_per_trigger=2
+            )
+        ),
         out,
         ckpt,
     )
@@ -4982,16 +4988,20 @@ def x_stream_avro(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from .operators.avro import synth_avro_media
-    from .streaming.jobs import avro_ingest_stream, avro_stream_source
+    from .operators.avro import avro_records, synth_avro_media
+    from .streaming.jobs import landing_stream_source, parquet_sink
 
     src = _staged_media_dir(
         spark, sf_dir, "avro_stream_src", synth_avro_media
     )
     out = tempfile.mkdtemp(prefix="ubsp_avro_out_")
     ckpt = tempfile.mkdtemp(prefix="ubsp_avro_ckpt_")
-    q = avro_ingest_stream(
-        avro_stream_source(spark, src, max_files_per_trigger=2),
+    q = parquet_sink(
+        avro_records(
+            landing_stream_source(
+                spark, src, "media_id", max_files_per_trigger=2
+            )
+        ),
         out,
         ckpt,
     )
@@ -6372,18 +6382,20 @@ def x_stream_warc(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from .streaming.jobs import (
-        warc_archive_stream_source,
-        warc_ingest_stream,
-    )
+    from .operators.warc import warc_records
+    from .streaming.jobs import landing_stream_source, parquet_sink
 
     # staged 4-file corrupt-archive source (r14); sink + checkpoint
     # stay fresh per run so the stream really drains every time
     src = _stage_warc(spark, sf_dir, "corrupt")
     out = tempfile.mkdtemp(prefix="ubsp_warc_out_")
     ckpt = tempfile.mkdtemp(prefix="ubsp_warc_ckpt_")
-    q = warc_ingest_stream(
-        warc_archive_stream_source(spark, src, max_files_per_trigger=2),
+    q = parquet_sink(
+        warc_records(
+            landing_stream_source(
+                spark, src, "archive_id", max_files_per_trigger=2
+            )
+        ),
         out,
         ckpt,
     )
@@ -6451,16 +6463,22 @@ def x_stream_demux(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from .operators.demux import synth_corrupt_mp4_media
-    from .streaming.jobs import media_stream_source, mp4_ingest_stream
+    from .operators.demux import mp4_sample_ranges, synth_corrupt_mp4_media
+    from .streaming.jobs import landing_stream_source, parquet_sink
 
     src = _staged_media_dir(
         spark, sf_dir, "demux_stream_src", synth_corrupt_mp4_media
     )
     out = tempfile.mkdtemp(prefix="ubsp_demux_out_")
     ckpt = tempfile.mkdtemp(prefix="ubsp_demux_ckpt_")
-    q = mp4_ingest_stream(
-        media_stream_source(spark, src, max_files_per_trigger=2), out, ckpt
+    q = parquet_sink(
+        mp4_sample_ranges(
+            landing_stream_source(
+                spark, src, "media_id", max_files_per_trigger=2
+            )
+        ),
+        out,
+        ckpt,
     )
     q.awaitTermination()
     return (
@@ -7434,11 +7452,11 @@ def x_stream_stream_join(spark, sf_dir):
     range condition. Batch-equivalent oracle: the same interval join in
     DuckDB.
 
-    Round 6: the default entry point is now SKEW-SAFE — it delegates to
-    the bucketed join (x_stream_stream_join_bucketed documents the
-    mechanics), so the O(hot_rows²) plain form no longer ships on any
-    registered path. The plain join stays reachable via skew_safe=False
-    (warned) and is pinned output-identical by
+    Skew-safe: the join runs bucketed on (user_id, time_bucket) with the
+    purchase side exploded to 2 adjacent buckets
+    (jobs._interval_join_bucketed), so the O(hot_rows²) plain form ships
+    on no registered path; the bucketed join is pinned output-identical
+    to the plain reference by
     tests/test_streaming.py::test_bucketed_stream_stream_join_equals_plain."""
     from .streaming.jobs import stream_stream_join_stream
 
@@ -7453,47 +7471,7 @@ def x_stream_stream_join(spark, sf_dir):
     purchases = _stream().filter(F.col("event_type") == "purchase")
     name = "ubsp_stream_stream_join"
     with _state_partitions(spark, 8):
-        q = stream_stream_join_stream(clicks, purchases, name, horizon="1 hour")
-        q.awaitTermination()
-    return spark.table(name)
-
-
-@query(
-    "x_stream_stream_join_bucketed",
-    oracle=(
-        "SELECT c.event_id AS click_id, c.user_id, "
-        "       CAST(ROUND(p.value * 100) AS BIGINT) AS purchase_cents "
-        "FROM events c JOIN events p "
-        "ON c.user_id = p.user_id "
-        "AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 1 HOUR "
-        "WHERE c.event_type = 'click' AND p.event_type = 'purchase'"
-    ),
-)
-def x_stream_stream_join_bucketed(spark, sf_dir):
-    """The SKEW-IMMUNE stream-stream interval join (join key widened to
-    (user_id, time_bucket), purchase side exploded to 2 buckets — see
-    streaming/jobs.stream_stream_join_bucketed_stream): identical result
-    set to x_stream_stream_join by construction, verified against the
-    same batch interval-join oracle. This is the variant to deploy when
-    one user carries a disproportionate share of the stream (round-5
-    probe: the plain join is O(hot_rows²) per hot key AND single-task;
-    bucketed stays linear — numbers in SCALE.md)."""
-    from .streaming.jobs import stream_stream_join_bucketed_stream
-
-    events = _table(spark, sf_dir, "events")
-    src = _stage_events_parquet(spark, sf_dir)
-    from pyspark.sql import functions as F
-
-    def _stream():
-        return spark.readStream.schema(events.schema).parquet(src)
-
-    clicks = _stream().filter(F.col("event_type") == "click")
-    purchases = _stream().filter(F.col("event_type") == "purchase")
-    name = "ubsp_stream_stream_join_bucketed"
-    with _state_partitions(spark, 8):
-        q = stream_stream_join_bucketed_stream(
-            clicks, purchases, name, horizon_seconds=3600
-        )
+        q = stream_stream_join_stream(clicks, purchases, name)
         q.awaitTermination()
     return spark.table(name)
 
@@ -8107,9 +8085,12 @@ def x_stream_stream_left_join(spark, sf_dir):
     remain pinned by
     tests/test_streaming.py::test_left_outer_stream_stream_join_emits_null_after_watermark.
 
-    Round 6: the default entry point is now SKEW-SAFE (delegates to the
-    bucketed LEFT join — see x_stream_stream_left_join_bucketed); the
-    plain form stays reachable via skew_safe=False (warned)."""
+    Skew-safe like x_stream_stream_join: the LEFT join runs bucketed, and
+    outer-null exactly-once holds because the CLICK side is never
+    duplicated — an unmatched click has one state row, so the watermark
+    closure emits one null row (pigeonhole proof in
+    jobs._interval_join_bucketed). The hot-key outer fixture is pinned by
+    tests/test_streaming.py::test_left_outer_bucketed_hot_key_nulls_exactly_once."""
     import tempfile
 
     from pyspark.sql import functions as F
@@ -8130,55 +8111,6 @@ def x_stream_stream_left_join(spark, sf_dir):
             _stream().filter(F.col("event_type") == "purchase"),
             out,
             ckpt,
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).filter(F.col("user_id") >= 0)
-
-
-@query(
-    "x_stream_stream_left_join_bucketed",
-    oracle=(
-        "SELECT c.event_id AS click_id, c.user_id, "
-        "       CAST(ROUND(p.value * 100) AS BIGINT) AS purchase_cents "
-        "FROM events c LEFT JOIN events p "
-        "ON c.user_id = p.user_id AND p.event_type = 'purchase' "
-        "AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 1 HOUR "
-        "WHERE c.event_type = 'click'"
-    ),
-)
-def x_stream_stream_left_join_bucketed(spark, sf_dir):
-    """The SKEW-IMMUNE LEFT OUTER stream-stream interval join, called
-    explicitly (streaming/jobs.stream_stream_left_join_bucketed_stream):
-    join key widened to (user_id, time_bucket), purchase side exploded to
-    2 adjacent buckets. Outer-null exactly-once holds because the CLICK
-    side is never duplicated — an unmatched click has one state row, so
-    the watermark closure emits one null row; matched pairs meet in
-    exactly one bucket (pigeonhole proof in jobs._interval_join_bucketed).
-    Hash-green against the same batch LEFT-join oracle as
-    x_stream_stream_left_join via the sentinel-sealed source; the hot-key
-    outer fixture is pinned by
-    tests/test_streaming.py::test_left_outer_bucketed_hot_key_nulls_exactly_once."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from .streaming.jobs import stream_stream_left_join_bucketed_stream
-
-    events = _table(spark, sf_dir, "events")
-    src = _stage_events_parquet_sealed(spark, sf_dir)
-
-    def _stream():
-        return spark.readStream.schema(events.schema).parquet(src)
-
-    out = tempfile.mkdtemp(prefix="ubsp_sslojb_out_")
-    ckpt = tempfile.mkdtemp(prefix="ubsp_sslojb_ckpt_")
-    with _state_partitions(spark, 8):
-        q = stream_stream_left_join_bucketed_stream(
-            _stream().filter(F.col("event_type") == "click"),
-            _stream().filter(F.col("event_type") == "purchase"),
-            out,
-            ckpt,
-            horizon_seconds=3600,
         )
         q.awaitTermination()
     return spark.read.parquet(out).filter(F.col("user_id") >= 0)

@@ -22,20 +22,23 @@ At scale: the file sink's manifest commit gives exactly-once
 windowed aggs and dedup; maxFilesPerTrigger/maxOffsetsPerTrigger bound
 per-batch work.
 
-**Verification shapes vs production shapes.** Functions writing to a
-MEMORY sink in COMPLETE/UPDATE mode (windowed_counts_stream,
-session_counts_stream, the stateful-totals pair) are the bounded-fixture
-VERIFICATION form: with availableNow over a finite input, complete mode
-is what makes every window/group visible for the deterministic end-state
-check, and the memory sink is driver-resident by definition. They are
-not the unbounded-deployment form — in complete mode Spark never uses
-the watermark to evict aggregation state, and a memory sink grows with
-the result set. For a continuous deployment: append/update mode to a
-FILE sink (watermark eviction then applies — see write_validated_stream
-and dedup_stream for the production-shaped examples in this module), and
-give per-key state a TTL (applyInPandasWithState timeoutConf, or
-transformWithState TTL) sized to the key churn, as the stateful
-functions' docstrings detail.
+**Two terminal shapes.** Every job here ends in one of two sinks:
+
+- :func:`parquet_sink` — the PRODUCTION shape: checkpointed parquet file
+  sink, append mode, availableNow (or the default trigger for a
+  continuously running query). Append mode lets the watermark evict
+  aggregation and join state, and the checkpoint manifest makes the sink
+  exactly-once (validated events, dedup, the LEFT stream-stream join, the
+  binary-walker ingests).
+- :func:`_memory_sink` — the VERIFICATION shape: a driver-resident memory
+  table with availableNow. Over a bounded fixture, complete/update mode is
+  what makes every window or group visible for the deterministic
+  end-state check. It is not the unbounded-deployment form — in complete
+  mode Spark never uses the watermark to evict state, and a memory sink
+  grows with the result set. A continuous deployment writes append/update
+  mode through :func:`parquet_sink` and gives per-key state a timeout
+  (applyInPandasWithState timeoutConf) sized to the key churn, as the
+  stateful functions' docstrings detail.
 """
 
 from __future__ import annotations
@@ -62,19 +65,47 @@ def file_stream_source(
     return reader.json(source_dir)
 
 
-def write_validated_stream(
-    raw_stream: DataFrame,
+def landing_stream_source(
+    spark: SparkSession,
+    source_dir: str,
+    id_col: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Landing-directory source for the binary-container walkers: parquet
+    files of ``(<id_col> long, payload binary)`` rows — the drop-box shape
+    of a fetcher writing WARC archives (``archive_id``), MP4/Avro
+    containers (``media_id``) or tar/JSONL shards (``shard_id``).
+    maxFilesPerTrigger bounds per-batch work so a 100 TB backlog drains in
+    bounded-memory batches instead of one giant micro-batch.
+
+    The walkers (warc_records, mp4_sample_ranges, webdataset_members,
+    jsonl_shard_lines, avro_records) are stateless mapInPandas, so the
+    identical operator object serves batch and stream:
+    ``parquet_sink(walker(landing_stream_source(...)), out, ckpt)`` is the
+    streaming ingest, and the x_stream_* queries certify batch≡stream
+    against the batch quarantine oracles. Corruption quarantines in-stream
+    (parse_error rows flow to the same sink; one corrupt container never
+    kills the query)."""
+    reader = spark.readStream.schema(f"{id_col} long, payload binary")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(source_dir)
+
+
+def parquet_sink(
+    frame: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    partition_by: str | None = "event_type",
+    partition_by: str | None = None,
     available_now: bool = True,
-    processing_time: str | None = None,
 ):
-    """The canonical pipeline's sink (OP-SINK-PARQUET-STREAM): validated
-    events → checkpointed, partitioned parquet, exactly-once."""
-    valid = validate_events(raw_stream)
+    """The production terminal (OP-SINK-PARQUET-STREAM): checkpointed
+    parquet file sink in append mode — exactly-once through the
+    checkpoint manifest. ``available_now=False`` keeps Spark's default
+    trigger (the next micro-batch starts as soon as the previous one
+    ends) for a continuously running query."""
     writer = (
-        valid.writeStream.format("parquet")
+        frame.writeStream.format("parquet")
         .option("checkpointLocation", checkpoint_dir)
         .option("path", out_dir)
         .outputMode("append")
@@ -83,200 +114,36 @@ def write_validated_stream(
         writer = writer.partitionBy(partition_by)
     if available_now:
         writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
     return writer.start()
 
 
-def warc_archive_stream_source(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming WARC ingestion source (VERDICT r10 #6): a landing
-    directory of parquet files holding (archive_id, payload) rows — the
-    shape a crawl fetcher drops archives in. maxFilesPerTrigger bounds
-    per-batch work so a 100 TB backlog drains in bounded-memory batches
-    instead of one giant micro-batch."""
-    reader = spark.readStream.schema("archive_id long, payload binary")
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    return reader.parquet(source_dir)
-
-
-def warc_ingest_stream(
-    archive_stream: DataFrame, out_dir: str, checkpoint_dir: str
-):
-    """Stream WARC archives through the BATCH walker into a
-    checkpointed parquet sink: warc_records is a stateless mapInPandas,
-    so the identical operator object serves both batch and stream —
-    x_stream_warc certifies batch≡stream against the batch quarantine
-    oracle. Corruption quarantines in-stream (parse_error rows flow to
-    the same sink as records; one corrupt archive never kills the
-    query), and availableNow + the checkpoint manifest give
-    exactly-once sink semantics."""
-    from ..operators.warc import warc_records
-
+def _memory_sink(frame: DataFrame, query_name: str, output_mode: str):
+    """The verification terminal: availableNow into the driver-resident
+    memory table ``query_name`` (read back with ``spark.table``)."""
     return (
-        warc_records(archive_stream)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", out_dir)
-        .outputMode("append")
+        frame.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
 
 
-def media_stream_source(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming media-container source: a landing directory of parquet
-    files holding (media_id, payload) rows — the drop-box shape of a
-    fetcher writing MP4/MP3 containers. Same bounded-batch posture as
-    warc_archive_stream_source."""
-    reader = spark.readStream.schema("media_id long, payload binary")
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    return reader.parquet(source_dir)
-
-
-def mp4_ingest_stream(
-    media_stream: DataFrame, out_dir: str, checkpoint_dir: str
+def write_validated_stream(
+    raw_stream: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    partition_by: str | None = "event_type",
+    available_now: bool = True,
 ):
-    """Stream MP4 containers through the BATCH demux walker
-    (demux.mp4_sample_ranges — stateless mapInPandas, the identical
-    operator serves batch and stream; x_stream_demux certifies
-    batch≡stream against the batch quarantine oracle) into a
-    checkpointed parquet sink. Corrupt containers quarantine in-stream
-    as parse_error rows; availableNow + the checkpoint manifest give
-    exactly-once sink semantics."""
-    from ..operators.demux import mp4_sample_ranges
-
-    return (
-        mp4_sample_ranges(media_stream)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", out_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def webdataset_stream_source(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming WebDataset landing source: parquet files of
-    (shard_id, payload) tar shards — same bounded-batch posture as the
-    WARC and media sources."""
-    reader = spark.readStream.schema("shard_id long, payload binary")
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    return reader.parquet(source_dir)
-
-
-def webdataset_ingest_stream(
-    shard_stream: DataFrame, out_dir: str, checkpoint_dir: str
-):
-    """Stream tar shards through the BATCH member walker
-    (webdataset.webdataset_members — stateless mapInPandas; the
-    identical operator serves both modes, x_stream_webdataset
-    certifies batch≡stream) into a checkpointed parquet sink;
-    corruption quarantines in-stream."""
-    from ..operators.webdataset import webdataset_members
-
-    return (
-        webdataset_members(shard_stream)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", out_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def jsonl_stream_source(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming compressed-JSONL landing source: parquet files of
-    (shard_id, payload) .jsonl.{gz,zst} blobs — same bounded-batch
-    posture as the WARC/media/WebDataset/Avro sources."""
-    reader = spark.readStream.schema("shard_id long, payload binary")
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    return reader.parquet(source_dir)
-
-
-def jsonl_ingest_stream(
-    shard_stream: DataFrame, out_dir: str, checkpoint_dir: str
-):
-    """Stream compressed-JSONL shards through the BATCH line walker
-    (webdataset.jsonl_shard_lines — stateless mapInPandas; the
-    identical operator serves both modes, x_stream_jsonl certifies
-    batch≡stream) into a checkpointed parquet sink; corruption
-    quarantines in-stream."""
-    from ..operators.webdataset import jsonl_shard_lines
-
-    return (
-        jsonl_shard_lines(shard_stream)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", out_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def avro_stream_source(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming Avro-container landing source: parquet files of
-    (media_id, payload) container blobs — same bounded-batch posture
-    as the WARC/media/WebDataset sources."""
-    reader = spark.readStream.schema("media_id long, payload binary")
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    return reader.parquet(source_dir)
-
-
-def avro_ingest_stream(
-    container_stream: DataFrame, out_dir: str, checkpoint_dir: str
-):
-    """Stream Avro containers through the BATCH record walker
-    (avro.avro_records — stateless mapInPandas; the identical operator
-    serves both modes, x_stream_avro certifies batch≡stream) into a
-    checkpointed parquet sink; corruption quarantines in-stream."""
-    from ..operators.avro import avro_records
-
-    return (
-        avro_records(container_stream)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", out_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    """The canonical pipeline's sink: validated events → checkpointed,
+    partitioned parquet, exactly-once."""
+    return parquet_sink(
+        validate_events(raw_stream),
+        out_dir,
+        checkpoint_dir,
+        partition_by=partition_by,
+        available_now=available_now,
     )
 
 
@@ -308,13 +175,7 @@ def windowed_counts_stream(
             "num_events",
         )
     )
-    return (
-        counts.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _memory_sink(counts, query_name, "complete")
 
 
 def dedup_stream(
@@ -339,14 +200,7 @@ def dedup_stream(
         raw_stream.withWatermark("timestamp", watermark)
         .dropDuplicatesWithinWatermark(["offset"])
     )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", out_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return parquet_sink(deduped, out_dir, checkpoint_dir)
 
 
 def stateful_user_totals_stream(
@@ -413,97 +267,7 @@ def stateful_user_totals_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        totals.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def has_transform_with_state_support() -> bool:
-    """transformWithStateInPandas talks to the JVM state server over a
-    protobuf protocol; without google.protobuf the driver worker crashes at
-    init, so gate call sites on this check."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _totals_processor_class():
-    """The TotalsProcessor class, importable WITHOUT google.protobuf: the
-    StatefulProcessor ABC and the fold logic are plain Python — only the
-    state-server WIRE (inside a running transformWithStateInPandas query)
-    needs protobuf. Module-level so the fold semantics are unit-testable
-    against a fake ValueState in any environment
-    (tests/test_streaming.py::test_transform_with_state_fold_semantics);
-    the sandbox then gates only the wire hop, not the operator's logic."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._totals = handle.getValueState(
-                "totals", "n_events long, total_cents long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._totals.get() if self._totals.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += int((pdf["value"] * 100).round().astype("int64").sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_cents": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return TotalsProcessor
-
-
-def transform_with_state_totals_stream(
-    events_stream: DataFrame,
-    query_name: str,
-):
-    """The same per-user running totals on transformWithStateInPandas — the
-    Spark 4 arbitrary-state API (typed value/list/map state handles, timers)
-    that supersedes applyInPandasWithState. Kept alongside the older API so
-    both state surfaces stay exercised; results must be identical.
-
-    The RUNNING query needs ``google.protobuf`` (the Python worker talks
-    to the JVM state server over a protobuf protocol); call
-    :func:`has_transform_with_state_support` first — environments without
-    protobuf fall back to :func:`stateful_user_totals_stream`, and the
-    fold semantics themselves stay pytest-verified protobuf-free via
-    :func:`_totals_processor_class` (vendoring protobuf is impossible in
-    the sandbox: no network, no wheel on disk — documented in
-    COVERAGE.md)."""
-    TotalsProcessor = _totals_processor_class()
-
-    totals = events_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TotalsProcessor(),
-        outputStructType="user_id long, n_events long, total_cents long",
-        outputMode="Update",
-        timeMode="None",
-    )
-    return (
-        totals.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _memory_sink(totals, query_name, "update")
 
 
 def final_user_totals(spark: SparkSession, query_name: str) -> DataFrame:
@@ -544,13 +308,7 @@ def session_counts_stream(
             "num_events",
         )
     )
-    return (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _memory_sink(sessions, query_name, "complete")
 
 
 def stream_static_join_stream(
@@ -572,56 +330,17 @@ def stream_static_join_stream(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("total_cents"),
     )
-    return (
-        per_segment.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _memory_sink(per_segment, query_name, "complete")
 
 
-def _horizon_to_seconds(horizon: str) -> int:
-    """Parse an 'N unit' interval string ('1 hour', '30 minutes', '2 days')
-    to seconds, for delegating string-horizon call sites to the
-    seconds-keyed bucketed joins."""
-    parts = horizon.strip().lower().split()
-    if len(parts) != 2:
-        raise ValueError(f"horizon must be 'N unit', got {horizon!r}")
-    n = int(parts[0])
-    unit = parts[1].rstrip("s")
-    scale = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
-    if unit not in scale:
-        raise ValueError(f"unsupported horizon unit {parts[1]!r} in {horizon!r}")
-    return n * scale[unit]
-
-
-def _warn_skew_unsafe(fn_name: str, bucketed_name: str) -> None:
-    import warnings
-
-    warnings.warn(
-        f"{fn_name}(skew_safe=False) uses the PLAIN watermarked interval "
-        f"join: a hot key holding H buffered rows costs O(H^2) comparisons "
-        f"on a single task (round-5 probe: 160k hot rows never finished — "
-        f"SCALE.md). Prefer the default skew_safe=True / {bucketed_name}.",
-        stacklevel=3,
-    )
-
-
-def _interval_join_plain(
-    clicks_stream: DataFrame,
-    purchases_stream: DataFrame,
-    horizon: str,
-    watermark: str,
-    how: str,
-) -> DataFrame:
-    """Plain (un-bucketed) watermarked interval join — shared by the two
-    skew_safe=False escape hatches. O(H^2) per hot key; see
-    _interval_join_bucketed for the skew-immune form."""
+def _join_sides(
+    clicks_stream: DataFrame, purchases_stream: DataFrame, watermark: str
+) -> tuple[DataFrame, DataFrame]:
+    """The watermarked click and purchase projections both interval joins
+    share. NTZ→LTZ: watermarks require TIMESTAMP; the UTC session tz makes
+    the cast wall-clock identity (see session_counts_stream)."""
     c = clicks_stream.select(
         F.col("user_id").alias("c_user"),
-        # NTZ→LTZ: watermarks require TIMESTAMP; UTC session tz makes the
-        # cast wall-clock identity (see session_counts_stream).
         F.col("ts").cast("timestamp").alias("click_ts"),
         F.col("event_id").alias("click_id"),
     ).withWatermark("click_ts", watermark)
@@ -630,16 +349,43 @@ def _interval_join_plain(
         F.col("ts").cast("timestamp").alias("purchase_ts"),
         F.col("value").alias("purchase_value"),
     ).withWatermark("purchase_ts", watermark)
+    return c, p
+
+
+def _join_pairs(
+    c: DataFrame, p: DataFrame, key_cond, horizon_seconds: int, how: str
+) -> DataFrame:
+    """Join on ``key_cond`` plus the event-time range [click_ts, click_ts +
+    horizon) and project the (click_id, user_id, purchase_cents) output."""
     return c.join(
         p,
-        (F.col("c_user") == F.col("p_user"))
+        key_cond
         & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
+        & (
+            F.col("purchase_ts")
+            < F.col("click_ts") + F.expr(f"INTERVAL {horizon_seconds} SECONDS")
+        ),
         how,
     ).select(
         "click_id",
         F.col("c_user").alias("user_id"),
         F.round(F.col("purchase_value") * 100).cast("long").alias("purchase_cents"),
+    )
+
+
+def _interval_join_plain(
+    clicks_stream: DataFrame,
+    purchases_stream: DataFrame,
+    horizon_seconds: int,
+    watermark: str,
+    how: str,
+) -> DataFrame:
+    """Plain (un-bucketed) watermarked interval join keyed by ``user_id``
+    alone — the reference the bucketed join is tested equal to. O(H²)
+    per hot key; no entry point ships it (see _interval_join_bucketed)."""
+    c, p = _join_sides(clicks_stream, purchases_stream, watermark)
+    return _join_pairs(
+        c, p, F.col("c_user") == F.col("p_user"), horizon_seconds, how
     )
 
 
@@ -705,51 +451,28 @@ def _interval_join_bucketed(
     if s < 1:
         raise ValueError(f"subdivisions must be >= 1, got {subdivisions}")
     width = -(-b // s)  # ceil(B/S): S * width >= B keeps the pigeonhole
-    c = (
-        clicks_stream.select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").cast("timestamp").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", watermark)
-        .withColumn(
-            "c_bucket", F.floor(F.unix_timestamp("click_ts") / F.lit(width))
-        )
+    c, p = _join_sides(clicks_stream, purchases_stream, watermark)
+    c = c.withColumn(
+        "c_bucket", F.floor(F.unix_timestamp("click_ts") / F.lit(width))
     )
-    p = (
-        purchases_stream.select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").cast("timestamp").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-        .withColumn(
-            "p_bucket",
-            F.explode(
-                F.array(
-                    *[
-                        F.floor(F.unix_timestamp("purchase_ts") / F.lit(width))
-                        - j
-                        for j in range(s + 1)
-                    ]
-                )
-            ),
-        )
+    p = p.withColumn(
+        "p_bucket",
+        F.explode(
+            F.array(
+                *[
+                    F.floor(F.unix_timestamp("purchase_ts") / F.lit(width)) - j
+                    for j in range(s + 1)
+                ]
+            )
+        ),
     )
-    return c.join(
+    return _join_pairs(
+        c,
         p,
         (F.col("c_user") == F.col("p_user"))
-        & (F.col("c_bucket") == F.col("p_bucket"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            < F.col("click_ts") + F.expr(f"INTERVAL {b} SECONDS")
-        ),
+        & (F.col("c_bucket") == F.col("p_bucket")),
+        b,
         how,
-    ).select(
-        "click_id",
-        F.col("c_user").alias("user_id"),
-        F.round(F.col("purchase_value") * 100).cast("long").alias("purchase_cents"),
     )
 
 
@@ -757,9 +480,8 @@ def stream_stream_join_stream(
     clicks_stream: DataFrame,
     purchases_stream: DataFrame,
     query_name: str,
-    horizon: str = "1 hour",
+    horizon_seconds: int = 3600,
     watermark: str = "1 second",
-    skew_safe: bool = True,
     subdivisions: int = 1,
 ):
     """Watermarked stream-stream inner join — the fully-streaming operator
@@ -771,75 +493,8 @@ def stream_stream_join_stream(
     condition, so Spark can BOUND the buffered state on both sides (an
     unconstrained stream-stream join would buffer forever). State eviction
     follows the watermark — at 100 TB the horizon, not the corpus, sizes
-    the state store.
-
-    SKEW-SAFE BY DEFAULT (round 6): the shipped path is the bucketed join
-    (see _interval_join_bucketed / stream_stream_join_bucketed_stream) —
-    the round-5 probe proved the plain symmetric hash join is O(H²) per
-    hot key and single-task (SCALE.md). ``skew_safe=False`` restores the
-    plain join (one fewer explode; only safe when key skew is provably
-    bounded) and emits a loud warning."""
-    if skew_safe:
-        joined = _interval_join_bucketed(
-            clicks_stream,
-            purchases_stream,
-            _horizon_to_seconds(horizon),
-            watermark,
-            "inner",
-            subdivisions=subdivisions,
-        )
-    else:
-        _warn_skew_unsafe(
-            "stream_stream_join_stream", "stream_stream_join_bucketed_stream"
-        )
-        joined = _interval_join_plain(
-            clicks_stream, purchases_stream, horizon, watermark, "inner"
-        )
-    return (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_stream_join_bucketed_stream(
-    clicks_stream: DataFrame,
-    purchases_stream: DataFrame,
-    query_name: str,
-    horizon_seconds: int = 3600,
-    watermark: str = "1 second",
-    subdivisions: int = 1,
-):
-    """Skew-immune stream-stream interval join: same semantics as
-    :func:`stream_stream_join_stream`, with the join key widened from
-    ``user_id`` to ``(user_id, time_bucket)``.
-
-    Why: the plain join shuffles BOTH sides and the state store by
-    ``user_id``, so a hot key concentrates on one partition — and worse,
-    the symmetric hash join matches each arriving row against EVERY
-    buffered row of its key before the range filter, so a key holding H
-    rows costs O(H²) comparisons (round-5 probe: 160k hot rows of a
-    200k-row stream did not finish in 20 minutes where the uniform-key
-    run took seconds — see SCALE.md).
-
-    Fix: bucket event time at the horizon width B. A click joins only
-    purchases in [ts, ts + h), h <= B, so with the click keeping bucket
-    floor(ts/B) and each purchase exploded to buckets {floor(ts/B),
-    floor(ts/B) - 1}, every qualifying pair meets in EXACTLY one bucket
-    (the purchase's two copies live in distinct buckets, and for
-    u(c) <= u(p) <= u(c) + B the purchase bucket is the click's or the
-    next — the click's bucket is always among the two copies and only
-    one copy carries it). A hot user's state fans out across its time
-    buckets — per-key state is bounded by the key's rate x horizon, not
-    its lifetime volume, making per-arrival matching O(rows in one
-    horizon) and spreading partitions. Cost: the purchase side doubles —
-    the standard price of interval-bucketed joins (the batch range-join
-    bucketing in operators/temporal.py makes the same trade).
-
-    Watermark/state-eviction semantics are unchanged: the bucket is a
-    derived column; eviction still follows the event-time columns."""
+    the state store. Skew-safe: the join runs bucketed
+    (_interval_join_bucketed), never the O(H²)-per-hot-key plain form."""
     joined = _interval_join_bucketed(
         clicks_stream,
         purchases_stream,
@@ -848,65 +503,10 @@ def stream_stream_join_bucketed_stream(
         "inner",
         subdivisions=subdivisions,
     )
-    return (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _memory_sink(joined, query_name, "append")
 
 
 def stream_stream_left_join_stream(
-    clicks_stream: DataFrame,
-    purchases_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    horizon: str = "1 hour",
-    watermark: str = "1 second",
-    skew_safe: bool = True,
-    subdivisions: int = 1,
-):
-    """LEFT OUTER stream-stream join: like the inner form, but a click with
-    no purchase inside its horizon still emits (null purchase) — once the
-    watermark proves its window can no longer fill. The null row's emission
-    time is therefore governed by watermark progress, not arrival: the
-    outer result is eventually-complete, which is why the sink is an
-    append-mode file sink (replayable) rather than a complete-mode table.
-
-    SKEW-SAFE BY DEFAULT (round 6): ships the bucketed join (see
-    stream_stream_left_join_bucketed_stream; outer-null exactly-once holds
-    because the click side is never duplicated — proof in
-    _interval_join_bucketed). ``skew_safe=False`` restores the plain
-    O(H²)-per-hot-key join with a loud warning."""
-    if skew_safe:
-        joined = _interval_join_bucketed(
-            clicks_stream,
-            purchases_stream,
-            _horizon_to_seconds(horizon),
-            watermark,
-            "left_outer",
-            subdivisions=subdivisions,
-        )
-    else:
-        _warn_skew_unsafe(
-            "stream_stream_left_join_stream",
-            "stream_stream_left_join_bucketed_stream",
-        )
-        joined = _interval_join_plain(
-            clicks_stream, purchases_stream, horizon, watermark, "left_outer"
-        )
-    return (
-        joined.writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", out_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_stream_left_join_bucketed_stream(
     clicks_stream: DataFrame,
     purchases_stream: DataFrame,
     out_dir: str,
@@ -915,12 +515,14 @@ def stream_stream_left_join_bucketed_stream(
     watermark: str = "1 second",
     subdivisions: int = 1,
 ):
-    """Skew-immune LEFT OUTER stream-stream interval join: same output
-    multiset as :func:`stream_stream_left_join_stream` (which now delegates
-    here by default), with the join key widened to ``(user_id,
-    time_bucket)`` — see :func:`_interval_join_bucketed` for the
-    exactly-once pigeonhole argument and the outer-null proof (the click
-    side keeps a single bucket, so unmatched clicks emit one null row)."""
+    """LEFT OUTER stream-stream join: like the inner form, but a click with
+    no purchase inside its horizon still emits (null purchase) — once the
+    watermark proves its window can no longer fill. The null row's emission
+    time is therefore governed by watermark progress, not arrival: the
+    outer result is eventually-complete, which is why the sink is an
+    append-mode file sink (replayable) rather than a complete-mode table.
+    Bucketed like the inner form; outer-null exactly-once holds because
+    the click side is never duplicated (proof in _interval_join_bucketed)."""
     joined = _interval_join_bucketed(
         clicks_stream,
         purchases_stream,
@@ -929,14 +531,7 @@ def stream_stream_left_join_bucketed_stream(
         "left_outer",
         subdivisions=subdivisions,
     )
-    return (
-        joined.writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", out_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return parquet_sink(joined, out_dir, checkpoint_dir)
 
 
 def fanout_by_class_stream(
@@ -1082,13 +677,7 @@ def mg_heavy_hitters_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        sketched.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _memory_sink(sketched, query_name, "update")
 
 
 def final_heavy_hitter_snapshot(spark: SparkSession, query_name: str) -> DataFrame:
@@ -1132,13 +721,7 @@ def dq_monitor_stream(
     totals = events_stream.agg(
         *[_viol(name, cond) for name, cond in sorted(checks.items())]
     )
-    return (
-        totals.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _memory_sink(totals, query_name, "complete")
 
 
 def final_dq_totals(spark: SparkSession, query_name: str, names) -> DataFrame:
