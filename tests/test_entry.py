@@ -98,3 +98,32 @@ def test_rotation_order_is_a_pure_function_of_history():
     assert _rotation_order(keys, history, oracles) == ["a", "c", "d", "b", "e"]
     # rows-only entries queue behind hash-capable ones of the same status
     assert _rotation_order(["a", "f"], [], {"f"}) == ["f", "a"]
+
+
+def test_scratch_dirs_are_removed_at_exit(tmp_path):
+    """Stream sinks, checkpoints and staged sources live under one
+    per-process root that the registry removes at interpreter exit."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from user_behavior_spark_pipeline_spark.registry import _scratch_dir\n"
+        "a = _scratch_dir('ubsp_a_')\n"
+        "b = _scratch_dir('ubsp_b_')\n"
+        "assert a != b and os.path.dirname(a) == os.path.dirname(b)\n"
+        "assert os.path.basename(os.path.dirname(a)).startswith("
+        "f'ubsp_run_{os.getpid()}_')\n"
+        "open(os.path.join(a, 'part'), 'w').close()\n"
+        "print(len(os.listdir(os.environ['TMPDIR'])))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=repo)
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=repo,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "1"  # one root while the process runs
+    assert [p for p in os.listdir(tmp_path) if p.startswith("ubsp_")] == []

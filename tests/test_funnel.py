@@ -166,6 +166,29 @@ def test_funnel_counts_monotone(spark, sf_dir):
     assert out[1] > 0
 
 
+def test_funnel_counts_without_step1_events_is_all_zero(spark, sf_dir):
+    """No user enters the funnel: every step still comes back, with 0
+    users, and the step table is JVM literals (no Python RDD scan)."""
+    from pyspark.sql import functions as F
+
+    from user_behavior_spark_pipeline_spark.sources.tables import load_table
+
+    events = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type") != "view"
+    )
+    df = funnel_counts(events, ("view", "click", "purchase"))
+    assert df.schema.simpleString() == (
+        "struct<step_index:bigint,step:string,n_users:bigint>"
+    )
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (1, "view", 0),
+        (2, "click", 0),
+        (3, "purchase", 0),
+    ]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" not in plan, plan
+
+
 def test_retention_semantics_on_constructed_cohorts(spark):
     from user_behavior_spark_pipeline_spark.operators.funnel import (
         retention_matrix,
@@ -212,10 +235,11 @@ def test_funnel_reach_plan_has_single_exchange(spark, sf_dir):
 
 
 def test_retention_plan_exchange_budget(spark, sf_dir):
-    """Pin retention_matrix's physical shuffle budget: the per-user first
-    aggregation + the distinct-count's partial/final pair = 3 hash
-    exchanges, no more (a regression to a per-row or re-shuffled shape
-    shows up here first)."""
+    """Pin retention_matrix's physical shuffle budget: the per-user
+    first-day window's user_id exchange, which the distinct count's
+    per-user step reuses, + the final (cohort, offset) exchange = 2 hash
+    exchanges and no join (a regression to a self-join, a per-row or a
+    re-shuffled shape shows up here first)."""
     from user_behavior_spark_pipeline_spark.operators.funnel import (
         retention_matrix,
     )
@@ -228,7 +252,8 @@ def test_retention_plan_exchange_budget(spark, sf_dir):
         .toString()
     )
     n = plan.count("Exchange hashpartitioning")
-    assert n <= 3, f"{n} hash exchanges:\n{plan[:2000]}"
+    assert n <= 2, f"{n} hash exchanges:\n{plan[:2000]}"
+    assert "Join" not in plan, plan[:2000]
 
 
 # ---------------------------------------------------------------------------

@@ -305,9 +305,6 @@ def test_bloom_semi_join_string_keys(spark):
 
 # query -> {marker: reason}; only the listed markers are tolerated there
 PLAN_LINT_WHITELIST = {
-    # non-equi join of the per-depth counts against the step table — both
-    # sides are <= len(steps) rows by construction (funnel.py docstring)
-    "x_funnel_counts": {"BroadcastNestedLoopJoin"},
     # broadcast crossJoin of a bounded query/centroid set (num_queries /
     # n_centroids rows) against the corpus — the documented map-side
     # scoring shape of the ANN ladder (similarity.py module docstring)

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import pytest
 
+from user_behavior_spark_pipeline_spark.sources import tables
 from user_behavior_spark_pipeline_spark.sources.tables import TABLES, load_table
 
 EXPECTED = {
@@ -58,3 +59,81 @@ def test_documents_text_is_ascii_word_soup(spark, sf_dir):
         "x_multimodal_decode_q oracle (bytes == code points) no longer "
         "holds — switch its oracle to a byte-level reproduction."
     )
+
+
+def test_warm_load_table_runs_no_job(spark, sf_dir):
+    """The first read of a file infers its schema with a job; a later read
+    of the unchanged file reuses the memoized schema and runs none."""
+    load_table(spark, sf_dir, "orders")
+    sc = spark.sparkContext
+    sc.setJobGroup("load_table_warm", "load_table_warm")
+    try:
+        load_table(spark, sf_dir, "orders")
+        assert sc.statusTracker().getJobIdsForGroup("load_table_warm") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize("table", TABLES)
+def test_memoized_schema_is_the_inferred_one(spark, sf_dir, table, monkeypatch):
+    """The memo holds exactly what Spark infers, and a read served from
+    it has the same schema as a read that infers."""
+    path = f"{sf_dir}/{table}.parquet"
+    load_table(spark, sf_dir, table)
+    warm = load_table(spark, sf_dir, table).schema
+    key = tables._schema_key(spark, path)
+    assert tables._SCHEMAS[key] == spark.read.parquet(path).schema
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    assert load_table(spark, sf_dir, table).schema == warm
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    """A file rewritten at the same path with another column set misses
+    the memo, so the new column is visible."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [1, 2], "r_name": ["a", "b"]}), path)
+    load_table(spark, str(tmp_path), "region")
+    assert load_table(spark, str(tmp_path), "region").columns == [
+        "r_regionkey",
+        "r_name",
+    ]
+    pq.write_table(
+        pa.table({"r_regionkey": [3], "r_name": ["c"], "r_comment": ["new"]}),
+        path,
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert [tuple(r) for r in df.collect()] == [(3, "c", "new")]
+
+
+def test_schema_memo_stays_bounded_under_concurrent_inserts(monkeypatch):
+    """Threads inserting at once never lose the bound or raise."""
+    import sys
+    import threading
+
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    errors = []
+
+    def insert(t):
+        try:
+            for i in range(2000):
+                tables._remember((t, i), None)
+        except Exception as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=insert, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(tables._SCHEMAS) == tables._SCHEMA_MEMO_MAX

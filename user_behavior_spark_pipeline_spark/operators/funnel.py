@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -162,25 +162,31 @@ def funnel_counts(
 ) -> DataFrame:
     """Classic funnel report: one row per step with the number of users
     whose ordered journey reached at least that step — monotonically
-    non-increasing by construction."""
+    non-increasing by construction.
+
+    One global aggregate over ``funnel_reach``: a ``count_if(steps_reached
+    >= k)`` per step, inlined into ``(step_index long, step string,
+    n_users long)`` rows. The step table is JVM literals, so no Python
+    task runs, and a funnel with no step-1 event still yields every step
+    with 0 users."""
     reach = funnel_reach(events, steps, horizon_seconds, **kwargs)
-    per_depth = reach.groupBy("steps_reached").agg(
-        F.count(F.lit(1)).alias("n")
+    counts = reach.agg(
+        *[
+            F.count_if(F.col("steps_reached") >= k).alias(f"_n{k}")
+            for k in range(1, len(steps) + 1)
+        ]
     )
-    # users at depth >= k: reverse cumulative sum over at most len(steps)
-    # rows — a broadcastable table regardless of corpus size
-    steps_df = reach.sparkSession.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(steps)], "step_index long, step string"
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(k).cast("long").alias("step_index"),
+                F.lit(s).alias("step"),
+                F.col(f"_n{k}").alias("n_users"),
+            )
+            for k, s in enumerate(steps, start=1)
+        ]
     )
-    return (
-        steps_df.join(
-            per_depth,
-            per_depth["steps_reached"] >= steps_df["step_index"],
-            "left",
-        )
-        .groupBy("step_index", "step")
-        .agg(F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_users"))
-    )
+    return counts.select(F.inline(rows))
 
 
 def retention_matrix(
@@ -194,23 +200,22 @@ def retention_matrix(
     were active — the classic retention triangle, the funnel's companion
     user-behavior report.
 
-    Shuffle profile (plan-pinned in tests): the per-user first-event
-    aggregation, then the (cohort, offset) distinct-count — whose
-    partial/final split is a second physical exchange — for three hash
-    exchanges total; the cohort join is on user_id (broadcast while the
-    per-user firsts are small, shuffle at scale, AQE skew-split if one
-    cohort dominates). Offsets are wall-clock day arithmetic (NTZ-safe
-    date_trunc + datediff), so results are identical in any session
-    timezone.
+    Shuffle profile (plan-pinned in tests): one scan of the events and
+    two hash exchanges, no join. The user's first day is a window
+    ``min`` over the user_id partitioning; the (cohort, offset) distinct
+    count's per-user step reuses that partitioning, and only its final
+    step shuffles by (cohort, offset). Offsets are wall-clock day
+    arithmetic (NTZ-safe date_trunc + datediff), so results are
+    identical in any session timezone.
 
     Columns: cohort_day (first period start, yyyy-MM-dd), periods_later
     (0 = the cohort period itself), n_active.
     """
-    ev = events.select(
+    # a NULL user has no cohort (the oracle's inner join drops it)
+    ev = events.where(F.col(user_col).isNotNull()).select(
         F.col(user_col).alias("user_id"),
         F.date_trunc("day", F.col(ts_col)).alias("day"),
     )
-    first = ev.groupBy("user_id").agg(F.min("day").alias("first_day"))
     # snap the cohort to its epoch-aligned bucket start so every member of
     # a calendar bucket shares one cohort label
     cohort_start = F.date_sub(
@@ -220,7 +225,8 @@ def retention_matrix(
         )
         % bucket_days,
     )
-    cohorted = ev.join(first, "user_id").withColumn(
+    first_day = F.min("day").over(Window.partitionBy("user_id"))
+    cohorted = ev.withColumn("first_day", first_day).withColumn(
         "cohort_start", cohort_start
     ).select(
         "user_id",
