@@ -38,7 +38,11 @@ MEM-runs table, ANN exact baseline) — so every sample pays the cold build
 and no memoised intermediate keyed on the testdata path survives between
 timed runs (VERDICT r15 #1). The JSON line additionally echoes ``cpus``,
 ``default_parallelism`` and two floor-calibration medians (additions only;
-the driver contract fields are unchanged)."""
+the driver contract fields are unchanged).
+
+Layer counters go to BENCH_DETAIL.json only: each query's ``spread`` entry
+holds ``codegen_compiles``, the Janino compiles of each sample (aligned with
+``all``), read just before and just after the timed window."""
 
 from __future__ import annotations
 
@@ -83,7 +87,10 @@ def main() -> None:
         sf = 0.0  # non-sf<N> directory name: still bench, report sf=0
 
     from user_behavior_spark_pipeline_spark.registry import QUERIES, prepare_staged
-    from user_behavior_spark_pipeline_spark.session import get_spark
+    from user_behavior_spark_pipeline_spark.session import (
+        codegen_compiles,
+        get_spark,
+    )
 
     spark = get_spark(app_name="ubsp-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -119,6 +126,9 @@ def main() -> None:
             raise SystemExit(f"--only: unknown queries {sorted(unknown)}")
         bench_names = [n for n in bench_names if n in only]
     samples: dict[str, list[float]] = {n: [] for n in bench_names}
+    # Janino compiles per sample, aligned with samples[name]: the
+    # generated-code layer's counter, read outside the timed window
+    compiles: dict[str, list[int]] = {n: [] for n in bench_names}
     bench_start = time.perf_counter()
 
     def _sample(name: str) -> None:
@@ -131,6 +141,7 @@ def main() -> None:
         # need; every first sample and every >= 1 s query keeps the GC.
         if not samples[name] or statistics.median(samples[name]) >= 1.0:
             spark._jvm.System.gc()
+        compiled = codegen_compiles(spark)
         t0 = time.perf_counter()
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
@@ -150,6 +161,7 @@ def main() -> None:
         # is the point.
         release_keyed()
         samples[name].append(round(time.perf_counter() - t0, 3))
+        compiles[name].append(codegen_compiles(spark) - compiled)
 
     # pass 1: every query gets its (mandatory) first sample
     for name in bench_names:
@@ -209,6 +221,7 @@ def main() -> None:
             "max": max(t),
             "all": t,
             "n_samples": len(t),
+            "codegen_compiles": compiles[n],
         }
         for n, t in samples.items()
         if t

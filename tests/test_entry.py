@@ -127,3 +127,41 @@ def test_scratch_dirs_are_removed_at_exit(tmp_path):
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "1"  # one root while the process runs
     assert [p for p in os.listdir(tmp_path) if p.startswith("ubsp_")] == []
+
+
+def test_regenerated_source_leaves_one_staged_tree(spark, tmp_path, monkeypatch):
+    """Staging a lake fixture again after ``documents.parquet`` changes
+    publishes a new tree and prunes the one staged from the old file;
+    the same fixture's tree for another sf_dir is kept."""
+    import os
+    import tempfile
+
+    from user_behavior_spark_pipeline_spark.registry import _stage_lake_frames
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    sf_dirs = [tmp_path / "sf_a", tmp_path / "sf_b"]
+    for d in sf_dirs:
+        d.mkdir()
+        (d / "documents.parquet").write_bytes(b"v1")
+
+    def build():
+        return {"t": spark.range(3)}
+
+    def stage(sf_dir):
+        return _stage_lake_frames(spark, str(sf_dir), "probe", build)
+
+    def trees():
+        return sorted(p for p in os.listdir(tmp) if p.startswith("ubsp_stage_"))
+
+    other = stage(sf_dirs[1]).base
+    first = stage(sf_dirs[0]).base
+    assert len(trees()) == 2
+    docs = sf_dirs[0] / "documents.parquet"
+    st = os.stat(docs)
+    os.utime(docs, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    read = stage(sf_dirs[0])
+    assert read.base != first and not os.path.exists(first)
+    assert trees() == sorted(os.path.basename(p) for p in (other, read.base))
+    assert read("t").count() == 3

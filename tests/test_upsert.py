@@ -24,9 +24,7 @@ SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value do
 
 def _run_upsert(spark, rows, snap, ckpt):
     src_df = spark.createDataFrame(rows, SCHEMA)
-    import tempfile
-
-    src = tempfile.mkdtemp(prefix="ubsp_upsert_src_")
+    src = f"{ckpt}_src"  # beside the checkpoint, inside the test's tmp_path
     src_df.coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(src_df.schema).parquet(src)
     q = upsert_stream(stream, snap, ckpt)
@@ -77,9 +75,8 @@ def test_stream_snapshot_equals_batch_latest(spark, sf_dir, tmp_path):
 
     events = load_table(spark, sf_dir, "events")
     import os
-    import tempfile
 
-    src = tempfile.mkdtemp(prefix="ubsp_upsert_eq_src_")
+    src = str(tmp_path / "src")
     events.repartition(4).write.mode("overwrite").parquet(src)
     snap = str(tmp_path / "snap")
     os.makedirs(snap)

@@ -9,14 +9,38 @@ change keeps (or moves) physical plans, e.g.
 writes /tmp/plans_after/x_stream_stream_join.txt. Plan capture is driver-side
 only — the DataFrame is built but not executed (streaming fixtures that
 run during construction still run, as they do for any caller).
+
+Each plan is written through :func:`mask_plan_ids`, so two dumps diff
+directly (``diff -r A B``): the ids it masks come from JVM-global counters
+and depend on what ran earlier in the session, not on the plan.
 """
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
+
+# (pattern, replacement) pairs, applied in order. ``[codegen id : N]`` and
+# the ``(N)`` operator numbers are per-plan and stay.
+_MASKS = (
+    (re.compile(r"#\d+"), "#N"),  # expression ids: a#12L, subquery#7
+    (re.compile(r"\blambda ([xyz])_\d+"), r"lambda \1_N"),  # F.transform vars
+    (re.compile(r"\b_common_expr_\d+"), "_common_expr_N"),  # With() aliases
+    (re.compile(r"\bplan_id=\d+"), "plan_id=N"),  # exchange ids
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),  # scanned RDDs: MapPartitionsRDD[1607]
+    # per-process scratch and staged-fixture dirs under the temp dir
+    (re.compile(r"/ubsp_[^/\s,\]]+"), "/ubsp_*"),
+)
+
+
+def mask_plan_ids(plan: str) -> str:
+    """``plan`` with its session-dependent ids replaced by ``N``."""
+    for pattern, repl in _MASKS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> int:
@@ -46,7 +70,7 @@ def main() -> int:
             fails.append(name)
             plan = f"PLAN CAPTURE FAILED: {exc}\n"
         with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
-            f.write(plan)
+            f.write(mask_plan_ids(plan))
         release_shared()
         print("plan", name, flush=True)
     if fails:

@@ -1828,6 +1828,41 @@ def x_delta_checkpoint(spark, sf_dir):
 _LAKE_STAGE_EPOCH = "r15a"
 
 
+def _stage_print(tree: str) -> tuple[str, int] | None:
+    """``(epoch, documents.parquet mtime_ns)`` from a staged tree's
+    ``_STAGED`` marker; None when unreadable or staged without a source
+    file."""
+    import os as _os
+
+    try:
+        with open(_os.path.join(tree, "_STAGED")) as fh:
+            epoch, mtime_ns = fh.read().split()
+        return epoch, int(mtime_ns)
+    except (OSError, ValueError):
+        return None
+
+
+def _prune_stale_stages(base: str, prefix: str) -> None:
+    """Remove the trees beside ``base`` whose names start with ``prefix``
+    (the same fixture and sf_dir) and that were staged by another epoch
+    or from an older ``documents.parquet``. A tree with a newer source
+    print is kept: another process may be serving it."""
+    import os as _os
+    import shutil as _shutil
+
+    mine = _stage_print(base)
+    if mine is None:
+        return
+    root = _os.path.dirname(base)
+    for entry in _os.listdir(root):
+        tree = _os.path.join(root, entry)
+        if not entry.startswith(prefix) or tree == base:
+            continue
+        theirs = _stage_print(tree)
+        if theirs is not None and (theirs[0] != mine[0] or theirs[1] < mine[1]):
+            _shutil.rmtree(tree, ignore_errors=True)
+
+
 def _stage_lake_frames(spark, sf_dir, name, build):
     """Stage a lakehouse/format fixture's synthesized frames once per
     (fixture, sf) through the memoized layer (VERDICT r13 #3 — the
@@ -1837,12 +1872,16 @@ def _stage_lake_frames(spark, sf_dir, name, build):
     replay/walk under test, not the per-doc builder. Queries stay
     self-sufficient — the first hit pays the synthesis.
 
-    The on-disk location is DETERMINISTIC (sha1 of fixture name +
-    sf_dir + ``_LAKE_STAGE_EPOCH``) and published atomically via
+    The on-disk location is DETERMINISTIC and published atomically via
     rename, so a prepare pass in another process — or an earlier
     session on the same machine — is reused instead of re-paying the
     synthesis, and repeated sessions converge on one tree per fixture
-    instead of leaking a new mkdtemp each run (review r14)."""
+    instead of leaking a new mkdtemp each run (review r14). Its name is
+    ``ubsp_stage_<fixture>_<family>_<tag>``: ``family`` hashes (fixture,
+    sf_dir), ``tag`` hashes ``_LAKE_STAGE_EPOCH`` and the source print.
+    Publishing a tree prunes its family's trees staged from older data
+    (:func:`_prune_stale_stages`), so regenerated testdata leaves one
+    tree per fixture and scale, not one per regeneration."""
     import hashlib as _hashlib
     import os as _os
     import shutil as _shutil
@@ -1866,29 +1905,28 @@ def _stage_lake_frames(spark, sf_dir, name, build):
         src_print = None
     key = ("lake", name, sf_dir, src_print)
     if key not in _STAGED_SOURCES:
-        tag = _hashlib.sha1(
-            repr(
-                (
-                    name,
-                    _os.path.abspath(sf_dir),
-                    _LAKE_STAGE_EPOCH,
-                    src_print,
-                )
-            ).encode()
-        ).hexdigest()[:12]
-        base = _os.path.join(tempfile.gettempdir(), f"ubsp_stage_{name}_{tag}")
+
+        def digest(parts, n):
+            return _hashlib.sha1(repr(parts).encode()).hexdigest()[:n]
+
+        family = digest((name, _os.path.abspath(sf_dir)), 8)
+        tag = digest((_LAKE_STAGE_EPOCH, src_print), 12)
+        prefix = f"ubsp_stage_{name}_{family}_"
+        base = _os.path.join(tempfile.gettempdir(), prefix + tag)
         marker = _os.path.join(base, "_STAGED")
         if not _os.path.exists(marker):
             tmp = tempfile.mkdtemp(prefix=f"ubsp_{name}_")
             for sub, df in build().items():
                 df.write.mode("overwrite").parquet(_os.path.join(tmp, sub))
             with open(_os.path.join(tmp, "_STAGED"), "w") as fh:
-                fh.write(_LAKE_STAGE_EPOCH)
+                fh.write(f"{_LAKE_STAGE_EPOCH} {src_print and src_print[1]}")
             try:
                 _os.rename(tmp, base)
             except OSError:
                 # another process published first — use its tree
                 _shutil.rmtree(tmp, ignore_errors=True)
+            else:
+                _prune_stale_stages(base, prefix)
         _STAGED_SOURCES[key] = base
     base = _STAGED_SOURCES[key]
 
