@@ -100,6 +100,28 @@ def test_rotation_order_is_a_pure_function_of_history():
     assert _rotation_order(["a", "f"], [], {"f"}) == ["f", "a"]
 
 
+def test_registration_order_is_pinned():
+    """QUERIES/ORACLES key order is the rotation's tie-break, so moving code
+    around the registry must not reorder registration: the order (by the
+    line each query is defined on) is pinned by hash, and the rotation of
+    it is exactly the exported key order."""
+    import hashlib
+
+    from user_behavior_spark_pipeline_spark.registry import (
+        _HISTORY,
+        ORACLES,
+        QUERIES,
+        _rotation_order,
+    )
+
+    order = sorted(QUERIES, key=lambda k: QUERIES[k].__code__.co_firstlineno)
+    digest = hashlib.sha1("\n".join(order).encode()).hexdigest()
+    assert digest == "6f113f163d64ee9f6867169bae4a8191d0ee65a8", order
+    assert _rotation_order(order, _HISTORY, ORACLES) == list(QUERIES)
+    oracled = [k for k in order if k in ORACLES]
+    assert _rotation_order(oracled, _HISTORY, ORACLES) == list(ORACLES)
+
+
 def test_scratch_dirs_are_removed_at_exit(tmp_path):
     """Stream sinks, checkpoints and staged sources live under one
     per-process root that the registry removes at interpreter exit."""
@@ -165,3 +187,45 @@ def test_regenerated_source_leaves_one_staged_tree(spark, tmp_path, monkeypatch)
     assert read.base != first and not os.path.exists(first)
     assert trees() == sorted(os.path.basename(p) for p in (other, read.base))
     assert read("t").count() == 3
+
+
+def test_regenerated_events_restage_stream_sources(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """The staging fingerprint covers every table in sf_dir, not only
+    documents.parquet: touching events.parquet makes the staged stream
+    sources publish new trees (and prune the old ones) with no memo
+    popped by hand."""
+    import os
+    import shutil
+    import tempfile
+
+    from user_behavior_spark_pipeline_spark.registry import (
+        _stage_events_parquet,
+        _stage_stream_source,
+    )
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    src = tmp_path / "sf"
+    src.mkdir()
+    events = src / "events.parquet"
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), events)
+
+    def stage():
+        return [
+            _stage_events_parquet(spark, str(src)),
+            _stage_stream_source(spark, str(src)),
+        ]
+
+    first = stage()
+    assert stage() == first
+    st = os.stat(events)
+    os.utime(events, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    second = stage()
+    assert all(a != b for a, b in zip(first, second))
+    assert not any(os.path.exists(p) for p in first)
+    n = spark.read.parquet(str(events)).count()
+    assert spark.read.parquet(second[0]).count() == n
+    assert spark.read.json(second[1]).count() == n

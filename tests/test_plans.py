@@ -776,7 +776,7 @@ def test_q20_nested_semi_joins_are_hash(spark, sf_dir):
 
 def test_staged_tree_key_tracks_source_data(spark, tmp_path, sf_dir):
     """round-15 review: the staged-fixture on-disk tag must fingerprint
-    the SOURCE DATA (documents.parquet size+mtime), not just the path —
+    the SOURCE DATA (every table's size+mtime), not just the path —
     the driver regenerates testdata at the same path between rounds,
     and a tree staged from the old table must never be served against
     oracles recomputing from the new one. ADVICE r15: the in-process
@@ -803,7 +803,7 @@ def test_staged_tree_key_tracks_source_data(spark, tmp_path, sf_dir):
     read1 = R._stage_lake_frames(spark, stage_dir, "keytest", build)
     base1 = read1.base
     # same data -> same tree, even across a cleared process memo
-    stale = [k for k in R._STAGED_SOURCES if k[1] == "keytest"]
+    stale = [k for k in R._STAGED_SOURCES if k[0] == "keytest"]
     for k in stale:
         R._STAGED_SOURCES.pop(k, None)
     read2 = R._stage_lake_frames(spark, stage_dir, "keytest", build)
@@ -817,5 +817,5 @@ def test_staged_tree_key_tracks_source_data(spark, tmp_path, sf_dir):
     assert read3("t").count() == 3
     for b in {base1, read3.base}:
         shutil.rmtree(b, ignore_errors=True)
-    for k in [k for k in R._STAGED_SOURCES if k[1] == "keytest"]:
+    for k in [k for k in R._STAGED_SOURCES if k[0] == "keytest"]:
         R._STAGED_SOURCES.pop(k, None)

@@ -24,13 +24,15 @@ def test_partitioned_write_enables_partition_pruning(spark, sf_dir, tmp_path):
     assert pruned.count() == ev.filter("event_type = 'purchase'").count()
 
 
-def test_cobucketed_join_has_no_exchange(spark, sf_dir):
+def test_cobucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    write_bucketed_table(spark, orders, "b_orders", "o_custkey", 8)
+    write_bucketed_table(
+        spark, orders, "b_orders", str(tmp_path / "orders_1"), "o_custkey", 8
+    )
     write_bucketed_table(
         spark, customer.withColumnRenamed("c_custkey", "o_custkey"), "b_customer",
-        "o_custkey", 8,
+        str(tmp_path / "customer"), "o_custkey", 8,
     )
     joined = (
         spark.table("b_orders")
@@ -45,6 +47,14 @@ def test_cobucketed_join_has_no_exchange(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     assert "Exchange" not in plan, plan[:2000]
+    # a re-stage writes a fresh directory and the table still reads from it
+    write_bucketed_table(
+        spark, orders, "b_orders", str(tmp_path / "orders_2"), "o_custkey", 8
+    )
+    assert spark.table("b_orders").inputFiles()[0].startswith(
+        (tmp_path / "orders_2").as_uri()
+    )
+    assert spark.table("b_orders").count() == orders.count()
     spark.sql("DROP TABLE b_orders")
     spark.sql("DROP TABLE b_customer")
 
@@ -137,10 +147,9 @@ def test_custom_writer_two_phase_commit_receipt(spark, tmp_path):
 
 
 def test_bucketed_staging_survives_catalog_loss(spark, sf_dir):
-    """The staging memo is process-global but the tables are session
-    state: after the catalog loses them (fresh session, DROP, session
-    restart) the query must re-stage instead of failing on a missing
-    table."""
+    """The tables are session state: after the catalog loses them (fresh
+    session, DROP, session restart) the query must re-stage instead of
+    failing on a missing table."""
     from user_behavior_spark_pipeline_spark.registry import QUERIES
 
     assert QUERIES["x_join_bucketed"](spark, sf_dir).count() > 0
@@ -148,76 +157,3 @@ def test_bucketed_staging_survives_catalog_loss(spark, sf_dir):
     spark.sql("DROP TABLE IF EXISTS bq_customer")
     assert QUERIES["x_join_bucketed"](spark, sf_dir).count() > 0
 
-
-def test_bucketed_staging_sweeps_orphans_from_dead_processes(spark, sf_dir):
-    """The staging memo is process-local, so a crashed process's staging
-    directory would otherwise never be retired. Staging must sweep
-    same-table siblings owned by DEAD pids (and this process's own
-    replaced dirs), while leaving a live concurrent process's staging and
-    unrelated tables' directories untouched."""
-    import os
-    import tempfile
-    import time
-
-    from user_behavior_spark_pipeline_spark.sinks import write_bucketed_table
-    from user_behavior_spark_pipeline_spark.sources.tables import load_table
-
-    base = os.path.join(tempfile.gettempdir(), "ubsp-bucketed")
-    os.makedirs(base, exist_ok=True)
-    # dead owner: pid far beyond pid_max cannot be alive (non-empty, like
-    # real staging debris)
-    orphan = tempfile.mkdtemp(prefix="swp_orders-99999999-", dir=base)
-    with open(os.path.join(orphan, "part-00000.parquet"), "w") as f:
-        f.write("debris")
-    # legacy no-pid dirs have unknowable liveness (mtime only records the
-    # one-time write, not reads): even an old one may be a live pre-pid
-    # session's staging — never swept, regardless of age
-    legacy_fresh = tempfile.mkdtemp(prefix="swp_orders-", dir=base)
-    legacy_aged = tempfile.mkdtemp(prefix="swp_orders-", dir=base)
-    stale = time.time() - 30 * 86400
-    os.utime(legacy_aged, (stale, stale))
-    # live owner: pid 1 always exists — a concurrent session's staging
-    # must NOT be deleted out from under its catalog
-    live = tempfile.mkdtemp(prefix="swp_orders-1-", dir=base)
-    other = tempfile.mkdtemp(prefix="swp_other_table-", dir=base)
-
-    orders = load_table(spark, sf_dir, "orders").limit(10)
-    write_bucketed_table(spark, orders, "swp_orders", "o_custkey", 2)
-    try:
-        assert not os.path.exists(orphan), "dead process's orphan not swept"
-        assert os.path.exists(legacy_aged), (
-            "aged legacy dir swept — age does not prove orphanhood "
-            "(reads never touch mtime)"
-        )
-        assert os.path.exists(legacy_fresh), (
-            "fresh legacy dir swept — may be a live pre-pid session's "
-            "staging mid-rollout"
-        )
-        assert os.path.exists(live), "live concurrent session's dir swept!"
-        assert os.path.exists(other), "unrelated table's staging was swept"
-        # the live table still reads after the sweep
-        assert spark.table("swp_orders").count() == 10
-        # re-staging in the SAME process retires our own previous dir
-        first = [
-            d
-            for d in os.listdir(base)
-            if d.startswith(f"swp_orders-{os.getpid()}-")
-        ]
-        write_bucketed_table(spark, orders, "swp_orders", "o_custkey", 2)
-        mine = [
-            d
-            for d in os.listdir(base)
-            if d.startswith(f"swp_orders-{os.getpid()}-")
-        ]
-        assert len(mine) == 1 and mine != first, (
-            f"own previous staging not retired: {first} -> {mine}"
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS swp_orders")
-        import shutil
-
-        for d in (live, other):
-            shutil.rmtree(d, ignore_errors=True)
-        for d in os.listdir(base):
-            if d.startswith("swp_orders-"):
-                shutil.rmtree(os.path.join(base, d), ignore_errors=True)

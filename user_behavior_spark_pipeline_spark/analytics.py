@@ -76,9 +76,3 @@ def distinct_host_type_detail(
         .distinct()
         .orderBy(F.asc("event_type"), F.desc("event_detail"))
     )
-
-
-# --- OP-Q-SHOW-TABLES / OP-Q-DESCRIBE (README.md:588-613) ---
-# canonical implementations live in catalog.py (single owner); re-exported
-# here because the reference groups them with its query surface
-from .catalog import describe_table, show_tables  # noqa: E402,F401

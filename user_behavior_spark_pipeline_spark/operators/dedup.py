@@ -847,7 +847,9 @@ def maximal_duplicated_substrings(
         .filter(F.col("_df") >= 2)
         .select("_h")
     )
-    cand = hashed.join(hot, "_h").select("doc_id", "pos", "anchor")
+    # pinned: left to AQE inside the cached frame, the build side flipped
+    # run to run between this side and the 251k-row anchor side at sf0.1
+    cand = hashed.join(F.broadcast(hot), "_h").select("doc_id", "pos", "anchor")
     if max_anchor_df is not None:
         over_cap = (
             cand.select("anchor", "doc_id")

@@ -1827,11 +1827,35 @@ def x_delta_checkpoint(spark, sf_dir):
 #: an older builder can never be served to a newer operator.
 _LAKE_STAGE_EPOCH = "r15a"
 
+# (fixture, sf_dir, source print) -> published tree; read only by _stage
+_STAGED_SOURCES: dict[tuple, str] = {}
+
+
+def _source_print(sf_dir: str) -> tuple:
+    """``(file, size, mtime_ns)`` for every ``*.parquet`` table in
+    ``sf_dir``: what a staged fixture or catalog table derives from."""
+    import glob as _glob
+    import os as _os
+
+    prints = []
+    for path in sorted(_glob.glob(_os.path.join(sf_dir, "*.parquet"))):
+        try:
+            st = _os.stat(path)
+        except OSError:
+            continue
+        prints.append((_os.path.basename(path), st.st_size, st.st_mtime_ns))
+    return tuple(prints)
+
+
+def _digest(parts, n: int) -> str:
+    import hashlib as _hashlib
+
+    return _hashlib.sha1(repr(parts).encode()).hexdigest()[:n]
+
 
 def _stage_print(tree: str) -> tuple[str, int] | None:
-    """``(epoch, documents.parquet mtime_ns)`` from a staged tree's
-    ``_STAGED`` marker; None when unreadable or staged without a source
-    file."""
+    """``(epoch, newest source mtime_ns)`` from a staged tree's
+    ``_STAGED`` marker; None when unreadable."""
     import os as _os
 
     try:
@@ -1845,8 +1869,8 @@ def _stage_print(tree: str) -> tuple[str, int] | None:
 def _prune_stale_stages(base: str, prefix: str) -> None:
     """Remove the trees beside ``base`` whose names start with ``prefix``
     (the same fixture and sf_dir) and that were staged by another epoch
-    or from an older ``documents.parquet``. A tree with a newer source
-    print is kept: another process may be serving it."""
+    or from older source tables. A tree with a newer source print is
+    kept: another process may be serving it."""
     import os as _os
     import shutil as _shutil
 
@@ -1863,63 +1887,51 @@ def _prune_stale_stages(base: str, prefix: str) -> None:
             _shutil.rmtree(tree, ignore_errors=True)
 
 
-def _stage_lake_frames(spark, sf_dir, name, build):
-    """Stage a lakehouse/format fixture's synthesized frames once per
-    (fixture, sf) through the memoized layer (VERDICT r13 #3 — the
-    r03 `_stage_catalog_table` move): ``build`` maps the docs slice
-    to {subdir: DataFrame}; staged parquet is read back on every
-    call, so BENCH (which pre-warms via prepare_staged) prices the
-    replay/walk under test, not the per-doc builder. Queries stay
+def _stage(sf_dir: str, name: str, write) -> str:
+    """The one staging seam: the path of fixture ``name``'s tree for
+    ``sf_dir``, filled by ``write(tmp_dir)`` on first use. Every derived
+    INPUT (lake and media fixtures, stream sources, format doubles) is
+    staged here; run OUTPUTS (sinks, checkpoints) go to :func:`_scratch_dir`.
+    Staging is fixture setup, not query work, so BENCH (which pre-warms via
+    prepare_staged) prices the operator under test; queries stay
     self-sufficient — the first hit pays the synthesis.
 
     The on-disk location is DETERMINISTIC and published atomically via
-    rename, so a prepare pass in another process — or an earlier
-    session on the same machine — is reused instead of re-paying the
-    synthesis, and repeated sessions converge on one tree per fixture
-    instead of leaking a new mkdtemp each run (review r14). Its name is
-    ``ubsp_stage_<fixture>_<family>_<tag>``: ``family`` hashes (fixture,
-    sf_dir), ``tag`` hashes ``_LAKE_STAGE_EPOCH`` and the source print.
-    Publishing a tree prunes its family's trees staged from older data
-    (:func:`_prune_stale_stages`), so regenerated testdata leaves one
-    tree per fixture and scale, not one per regeneration."""
-    import hashlib as _hashlib
+    rename, so a prepare pass in another process — or an earlier session
+    on the same machine — is reused instead of re-paying the synthesis.
+    Its name is ``ubsp_stage_<fixture>_<family>_<tag>``: ``family`` hashes
+    (fixture, sf_dir), ``tag`` hashes ``_LAKE_STAGE_EPOCH`` and the source
+    print (:func:`_source_print`, every table in sf_dir). Publishing a tree
+    prunes its family's trees staged from older data
+    (:func:`_prune_stale_stages`), so regenerated testdata leaves one tree
+    per fixture and scale, not one per regeneration.
+
+    The print is stat'd on every call and is part of the in-process memo
+    key too: testdata regenerated at the same path within one process
+    must invalidate, not just across processes — a tree staged from the
+    old tables would otherwise be served to queries whose oracles
+    recompute from the new ones."""
     import os as _os
     import shutil as _shutil
     import tempfile
 
-    # the tag must fingerprint the SOURCE DATA, not just the path: the
-    # driver regenerates testdata between rounds at the same path, and a
-    # tree staged from the old documents table would otherwise be served
-    # to queries whose oracles recompute from the new one (round-15
-    # review finding). size + mtime_ns of documents.parquet — every
-    # build() here derives from it — is conservative in the safe
-    # direction (worst case one spurious re-synthesis after an
-    # identical-byte rewrite). The fingerprint is STAT'D ON EVERY CALL
-    # and is part of the in-process memo key too (ADVICE r15): testdata
-    # regenerated within one process lifetime must also invalidate, not
-    # just across processes.
-    try:
-        st = _os.stat(_os.path.join(sf_dir, "documents.parquet"))
-        src_print = (st.st_size, st.st_mtime_ns)
-    except OSError:
-        src_print = None
-    key = ("lake", name, sf_dir, src_print)
+    src_print = _source_print(sf_dir)
+    key = (name, sf_dir, src_print)
     if key not in _STAGED_SOURCES:
-
-        def digest(parts, n):
-            return _hashlib.sha1(repr(parts).encode()).hexdigest()[:n]
-
-        family = digest((name, _os.path.abspath(sf_dir)), 8)
-        tag = digest((_LAKE_STAGE_EPOCH, src_print), 12)
+        family = _digest((name, _os.path.abspath(sf_dir)), 8)
+        tag = _digest((_LAKE_STAGE_EPOCH, src_print), 12)
         prefix = f"ubsp_stage_{name}_{family}_"
         base = _os.path.join(tempfile.gettempdir(), prefix + tag)
-        marker = _os.path.join(base, "_STAGED")
-        if not _os.path.exists(marker):
+        if not _os.path.exists(_os.path.join(base, "_STAGED")):
             tmp = tempfile.mkdtemp(prefix=f"ubsp_{name}_")
-            for sub, df in build().items():
-                df.write.mode("overwrite").parquet(_os.path.join(tmp, sub))
+            try:
+                write(tmp)
+            except BaseException:
+                _shutil.rmtree(tmp, ignore_errors=True)
+                raise
+            newest = max((p[2] for p in src_print), default=0)
             with open(_os.path.join(tmp, "_STAGED"), "w") as fh:
-                fh.write(f"{_LAKE_STAGE_EPOCH} {src_print and src_print[1]}")
+                fh.write(f"{_LAKE_STAGE_EPOCH} {newest}")
             try:
                 _os.rename(tmp, base)
             except OSError:
@@ -1928,55 +1940,47 @@ def _stage_lake_frames(spark, sf_dir, name, build):
             else:
                 _prune_stale_stages(base, prefix)
         _STAGED_SOURCES[key] = base
-    base = _STAGED_SOURCES[key]
+    return _STAGED_SOURCES[key]
+
+
+def _stage_lake_frames(spark, sf_dir, name, build):
+    """Parquet front of :func:`_stage`: ``build`` maps the source to
+    {subdir: DataFrame}, each written as parquet under the tree; returns
+    ``read(sub)`` reading a subdir back, with the tree's root as
+    ``read.base`` for callers that need a PATH (stream-twin sources)."""
+    import os as _os
+
+    def write(tmp):
+        for sub, df in build().items():
+            df.write.mode("overwrite").parquet(_os.path.join(tmp, sub))
+
+    base = _stage(sf_dir, name, write)
 
     def read(sub):
         return spark.read.parquet(_os.path.join(base, sub))
 
-    # the staged tree's root, for callers that need a PATH (stream-twin
-    # sources) — published here so they don't rebuild the private
-    # _STAGED_SOURCES key shape (round-15 review finding)
     read.base = base
     return read
 
 
-def _staged_media(spark, sf_dir, name, synth):
-    """r15: the media-fixture application of the r14 staging seam —
+def _staged_media(spark, sf_dir, name, synth, mod=None, path=False):
+    """r15: the media-fixture application of the staging seam —
     synthesize the deterministic (media_id, payload) table once per
-    (fixture, sf) via the per-doc builder, stage it as parquet, and
-    read it back, so the timed region prices the WALKER under test
-    instead of re-running fixture synthesis every pass (VERDICT r13 #3
-    and its r14 generalization, extended to the media families).
-    ``synth`` maps the repartitioned docs slice to the media frame.
-    First hit pays the synthesis (queries stay self-sufficient);
-    prepare_staged pre-warms."""
-    read = _stage_lake_frames(
-        spark,
-        sf_dir,
-        name,
-        lambda: {"media": synth(_lake_docs(spark, sf_dir, None))},
-    )
-    return read("media")
-
-
-def _staged_media_dir(spark, sf_dir, name, synth, partitions: int = 4):
-    """Staged parquet SOURCE directory for the stream twins (r15):
-    same memoized tree as :func:`_staged_media`, but repartitioned to
-    the twin's maxFilesPerTrigger batching and returned as a path the
-    file stream reads. The stream execution itself (micro-batches,
-    checkpoint, sink) stays fresh per run — only the deterministic
-    source synthesis is staged (the r14 streaming-twin rule)."""
+    (fixture, sf) via the per-doc builder over the docs slice ``mod``
+    (see :func:`_lake_docs`), stage it as parquet, and read it back, so
+    the timed region prices the WALKER under test instead of re-running
+    fixture synthesis every pass. ``path=True`` stages it as 4 files for
+    a stream twin's maxFilesPerTrigger batching and returns the directory
+    the file stream reads; the stream execution itself (micro-batches,
+    checkpoint, sink) stays fresh per run."""
     import os as _os
 
     def build():
-        return {
-            "media": synth(_lake_docs(spark, sf_dir, None)).repartition(
-                partitions
-            )
-        }
+        media = synth(_lake_docs(spark, sf_dir, mod))
+        return {"media": media.repartition(4) if path else media}
 
     read = _stage_lake_frames(spark, sf_dir, name, build)
-    return _os.path.join(read.base, "media")
+    return _os.path.join(read.base, "media") if path else read("media")
 
 
 def _stage_r15_media(spark, sf_dir) -> None:
@@ -1997,10 +2001,15 @@ def _stage_r15_media(spark, sf_dir) -> None:
     from .operators.h264 import synth_h264_media
     from .operators.lake import synth_parquet_media
     from .operators.mkv import synth_mkv_media
+    from .operators.multimodal import synth_tiff_variant_media
+    from .operators.pdf import synth_pdf_media, synth_pdf_modern_media
     from .operators.protowire import synth_proto_media
     from .operators.tensors import synth_npz_media
 
+    _staged_media(spark, sf_dir, "tiff_media", synth_tiff_variant_media, mod=0)
     for name, synth in (
+        ("pdf_classic", synth_pdf_media),
+        ("pdf_modern", synth_pdf_modern_media),
         ("proto_media", synth_proto_media),
         ("parquet_media", synth_parquet_media),
         ("ogg_media", synth_ogg_media),
@@ -2018,10 +2027,10 @@ def _stage_r15_media(spark, sf_dir) -> None:
         _staged_media(spark, sf_dir, name, synth)
     from .operators.webdataset import synth_jsonl_shards
 
-    _staged_media_dir(spark, sf_dir, "avro_stream_src", synth_avro_media)
-    _staged_media_dir(spark, sf_dir, "jsonl_stream_src", synth_jsonl_shards)
-    _staged_media_dir(
-        spark, sf_dir, "demux_stream_src", synth_corrupt_mp4_media
+    _staged_media(spark, sf_dir, "avro_stream_src", synth_avro_media, path=True)
+    _staged_media(spark, sf_dir, "jsonl_stream_src", synth_jsonl_shards, path=True)
+    _staged_media(
+        spark, sf_dir, "demux_stream_src", synth_corrupt_mp4_media, path=True
     )
     # the arrow_untrusted fixture stages through its query body (the
     # corrupting builder lives there); invoke it once to warm the tree
@@ -3335,8 +3344,6 @@ def x_approx_heavy_hitters(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-_STAGED_SOURCES: dict[tuple, str] = {}
-
 
 from contextlib import contextmanager  # noqa: E402
 
@@ -3362,31 +3369,39 @@ def _state_partitions(spark: SparkSession, n: int):
 
 def _stage_stream_source(spark: SparkSession, sf_dir: str, duplicate: bool = False) -> str:
     """Materialize the Kafka-double records as JSON files for a file-stream
-    source; returns the source directory. Memoized per (sf_dir, duplicate):
+    source; returns the source directory. Staged per (sf_dir, duplicate):
     staging is fixture setup, not query work — each streaming query still
     pays its own full stream execution."""
-    key = ("json", sf_dir, duplicate)
-    if key in _STAGED_SOURCES:
-        return _STAGED_SOURCES[key]
-    records = _raw(spark, sf_dir)
-    if duplicate:
-        records = records.union(records)
-    src = _scratch_dir("ubsp_stream_src_")
-    records.coalesce(4).write.mode("overwrite").json(src)
-    _STAGED_SOURCES[key] = src
-    return src
+
+    def write(tmp):
+        records = _raw(spark, sf_dir)
+        if duplicate:
+            records = records.union(records)
+        records.coalesce(4).write.mode("overwrite").json(tmp)
+
+    return _stage(sf_dir, "stream_src_dup" if duplicate else "stream_src", write)
 
 
 def _stage_events_parquet(spark: SparkSession, sf_dir: str) -> str:
     """Raw events table staged as parquet files for file-stream sources
-    (memoized, same rationale as _stage_stream_source)."""
-    key = ("parquet", sf_dir)
-    if key in _STAGED_SOURCES:
-        return _STAGED_SOURCES[key]
-    src = _scratch_dir("ubsp_events_src_")
-    _table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(src)
-    _STAGED_SOURCES[key] = src
-    return src
+    (same rationale as _stage_stream_source)."""
+
+    def write(tmp):
+        _table(spark, sf_dir, "events").coalesce(4).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+
+    return _stage(sf_dir, "events_src", write)
+
+
+def _events_stream(spark: SparkSession, sf_dir: str, src: str | None = None, **options):
+    """A file stream over the staged events parquet (or over ``src``, a
+    staged copy of it) with the events table's schema; ``options`` go to
+    the stream reader."""
+    events = _table(spark, sf_dir, "events")
+    if src is None:
+        src = _stage_events_parquet(spark, sf_dir)
+    return spark.readStream.schema(events.schema).options(**options).parquet(src)
 
 
 def _stage_events_parquet_sealed(spark: SparkSession, sf_dir: str) -> str:
@@ -3397,75 +3412,72 @@ def _stage_events_parquet_sealed(spark: SparkSession, sf_dir: str) -> str:
     batch provably seals every window and flushes every outer-null row —
     the null-padded output becomes deterministic (= a batch LEFT JOIN) and
     therefore oracle-able. Queries drop the sentinel with user_id >= 0."""
-    import datetime
-
-    key = ("parquet_sealed", sf_dir)
-    if key in _STAGED_SOURCES:
-        return _STAGED_SOURCES[key]
-    import glob
-    import os
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     # Derive from the plain staged copy with driver-side file ops — no
     # second Spark rewrite of the whole table (measured ~4 s of the
     # query's first-hit cost) and no Spark max(ts) job: hard-link the
     # already-canonicalized part files and read their ts column stats
     # with pyarrow.
     plain = _stage_events_parquet(spark, sf_dir)
-    src = _scratch_dir("ubsp_events_sealed_")
-    parts = sorted(glob.glob(os.path.join(plain, "*.parquet")))
-    max_ts = None
-    schema = None
-    # EVERY row group must carry ts stats for the stats-derived max to be
-    # trusted: one stats-less group (legal for any parquet writer) makes
-    # it a lower bound only — the true max could hide there, the sentinel
-    # would trail it, and real windows would stay unsealed. Partial
-    # stats ⇒ scan the ts column instead (driver-side, still cheap).
-    stats_complete = True
-    for i, p in enumerate(parts):
-        dst = os.path.join(src, f"part-{i:05d}.parquet")
-        try:
-            os.link(p, dst)
-        except OSError:
-            shutil.copy2(p, dst)
-        f = pq.ParquetFile(p)
-        if schema is None:
-            schema = f.schema_arrow
-        if not stats_complete:
-            continue
-        ts_idx = f.schema_arrow.get_field_index("ts")
-        for rg in range(f.metadata.num_row_groups):
-            stats = f.metadata.row_group(rg).column(ts_idx).statistics
-            if stats is None or stats.max is None:
-                stats_complete = False
-                break
-            max_ts = stats.max if max_ts is None else max(max_ts, stats.max)
-    if not stats_complete or max_ts is None:
-        import pyarrow.dataset as ds
 
-        max_ts = (
-            ds.dataset(parts).to_table(columns=["ts"]).column("ts")
-            .to_pandas().max().to_pydatetime()
+    def write(src):
+        import datetime
+        import glob
+        import os
+        import shutil
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        parts = sorted(glob.glob(os.path.join(plain, "*.parquet")))
+        max_ts = None
+        schema = None
+        # EVERY row group must carry ts stats for the stats-derived max to be
+        # trusted: one stats-less group (legal for any parquet writer) makes
+        # it a lower bound only — the true max could hide there, the sentinel
+        # would trail it, and real windows would stay unsealed. Partial
+        # stats ⇒ scan the ts column instead (driver-side, still cheap).
+        stats_complete = True
+        for i, p in enumerate(parts):
+            dst = os.path.join(src, f"part-{i:05d}.parquet")
+            try:
+                os.link(p, dst)
+            except OSError:
+                shutil.copy2(p, dst)
+            f = pq.ParquetFile(p)
+            if schema is None:
+                schema = f.schema_arrow
+            if not stats_complete:
+                continue
+            ts_idx = f.schema_arrow.get_field_index("ts")
+            for rg in range(f.metadata.num_row_groups):
+                stats = f.metadata.row_group(rg).column(ts_idx).statistics
+                if stats is None or stats.max is None:
+                    stats_complete = False
+                    break
+                max_ts = stats.max if max_ts is None else max(max_ts, stats.max)
+        if not stats_complete or max_ts is None:
+            import pyarrow.dataset as ds
+
+            max_ts = (
+                ds.dataset(parts).to_table(columns=["ts"]).column("ts")
+                .to_pandas().max().to_pydatetime()
+            )
+        seal_ts = max_ts + datetime.timedelta(hours=3)  # > horizon (1h) + delay
+        sentinel_cols = {
+            "event_id": [-(10**9), -(10**9) + 1],
+            "ts": [seal_ts, seal_ts],
+            "user_id": [-1, -1],
+            "event_type": ["click", "purchase"],
+            "value": [0.0, 0.0],
+            "props": ["{}", "{}"],
+        }
+        sentinel = pa.table(
+            {name: pa.array(sentinel_cols[name], type=schema.field(name).type)
+             for name in schema.names}
         )
-    seal_ts = max_ts + datetime.timedelta(hours=3)  # > horizon (1h) + delay
-    sentinel_cols = {
-        "event_id": [-(10**9), -(10**9) + 1],
-        "ts": [seal_ts, seal_ts],
-        "user_id": [-1, -1],
-        "event_type": ["click", "purchase"],
-        "value": [0.0, 0.0],
-        "props": ["{}", "{}"],
-    }
-    sentinel = pa.table(
-        {name: pa.array(sentinel_cols[name], type=schema.field(name).type)
-         for name in schema.names}
-    )
-    pq.write_table(sentinel, os.path.join(src, "part-sentinel.parquet"))
-    _STAGED_SOURCES[key] = src
-    return src
+        pq.write_table(sentinel, os.path.join(src, "part-sentinel.parquet"))
+
+    return _stage(sf_dir, "events_src_sealed", write)
 
 
 @query(
@@ -3557,11 +3569,7 @@ def x_stream_stateful(spark, sf_dir):
     ('stateOperators': [], README.md:479)."""
     from .streaming.jobs import final_user_totals, stateful_user_totals_stream
 
-    events = _table(spark, sf_dir, "events")
-    src = _stage_events_parquet(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(events.schema).parquet(src).select("user_id", "value")
-    )
+    stream = _events_stream(spark, sf_dir).select("user_id", "value")
     name = "ubsp_stateful_totals"
     with _state_partitions(spark, 8):
         q = stateful_user_totals_stream(stream, query_name=name)
@@ -3599,12 +3607,7 @@ def x_stream_heavy_hitters(spark, sf_dir):
 
     k, phi = 100, 0.011
     events = _table(spark, sf_dir, "events")
-    src = _stage_events_parquet(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .parquet(src)
-        .select("event_type", "user_id")
-    )
+    stream = _events_stream(spark, sf_dir).select("event_type", "user_id")
     name = "ubsp_mg_heavy"
     with _state_partitions(spark, 8):
         q = mg_heavy_hitters_stream(stream, query_name=name, k=k)
@@ -3666,12 +3669,8 @@ def x_stream_dq(spark, sf_dir):
         ),
         "events_value_le_100": F.col("value") <= 100,
     }
-    events = _table(spark, sf_dir, "events")
-    src = _stage_events_parquet(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .parquet(src)
-        .select("event_id", "event_type", "value")
+    stream = _events_stream(spark, sf_dir).select(
+        "event_id", "event_type", "value"
     )
     name = "ubsp_stream_dq"
     with _state_partitions(spark, 8):
@@ -3690,11 +3689,7 @@ def x_stream_session(spark, sf_dir):
     the stateful event-time capability the reference lacks."""
     from .streaming.jobs import session_counts_stream
 
-    events = _table(spark, sf_dir, "events")
-    src = _stage_events_parquet(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(events.schema).parquet(src).select("user_id", "ts")
-    )
+    stream = _events_stream(spark, sf_dir).select("user_id", "ts")
     name = "ubsp_session_counts"
     with _state_partitions(spark, 8):
         q = session_counts_stream(stream, query_name=name)
@@ -3717,11 +3712,7 @@ def x_stream_static_join(spark, sf_dir):
     dimension, aggregated per market segment."""
     from .streaming.jobs import stream_static_join_stream
 
-    events = _table(spark, sf_dir, "events")
-    src = _stage_events_parquet(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(events.schema).parquet(src).select("user_id", "value")
-    )
+    stream = _events_stream(spark, sf_dir).select("user_id", "value")
     name = "ubsp_stream_static_join"
     with _state_partitions(spark, 8):
         q = stream_static_join_stream(stream, _table(spark, sf_dir, "customer"), name)
@@ -3814,29 +3805,49 @@ def ref_golden_distinct(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _stage_tables(spark, sf_dir, tables, write) -> None:
+    """Register ``tables`` in this session's catalog by running ``write()``,
+    unless they already are registered from ``sf_dir``'s current data. The
+    record of that is a table property: it lives and dies with the
+    session's catalog entry, so a fresh session, a DROP or regenerated
+    testdata all re-stage, and the table NAMES being global while sf_dirs
+    alternate serves no stale data."""
+    import os as _os
+
+    tag = _digest((_os.path.abspath(sf_dir), _source_print(sf_dir)), 12)
+    if all(
+        spark.catalog.tableExists(t)
+        and spark.sql(f"SHOW TBLPROPERTIES {t} ('ubsp.source')").first()["value"]
+        == tag
+        for t in tables
+    ):
+        return
+    write()
+    for t in tables:
+        spark.sql(f"ALTER TABLE {t} SET TBLPROPERTIES ('ubsp.source' = '{tag}')")
+
+
 def _stage_catalog_table(spark, sf_dir):
     """External-table DDL round trip — validated events written as
     partitioned parquet, an EXTERNAL table created over the directory
-    (README.md:394-411 contract). Memoized per sf_dir with a catalog probe
-    (same session-vs-process rationale as _stage_bucketed) and pre-warmed
-    by the bench prepare pass: the DDL is fixture layout work a deployment
-    does once, not per-query cost."""
+    (README.md:394-411 contract). Registered once per session and sf_dir
+    (:func:`_stage_tables`) and pre-warmed by the bench prepare pass: the
+    DDL is fixture layout work a deployment does once, not per-query
+    cost."""
     from .catalog import create_external_parquet_table
 
-    key = "catalog_table_current_sf"
-    if _STAGED_SOURCES.get(key) == sf_dir and spark.catalog.tableExists(
-        "valid_events_ext"
-    ):
-        return
-    out = _scratch_dir("ubsp_catalog_")
-    # repartition by the partition column first: one file per partition value
-    # instead of (tasks × values) small files — the standard partitioned-sink
-    # layout fix, and the file-listing cost dominates this query otherwise
-    _valid(spark, sf_dir).repartition("event_type").write.mode("overwrite").partitionBy(
-        "event_type"
-    ).parquet(out)
-    create_external_parquet_table(spark, "valid_events_ext", out, repair=True)
-    _STAGED_SOURCES[key] = sf_dir
+    def write():
+        out = _scratch_dir("ubsp_catalog_")
+        # repartition by the partition column first: one file per partition
+        # value instead of (tasks × values) small files — the standard
+        # partitioned-sink layout fix, and the file-listing cost dominates
+        # this query otherwise
+        _valid(spark, sf_dir).repartition("event_type").write.mode(
+            "overwrite"
+        ).partitionBy("event_type").parquet(out)
+        create_external_parquet_table(spark, "valid_events_ext", out, repair=True)
+
+    _stage_tables(spark, sf_dir, ["valid_events_ext"], write)
 
 
 @query(
@@ -4287,36 +4298,6 @@ def _stage_warc(spark, sf_dir, variant: str):
     return read("archives")
 
 
-def _stage_pdf_media(spark, sf_dir, modern: bool):
-    """Staged PDF fixture (r14): the per-doc build+encrypt cycle is
-    fixture work; the certified operator — xref/ObjStm walk, stream
-    decode, DECRYPTION, text assembly — still runs in full on every
-    read of the staged bytes."""
-    name = "pdf_modern" if modern else "pdf_classic"
-
-    def build():
-        from .operators.pdf import synth_pdf_media, synth_pdf_modern_media
-
-        synth = synth_pdf_modern_media if modern else synth_pdf_media
-        return {"media": synth(_lake_docs(spark, sf_dir, None))}
-
-    return _stage_lake_frames(spark, sf_dir, name, build)("media")
-
-
-def _stage_tiff_media(spark, sf_dir):
-    """Staged TIFF variant fixture for x_multimodal_tiff (r14): the
-    five-encoding build is fixture work; the decode pass is the
-    certified operator."""
-    from .operators.multimodal import synth_tiff_variant_media
-
-    def build():
-        return {
-            "media": synth_tiff_variant_media(_lake_docs(spark, sf_dir, 0))
-        }
-
-    return _stage_lake_frames(spark, sf_dir, "tiff_media", build)("media")
-
-
 def _stage_wds_shards(spark, sf_dir):
     """Staged WebDataset shard fixture, shared by the three wds
     queries (r14 — same honesty move as the lakehouse staging: the
@@ -4328,9 +4309,7 @@ def _stage_wds_shards(spark, sf_dir):
 
     from .operators.webdataset import synth_webdataset_shards
 
-    key = ("lake", "wds_shards", sf_dir)
-    if key not in _STAGED_SOURCES:
-        base = _scratch_dir("ubsp_wds_shards_")
+    def write(base):
         docs = _lake_docs(spark, sf_dir, None)
         synth_webdataset_shards(docs).write.mode("overwrite").parquet(
             _os.path.join(base, "shards")
@@ -4343,8 +4322,8 @@ def _stage_wds_shards(spark, sf_dir):
         ).write.mode("overwrite").parquet(
             _os.path.join(base, "shards_stream")
         )
-        _STAGED_SOURCES[key] = base
-    base = _STAGED_SOURCES[key]
+
+    base = _stage(sf_dir, "wds_shards", write)
     return (
         spark.read.parquet(_os.path.join(base, "shards")),
         _os.path.join(base, "shards_stream"),
@@ -4568,8 +4547,8 @@ def x_stream_jsonl(spark, sf_dir):
     from .operators.webdataset import jsonl_shard_lines, synth_jsonl_shards
     from .streaming.jobs import landing_stream_source, parquet_sink
 
-    src_dir = _staged_media_dir(
-        spark, sf_dir, "jsonl_stream_src", synth_jsonl_shards
+    src_dir = _staged_media(
+        spark, sf_dir, "jsonl_stream_src", synth_jsonl_shards, path=True
     )
     out = _scratch_dir("ubsp_jsonl_out_")
     ckpt = _scratch_dir("ubsp_jsonl_ckpt_")
@@ -4618,14 +4597,14 @@ def x_pdf_text(spark, sf_dir):
     count, stream decode and exact text round-trip including non-Latin
     scripts. Encrypted/ObjStm/CID-font PDFs are the documented seam
     (quarantine or omission, never mojibake — operators/pdf.py)."""
-    from .operators.pdf import pdf_text
+    from .operators.pdf import pdf_text, synth_pdf_media
 
     # staged PDF bytes (r14; subsumes the r13 repartition fix): at
     # 100 TB the PDFs arrive as a many-file binary scan — the staged
     # parquet is that stand-in; walk + decrypt still run per read
-    return pdf_text(_stage_pdf_media(spark, sf_dir, modern=False)).drop(
-        "parse_error"
-    )
+    return pdf_text(
+        _staged_media(spark, sf_dir, "pdf_classic", synth_pdf_media)
+    ).drop("parse_error")
 
 
 _NPY_SQL = (
@@ -5028,8 +5007,8 @@ def x_stream_avro(spark, sf_dir):
     from .operators.avro import avro_records, synth_avro_media
     from .streaming.jobs import landing_stream_source, parquet_sink
 
-    src = _staged_media_dir(
-        spark, sf_dir, "avro_stream_src", synth_avro_media
+    src = _staged_media(
+        spark, sf_dir, "avro_stream_src", synth_avro_media, path=True
     )
     out = _scratch_dir("ubsp_avro_out_")
     ckpt = _scratch_dir("ubsp_avro_ckpt_")
@@ -5817,12 +5796,12 @@ def x_pdf_modern(spark, sf_dir):
     offset walking, predictor undo and spec-correct content
     concatenation; pdf.py documents the remaining seam (encryption,
     non-Flate filters, CID fonts)."""
-    from .operators.pdf import pdf_text
+    from .operators.pdf import pdf_text, synth_pdf_modern_media
 
     # staged PDF bytes (r14), cf. x_pdf_text
-    return pdf_text(_stage_pdf_media(spark, sf_dir, modern=True)).drop(
-        "parse_error"
-    )
+    return pdf_text(
+        _staged_media(spark, sf_dir, "pdf_modern", synth_pdf_modern_media)
+    ).drop("parse_error")
 
 
 _SUBTITLE_SQL = (
@@ -6499,8 +6478,8 @@ def x_stream_demux(spark, sf_dir):
     from .operators.demux import mp4_sample_ranges, synth_corrupt_mp4_media
     from .streaming.jobs import landing_stream_source, parquet_sink
 
-    src = _staged_media_dir(
-        spark, sf_dir, "demux_stream_src", synth_corrupt_mp4_media
+    src = _staged_media(
+        spark, sf_dir, "demux_stream_src", synth_corrupt_mp4_media, path=True
     )
     out = _scratch_dir("ubsp_demux_out_")
     ckpt = _scratch_dir("ubsp_demux_ckpt_")
@@ -6761,11 +6740,13 @@ def x_multimodal_tiff(spark, sf_dir):
         StructType,
     )
 
-    from .operators.multimodal import decode_real
+    from .operators.multimodal import decode_real, synth_tiff_variant_media
 
     # staged TIFF variants (r14): the five-encoding BUILD is fixture;
     # the certified operator is the decode pass below
-    media = _stage_tiff_media(spark, sf_dir)
+    media = _staged_media(
+        spark, sf_dir, "tiff_media", synth_tiff_variant_media, mod=0
+    )
 
     def _dec(batches):
         import pandas as pd
@@ -7493,15 +7474,12 @@ def x_stream_stream_join(spark, sf_dir):
     tests/test_streaming.py::test_bucketed_stream_stream_join_equals_plain."""
     from .streaming.jobs import stream_stream_join_stream
 
-    events = _table(spark, sf_dir, "events")
-    src = _stage_events_parquet(spark, sf_dir)
     from pyspark.sql import functions as F
 
-    def _stream():
-        return spark.readStream.schema(events.schema).parquet(src)
-
-    clicks = _stream().filter(F.col("event_type") == "click")
-    purchases = _stream().filter(F.col("event_type") == "purchase")
+    clicks = _events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
+    purchases = _events_stream(spark, sf_dir).filter(
+        F.col("event_type") == "purchase"
+    )
     name = "ubsp_stream_stream_join"
     with _state_partitions(spark, 8):
         q = stream_stream_join_stream(clicks, purchases, name)
@@ -7602,34 +7580,32 @@ def _stage_format(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     epoch millis (format-neutral, no tz/precision ambiguity)."""
     from pyspark.sql import functions as F
 
-    key = (fmt, sf_dir)
-    if key in _STAGED_SOURCES:
-        return _STAGED_SOURCES[key]
-    src = _scratch_dir(f"ubsp_{fmt}_src_")
-    flat = (
-        _table(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-            # timestampdiff, not unix_millis: ts is TIMESTAMP_NTZ (unix_millis
-            # rejects NTZ) and the diff is pure wall-clock arithmetic.
-            F.expr(
-                "timestampdiff(MILLISECOND,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-            ).alias("ts_ms"),
+    def write(src):
+        flat = (
+            _table(spark, sf_dir, "events")
+            .select(
+                "event_id",
+                "user_id",
+                "event_type",
+                F.round(F.col("value") * 100).cast("long").alias("cents"),
+                # timestampdiff, not unix_millis: ts is TIMESTAMP_NTZ
+                # (unix_millis rejects NTZ) and the diff is pure
+                # wall-clock arithmetic.
+                F.expr(
+                    "timestampdiff(MILLISECOND,"
+                    " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+                ).alias("ts_ms"),
+            )
+            .coalesce(4)
         )
-        .coalesce(4)
-    )
-    if fmt == "csv":
-        flat.write.mode("overwrite").option("header", "true").csv(src)
-    elif fmt == "orc":
-        flat.write.mode("overwrite").orc(src)
-    else:
-        flat.write.mode("overwrite").json(src)
-    _STAGED_SOURCES[key] = src
-    return src
+        if fmt == "csv":
+            flat.write.mode("overwrite").option("header", "true").csv(src)
+        elif fmt == "orc":
+            flat.write.mode("overwrite").orc(src)
+        else:
+            flat.write.mode("overwrite").json(src)
+
+    return _stage(sf_dir, f"events_{fmt}", write)
 
 
 _FMT_ORACLE = (
@@ -7691,37 +7667,23 @@ def ref_source_json(spark, sf_dir):
 
 def _stage_bucketed(spark, sf_dir):
     """Bucketed CTAS for both join sides — fixture setup (the layout a 100 TB
-    deployment maintains continuously), memoized per sf_dir and pre-warmed by
-    bench.py's prepare pass so the timed query is the join, not the CTAS.
-
-    The memo alone is not sufficient: it is process-global while the
-    tables are SESSION state (a later session in the same process would
-    see 'done' with an empty catalog), and the table NAMES are global
-    while the memo key is per-sf_dir (alternating sf_dirs would serve
-    stale data) — so the memo records which sf_dir is currently staged
-    and the catalog is probed too."""
+    deployment maintains continuously), registered once per session and
+    sf_dir (:func:`_stage_tables`) and pre-warmed by bench.py's prepare
+    pass so the timed query is the join, not the CTAS. Each staging writes
+    a fresh scratch directory (see write_bucketed_table)."""
     from .sinks import write_bucketed_table
 
-    key = "bucketed_current_sf"
-    if (
-        _STAGED_SOURCES.get(key) == sf_dir
-        and spark.catalog.tableExists("bq_orders")
-        and spark.catalog.tableExists("bq_customer")
-    ):
-        return
-    write_bucketed_table(
-        spark, _table(spark, sf_dir, "orders"), "bq_orders", "o_custkey", 8
-    )
-    write_bucketed_table(
-        spark,
-        _table(spark, sf_dir, "customer").withColumnRenamed(
-            "c_custkey", "o_custkey"
-        ),
-        "bq_customer",
-        "o_custkey",
-        8,
-    )
-    _STAGED_SOURCES[key] = sf_dir
+    def write():
+        customer = _table(spark, sf_dir, "customer")
+        for name, df in (
+            ("bq_orders", _table(spark, sf_dir, "orders")),
+            ("bq_customer", customer.withColumnRenamed("c_custkey", "o_custkey")),
+        ):
+            write_bucketed_table(
+                spark, df, name, _scratch_dir("ubsp_bucketed_"), "o_custkey", 8
+            )
+
+    _stage_tables(spark, sf_dir, ["bq_orders", "bq_customer"], write)
 
 
 @query(
@@ -7816,13 +7778,7 @@ def x_stream_upsert(spark, sf_dir):
 
     from .operators.upsert import read_snapshot, upsert_stream
 
-    events = _table(spark, sf_dir, "events")
-    src = _stage_events_parquet(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = _events_stream(spark, sf_dir, maxFilesPerTrigger="1")
     snap = _scratch_dir("ubsp_upsert_snap_")
     ckpt = _scratch_dir("ubsp_upsert_ckpt_")
     with _state_partitions(spark, 8):
@@ -8124,11 +8080,10 @@ def x_stream_stream_left_join(spark, sf_dir):
 
     from .streaming.jobs import stream_stream_left_join_stream
 
-    events = _table(spark, sf_dir, "events")
     src = _stage_events_parquet_sealed(spark, sf_dir)
 
     def _stream():
-        return spark.readStream.schema(events.schema).parquet(src)
+        return _events_stream(spark, sf_dir, src)
 
     out = _scratch_dir("ubsp_ssloj_out_")
     ckpt = _scratch_dir("ubsp_ssloj_ckpt_")
@@ -9123,17 +9078,20 @@ def x_layout_compaction(spark, sf_dir):
 
     from .sinks import compact_parquet_dir
 
-    key = ("compacted", sf_dir)
-    if key not in _STAGED_SOURCES:
-        frag = _scratch_dir("ubsp_frag_")
-        out = _scratch_dir("ubsp_compacted_")
+    import os
+    import shutil
+
+    def write(tree):
+        frag = os.path.join(tree, "frag")
         _table(spark, sf_dir, "events").repartition(64).write.mode(
             "overwrite"
         ).parquet(frag)
-        compact_parquet_dir(spark, frag, out)
-        _STAGED_SOURCES[key] = out
+        compact_parquet_dir(spark, frag, os.path.join(tree, "compacted"))
+        shutil.rmtree(frag)
+
+    tree = _stage(sf_dir, "events_compacted", write)
     return (
-        spark.read.parquet(_STAGED_SOURCES[key])
+        spark.read.parquet(os.path.join(tree, "compacted"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -9500,9 +9458,6 @@ def prepare_staged(spark: SparkSession, sf_dir: str) -> None:
     _stage_iceberg_v2(spark, sf_dir)
     _stage_delta_checkpoint(spark, sf_dir)
     _stage_wds_shards(spark, sf_dir)
-    _stage_tiff_media(spark, sf_dir)
-    _stage_pdf_media(spark, sf_dir, modern=False)
-    _stage_pdf_media(spark, sf_dir, modern=True)
     for variant in ("plain", "html", "http", "crawl", "corrupt"):
         _stage_warc(spark, sf_dir, variant)
     _stage_r15_media(spark, sf_dir)

@@ -17,10 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-# name -> last staged location, so re-staging can retire the previous
-# directory after its replacement is live (see write_bucketed_table)
-_BUCKETED_LOCATIONS: dict[str, str] = {}
-
 
 def write_partitioned(
     df: DataFrame,
@@ -39,79 +35,32 @@ def write_bucketed_table(
     spark: SparkSession,
     df: DataFrame,
     name: str,
+    path: str,
     bucket_col: str,
     num_buckets: int = 8,
 ) -> None:
-    """Bucketed + sorted table: joins/aggs on bucket_col between
+    """Bucketed + sorted table at ``path``: joins/aggs on bucket_col between
     co-bucketed tables need no Exchange (asserted in tests/test_sinks.py).
 
-    The table location is pinned under /tmp explicitly rather than left to
-    ``spark.sql.warehouse.dir`` — an externally-built session (the
-    correctness driver's) defaults that conf to ./spark-warehouse in its
-    CWD, and the conf is static, so an explicit path is the only reliable
-    way to keep bucketed staging out of the working tree.
+    The location is explicit rather than left to ``spark.sql.warehouse.dir``
+    — an externally-built session (the correctness driver's) defaults that
+    static conf to ./spark-warehouse in its CWD. ``path`` must be empty or
+    absent (a non-empty stale location fails with LOCATION_ALREADY_EXISTS).
 
-    Each staging writes to a FRESH unique directory (immutable-layout
+    Re-staging a table should use a FRESH directory (immutable-layout
     pattern) instead of rewriting a fixed path: Spark's session-shared
     file-status cache is keyed by path, so delete-then-rewrite at the same
     location can serve a stale part-file listing to the next scan
     (observed as FileNotFoundException on a deleted part file when a
-    query re-stages after a catalog drop). The previous location is
-    removed only AFTER the replacement table exists — and so is every
-    OTHER sibling directory staged for this table name whose OWNER
-    PROCESS IS GONE: ``_BUCKETED_LOCATIONS`` is process-local, so
-    without the sweep each new process would stage to a fresh dir and
-    only ever retire its own, accumulating crashed runs' orphans under
-    $TMPDIR/ubsp-bucketed/ unboundedly. The owning pid is encoded in
-    the directory name and liveness-checked, because a blanket
-    same-name sweep would delete the LIVE staging of a concurrent
-    session (parallel pytest workers, a bench beside a test run) whose
-    in-memory catalog still references it — only dirs from this process
-    (our catalog entry was just replaced) or from dead pids (their
-    catalogs died with them) can be unreferenced, and only those are
-    removed."""
-    import os
-    import shutil
-    import tempfile
-
+    query re-stages after a catalog drop)."""
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    base = os.path.join(tempfile.gettempdir(), "ubsp-bucketed")
-    os.makedirs(base, exist_ok=True)
-    # mkdtemp yields an empty dir, which saveAsTable accepts (only a
-    # non-empty stale location fails with LOCATION_ALREADY_EXISTS)
-    prefix = f"{name.lower()}-"
-    loc = tempfile.mkdtemp(prefix=f"{prefix}{os.getpid()}-", dir=base)
     (
         df.write.mode("overwrite")
         .bucketBy(num_buckets, bucket_col)
         .sortBy(bucket_col)
-        .option("path", loc)
+        .option("path", path)
         .saveAsTable(name)
     )
-    _BUCKETED_LOCATIONS[name] = loc
-    for entry in os.listdir(base):
-        sib = os.path.join(base, entry)
-        if not entry.startswith(prefix) or sib == loc:
-            continue
-        owner = entry[len(prefix):].split("-", 1)[0]
-        if owner.isdigit() and int(owner) != os.getpid():
-            try:
-                os.kill(int(owner), 0)
-                continue  # owner alive — its catalog may reference this dir
-            except ProcessLookupError:
-                pass  # owner dead — unreferenced by construction
-            except PermissionError:
-                continue  # alive under another uid — leave it
-        elif not owner.isdigit():
-            # no owner pid encoded (pre-pid naming during a mixed-version
-            # rollout): liveness is UNKNOWABLE — mtime is set once at the
-            # write, so even a generous age gate would delete the staging
-            # of a live old-version session that has been reading it all
-            # day. Never delete what might be referenced; pre-pid orphans
-            # stop accumulating once every session uses pid naming, and
-            # the bounded leftover is an operator `rm` away.
-            continue
-        shutil.rmtree(sib, ignore_errors=True)
 
 
 def compact_parquet_dir(
