@@ -86,7 +86,8 @@ def main() -> None:
     except ValueError:
         sf = 0.0  # non-sf<N> directory name: still bench, report sf=0
 
-    from user_behavior_spark_pipeline_spark.registry import QUERIES, prepare_staged
+    from user_behavior_spark_pipeline_spark.fixtures import prepare_staged
+    from user_behavior_spark_pipeline_spark.registry import QUERIES
     from user_behavior_spark_pipeline_spark.session import (
         codegen_compiles,
         get_spark,

@@ -123,8 +123,8 @@ def test_registration_order_is_pinned():
 
 
 def test_scratch_dirs_are_removed_at_exit(tmp_path):
-    """Stream sinks, checkpoints and staged sources live under one
-    per-process root that the registry removes at interpreter exit."""
+    """Stream sinks, checkpoints and other run outputs live under one
+    per-process root that is removed at interpreter exit."""
     import os
     import subprocess
     import sys
@@ -132,7 +132,7 @@ def test_scratch_dirs_are_removed_at_exit(tmp_path):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
         "import os\n"
-        "from user_behavior_spark_pipeline_spark.registry import _scratch_dir\n"
+        "from user_behavior_spark_pipeline_spark.fixtures import _scratch_dir\n"
         "a = _scratch_dir('ubsp_a_')\n"
         "b = _scratch_dir('ubsp_b_')\n"
         "assert a != b and os.path.dirname(a) == os.path.dirname(b)\n"
@@ -151,6 +151,28 @@ def test_scratch_dirs_are_removed_at_exit(tmp_path):
     assert [p for p in os.listdir(tmp_path) if p.startswith("ubsp_")] == []
 
 
+def test_temp_dirs_are_made_only_by_fixtures():
+    """Where staged inputs and run scratch live is decided in one module:
+    no other package module makes or locates a temp dir, or touches the
+    staging memo."""
+    import os
+    import re
+
+    import user_behavior_spark_pipeline_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    hits = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == os.path.join(root, "fixtures.py"):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                if re.search(r"mkdtemp|gettempdir|_STAGED_SOURCES", fh.read()):
+                    hits.append(os.path.relpath(path, root))
+    assert hits == []
+
+
 def test_regenerated_source_leaves_one_staged_tree(spark, tmp_path, monkeypatch):
     """Staging a lake fixture again after ``documents.parquet`` changes
     publishes a new tree and prunes the one staged from the old file;
@@ -158,7 +180,7 @@ def test_regenerated_source_leaves_one_staged_tree(spark, tmp_path, monkeypatch)
     import os
     import tempfile
 
-    from user_behavior_spark_pipeline_spark.registry import _stage_lake_frames
+    from user_behavior_spark_pipeline_spark.fixtures import _stage_lake_frames
 
     tmp = tmp_path / "tmp"
     tmp.mkdir()
@@ -200,7 +222,7 @@ def test_regenerated_events_restage_stream_sources(
     import shutil
     import tempfile
 
-    from user_behavior_spark_pipeline_spark.registry import (
+    from user_behavior_spark_pipeline_spark.fixtures import (
         _stage_events_parquet,
         _stage_stream_source,
     )

@@ -347,10 +347,8 @@ PLAN_LINT_MARKERS = (
 
 
 def test_registry_plans_free_of_scale_antipatterns(spark, sf_dir):
-    from user_behavior_spark_pipeline_spark.registry import (
-        QUERIES,
-        prepare_staged,
-    )
+    from user_behavior_spark_pipeline_spark.fixtures import prepare_staged
+    from user_behavior_spark_pipeline_spark.registry import QUERIES
 
     prepare_staged(spark, sf_dir)
     violations = {}
@@ -787,7 +785,7 @@ def test_staged_tree_key_tracks_source_data(spark, tmp_path, sf_dir):
     import shutil
     import time
 
-    from user_behavior_spark_pipeline_spark import registry as R
+    from user_behavior_spark_pipeline_spark import fixtures as R
 
     src = tmp_path / "sfX"
     src.mkdir()

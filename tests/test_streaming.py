@@ -464,7 +464,7 @@ def test_left_outer_bucketed_hot_key_nulls_exactly_once(spark, tmp_path):
         )
     # sentinel pair far in the future seals both watermarks so every
     # outer-null row flushes under availableNow (same trick as
-    # registry._stage_events_parquet_sealed)
+    # fixtures._stage_events_parquet_sealed)
     seal = base + datetime.timedelta(days=30)
     clicks.append((-1, -1, seal, 0.0))
     purchases.append((-2, -1, seal, 0.0))

@@ -49,11 +49,9 @@ def main() -> int:
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.path.join(TESTDATA, "sf0.1")
 
+    from user_behavior_spark_pipeline_spark.fixtures import prepare_staged
     from user_behavior_spark_pipeline_spark.materialize import release_shared
-    from user_behavior_spark_pipeline_spark.registry import (
-        QUERIES,
-        prepare_staged,
-    )
+    from user_behavior_spark_pipeline_spark.registry import QUERIES
     from user_behavior_spark_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="dump_plans")
