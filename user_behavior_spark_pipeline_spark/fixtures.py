@@ -1,11 +1,12 @@
 """Query inputs: the source tables, staged fixtures and per-run scratch.
 
 One rule holds here: derived INPUTS (lake and media fixtures, stream
-sources, format doubles, catalog tables) are staged, and run OUTPUTS
-(stream sinks, checkpoints) are scratch. Every staged tree goes through
-one seam, :func:`_stage`; every scratch directory lives under one
-per-process root, :func:`_scratch_dir`. ``prepare_staged`` pre-warms all
-of them so a benchmark times query execution, not fixture setup.
+sources, format doubles) are staged, and run OUTPUTS (stream sinks,
+checkpoints, the directories behind session catalog tables) are scratch.
+Every staged tree goes through one seam, :func:`_stage`; every scratch
+directory lives under one per-process root, :func:`_scratch_dir`.
+``prepare_staged`` pre-warms all of them so a benchmark times query
+execution, not fixture setup.
 
 This module imports the registry only inside functions (the registry
 imports it at the top).
@@ -38,9 +39,10 @@ _SCRATCH_ROOT: str | None = None
 
 
 def _scratch_dir(prefix: str) -> str:
-    """A new directory for a stream sink, checkpoint or staged source.
-    All of them live under one per-process root ``ubsp_run_<pid>_*`` in
-    the temp dir, made on first use and removed at interpreter exit."""
+    """A new directory for a run output: a stream sink, a checkpoint or
+    a session catalog table's data. All of them live under one
+    per-process root ``ubsp_run_<pid>_*`` in the temp dir, made on first
+    use and removed at interpreter exit."""
     import atexit
     import os
     import shutil
@@ -454,23 +456,23 @@ def _stage_events_parquet_sealed(spark: SparkSession, sf_dir: str) -> str:
 def _stage_tables(spark, sf_dir, tables, write) -> None:
     """Register ``tables`` in this session's catalog by running ``write()``,
     unless they already are registered from ``sf_dir``'s current data. The
-    record of that is a table property: it lives and dies with the
-    session's catalog entry, so a fresh session, a DROP or regenerated
-    testdata all re-stage, and the table NAMES being global while sf_dirs
-    alternate serves no stale data."""
+    record of that is the table's comment, a hash of sf_dir and its source
+    print: it lives and dies with the catalog entry, so a fresh session, a
+    DROP or regenerated testdata all re-stage, and the table NAMES being
+    global while sf_dirs alternate serves no stale data. (A comment is read
+    through ``spark.catalog`` in milliseconds; a table property needs a
+    SQL command per read.)"""
     import os as _os
 
     tag = _digest((_os.path.abspath(sf_dir), _source_print(sf_dir)), 12)
     if all(
-        spark.catalog.tableExists(t)
-        and spark.sql(f"SHOW TBLPROPERTIES {t} ('ubsp.source')").first()["value"]
-        == tag
+        spark.catalog.tableExists(t) and spark.catalog.getTable(t).description == tag
         for t in tables
     ):
         return
     write()
     for t in tables:
-        spark.sql(f"ALTER TABLE {t} SET TBLPROPERTIES ('ubsp.source' = '{tag}')")
+        spark.sql(f"COMMENT ON TABLE {t} IS '{tag}'")
 
 
 def _stage_catalog_table(spark, sf_dir):
