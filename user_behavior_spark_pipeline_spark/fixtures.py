@@ -629,10 +629,11 @@ def _stage_bucketed(spark, sf_dir):
 
 
 def prepare_staged(spark: SparkSession, sf_dir: str) -> None:
-    """Pre-warm every memoized fixture (staged stream sources, format
-    doubles, bucketed CTAS) so a benchmark times query execution, not
-    fixture setup. Queries stay self-sufficient — each stages lazily on
-    first use — this just moves the cost outside a caller's timed region."""
+    """Pre-warm every staged fixture (stream sources, format doubles,
+    lake and media trees) and catalog table (bucketed CTAS, external
+    table) so a benchmark times query execution, not fixture setup.
+    Queries stay self-sufficient — each stages lazily on first use —
+    this just moves the cost outside a caller's timed region."""
     _stage_stream_source(spark, sf_dir)
     _stage_stream_source(spark, sf_dir, duplicate=True)
     _stage_events_parquet(spark, sf_dir)

@@ -3400,8 +3400,8 @@ def ref_golden_distinct(spark, sf_dir):
 )
 def ref_catalog_table(spark, sf_dir):
     """DDL round trip queried back through spark.sql by table name; the
-    write + CREATE EXTERNAL TABLE staging is memoized per sf_dir (see
-    _stage_catalog_table)."""
+    write + CREATE EXTERNAL TABLE staging runs once per session and sf_dir
+    (see fixtures._stage_catalog_table)."""
     _stage_catalog_table(spark, sf_dir)
     return spark.sql(
         "SELECT event_type, COUNT(*) AS num_events FROM valid_events_ext GROUP BY 1"
