@@ -42,17 +42,42 @@ the driver contract fields are unchanged).
 
 Layer counters go to BENCH_DETAIL.json only: each query's ``spread`` entry
 holds ``codegen_compiles``, the Janino compiles of each sample (aligned with
-``all``), read just before and just after the timed window."""
+``all``), read just before and just after the timed window. A query whose
+samples ran micro-batches (the ``x_stream_*`` family, whose streams run
+inside the builder) also holds ``stream_batches`` and ``stream_phase_ms``:
+per sample, the progress events one ``StreamingQueryListener`` saw and
+their ``durationMs`` summed per phase (addBatch, walCommit, ...), read
+after the timer stops, once the listener bus has drained."""
 
 from __future__ import annotations
 
+import collections
 import json
 import os
 import statistics
 import sys
 import time
 
+from pyspark.sql.streaming import StreamingQueryListener
+
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+
+class _ProgressLog(StreamingQueryListener):
+    """Keeps the ``durationMs`` map of every micro-batch progress event
+    the session's streams post, in arrival order."""
+
+    def __init__(self) -> None:
+        self.durations: list[dict[str, int]] = []
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        self.durations.append(dict(event.progress.durationMs))
+
+    def onQueryTerminated(self, event) -> None:
+        pass
 
 
 def main() -> None:
@@ -95,6 +120,9 @@ def main() -> None:
 
     spark = get_spark(app_name="ubsp-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    progress = _ProgressLog()
+    spark.streams.addListener(progress)
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
 
     # warm the JVM/codegen/file-index paths so the first timed query isn't
     # charged for session bootstrap
@@ -130,6 +158,10 @@ def main() -> None:
     # Janino compiles per sample, aligned with samples[name]: the
     # generated-code layer's counter, read outside the timed window
     compiles: dict[str, list[int]] = {n: [] for n in bench_names}
+    # micro-batches per sample and their {phase: summed durationMs},
+    # aligned with samples[name]; read after the timed window
+    batches: dict[str, list[int]] = {n: [] for n in bench_names}
+    phase_ms: dict[str, list[dict[str, int]]] = {n: [] for n in bench_names}
     bench_start = time.perf_counter()
 
     def _sample(name: str) -> None:
@@ -143,6 +175,10 @@ def main() -> None:
         if not samples[name] or statistics.median(samples[name]) >= 1.0:
             spark._jvm.System.gc()
         compiled = codegen_compiles(spark)
+        # drain first: progress from earlier streams (the fixture
+        # warm-ups) must not land in this sample
+        listener_bus.waitUntilEmpty()
+        seen = len(progress.durations)
         t0 = time.perf_counter()
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
@@ -163,6 +199,13 @@ def main() -> None:
         release_keyed()
         samples[name].append(round(time.perf_counter() - t0, 3))
         compiles[name].append(codegen_compiles(spark) - compiled)
+        listener_bus.waitUntilEmpty()
+        ran = progress.durations[seen:]
+        summed = collections.Counter()
+        for durations in ran:
+            summed.update(durations)
+        batches[name].append(len(ran))
+        phase_ms[name].append(dict(summed))
 
     # pass 1: every query gets its (mandatory) first sample
     for name in bench_names:
@@ -227,6 +270,10 @@ def main() -> None:
         for n, t in samples.items()
         if t
     }
+    for n in spread:
+        if any(batches[n]):
+            spread[n]["stream_batches"] = batches[n]
+            spread[n]["stream_phase_ms"] = phase_ms[n]
     runs_min = min(len(t) for t in samples.values())
     runs_max = max(len(t) for t in samples.values())
     total = round(sum(timings.values()), 3)

@@ -147,6 +147,42 @@ def test_sacrificial_decoder_bitflip_corpus_never_escapes():
     assert outcomes["ok"] + outcomes["err"] == 250
 
 
+def test_worker_decoder_child_is_reaped_at_exit(tmp_path):
+    """A process that built the worker-lifetime decoder takes its child
+    down when it exits. The child's stdin is held open by a sleeper, so
+    it cannot leave on EOF: only the exit hook ends it."""
+    import os
+    import subprocess
+    import sys
+    import time
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import subprocess, sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from user_behavior_spark_pipeline_spark.operators.arrow_ipc import "
+        "_worker_decoder, synth_arrow_bytes\n"
+        "d = _worker_decoder()\n"
+        "rows, err = d.decode(synth_arrow_bytes(1))\n"
+        "assert err is None and rows\n"
+        "fd = d._proc.stdin.fileno()\n"
+        "s = subprocess.Popen(['sleep', '30'], pass_fds=(fd,))\n"
+        "print(d._proc.pid, s.pid)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        timeout=120, check=True,
+    )
+    child, sleeper = map(int, out.stdout.split())
+    try:
+        deadline = time.monotonic() + 10
+        while os.path.exists(f"/proc/{child}") and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert not os.path.exists(f"/proc/{child}")
+    finally:
+        os.kill(sleeper, 9)
+
+
 def test_arrow_ipc_records_decode_untrusted_spark(spark):
     """The Spark-level guarded path: valid buffers explode identically
     to the trusted path; a pinned abort-reproducing buffer quarantines

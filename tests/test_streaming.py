@@ -122,6 +122,53 @@ def test_default_trigger_stream_lands_late_file_once(spark, records, tmp_path):
     }
 
 
+def _checkpoint_file_manager(spark, path: str):
+    """The manager a stream's logs get for ``path``: built the way every
+    offsets, commits, source, sink-metadata and state-store log builds
+    it, from the session's Hadoop conf."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    return cfm.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(path), conf)
+
+
+def test_session_pins_filesystem_checkpoint_manager(spark, tmp_path):
+    """Stream logs are renamed through Hadoop's FileSystem API, whose
+    local rename forks no ``readlink`` (FileContext's does, four times
+    per file without libhadoop)."""
+    fm = _checkpoint_file_manager(spark, str(tmp_path))
+    assert fm.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+def test_checkpoint_log_entry_is_never_overwritten(spark, tmp_path):
+    """The guarantee the offsets and commits logs rest on: a second
+    atomic write of a logged batch fails on close and leaves the logged
+    bytes as they were; a cancelled write leaves no file behind."""
+    from py4j.protocol import Py4JJavaError
+
+    fm = _checkpoint_file_manager(spark, str(tmp_path))
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    first = fm.createAtomic(Path(str(tmp_path / "0")), False)
+    first.write(bytearray(b"batch 0 offsets"))
+    first.close()
+
+    again = fm.createAtomic(Path(str(tmp_path / "0")), False)
+    again.write(bytearray(b"a rewrite"))
+    with pytest.raises(Py4JJavaError) as err:
+        again.close()
+    # Spark's subclass of Hadoop's FileAlreadyExistsException
+    assert err.value.java_exception.getClass().getName().endswith(
+        "FileAlreadyExistsException"
+    )
+    assert (tmp_path / "0").read_bytes() == b"batch 0 offsets"
+
+    before = set(os.listdir(tmp_path))
+    cancelled = fm.createAtomic(Path(str(tmp_path / "1")), False)
+    cancelled.write(bytearray(b"batch 1 offsets"))
+    cancelled.cancel()
+    assert set(os.listdir(tmp_path)) == before
+
+
 def test_fanout_foreachbatch(spark, records, tmp_path):
     src = str(tmp_path / "src")
     _stage_json(records, src)

@@ -270,17 +270,31 @@ class SacrificialDecoder:
 #: containment is untouched (the singleton wraps the decoder, which still
 #: kills/respawns its child per poisoned buffer). This module is shipped
 #: importable to executors, which is what makes the module-level global
-#: survive task boundaries.
+#: survive task boundaries. The child is closed (killed and reaped) when
+#: the process that made it exits normally; a worker ended by
+#: ``os._exit`` skips that, and its child exits on stdin EOF instead.
 _WORKER_DECODER: "tuple[int, SacrificialDecoder] | None" = None
+
+
+def _close_if_owner(pid: int, decoder: SacrificialDecoder) -> None:
+    """atexit hook: close ``decoder`` only in the process that made it.
+    A forked copy inherits the hook and the Popen handle, and must not
+    kill its parent's child."""
+    import os
+
+    if os.getpid() == pid:
+        decoder.close()
 
 
 def _worker_decoder() -> SacrificialDecoder:
     global _WORKER_DECODER
+    import atexit
     import os
 
     pid = os.getpid()
     if _WORKER_DECODER is None or _WORKER_DECODER[0] != pid:
         _WORKER_DECODER = (pid, SacrificialDecoder())
+        atexit.register(_close_if_owner, *_WORKER_DECODER)
     return _WORKER_DECODER[1]
 
 
