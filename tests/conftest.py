@@ -15,6 +15,17 @@ from user_behavior_spark_pipeline_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    """Fail on pyspark's warnings for deprecated pandas-UDF forms: the
+    ``PandasUDFType`` argument (SPARK-28264) and type hints it cannot
+    read (a partly annotated applyInPandas kernel)."""
+    for message in (
+        ".*SPARK-28264",
+        "Cannot infer the eval type from type hints",
+    ):
+        config.addinivalue_line("filterwarnings", f"error:{message}:UserWarning")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="ubsp-tests", shuffle_partitions=8)

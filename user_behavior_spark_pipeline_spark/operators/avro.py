@@ -53,8 +53,8 @@ from .compress import (
     zstd_compress,
     zstd_decompress,
 )
+from .payload import synth_bytes
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -1106,17 +1106,9 @@ def build_avro_container(
 
 def synth_avro_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of deterministic Avro containers."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        return pd.Series([synth_avro_bytes(int(d)) for d in doc_id])
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_avro_bytes, "doc_id").alias("payload"),
     )
 
 
@@ -1192,19 +1184,9 @@ def synth_avro_logical_bytes(doc_id: int) -> bytes:
 
 def synth_avro_logical_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of logical-type containers."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        return pd.Series(
-            [synth_avro_logical_bytes(int(d)) for d in doc_id]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_avro_logical_bytes, "doc_id").alias("payload"),
     )
 
 
@@ -1302,19 +1284,9 @@ def synth_avro_collections_bytes(doc_id: int) -> bytes:
 
 def synth_avro_collections_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of array/map containers."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        return pd.Series(
-            [synth_avro_collections_bytes(int(d)) for d in doc_id]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_avro_collections_bytes, "doc_id").alias("payload"),
     )
 
 
@@ -1473,17 +1445,7 @@ def synth_avro_evolution_bytes(doc_id: int) -> bytes:
 
 def synth_avro_evolution_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of mixed-generation Avro containers."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        return pd.Series(
-            [synth_avro_evolution_bytes(int(d)) for d in doc_id]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_avro_evolution_bytes, "doc_id").alias("payload"),
     )

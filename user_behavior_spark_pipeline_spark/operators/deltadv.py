@@ -511,7 +511,7 @@ def synth_delta_dv_log_rows(doc_id: int) -> list[tuple[int, str]]:
 
 def synth_delta_dv_logs(documents: DataFrame) -> DataFrame:
     """(table_id, version, payload) commit files, executor-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     elem = StructType(
         [
@@ -527,7 +527,7 @@ def synth_delta_dv_logs(documents: DataFrame) -> DataFrame:
             [synth_delta_dv_log_rows(int(d)) for d in doc_id]
         )
 
-    _build = pandas_udf(_build_fn, ArrayType(elem), PandasUDFType.SCALAR)
+    _build = pandas_udf(_build_fn, ArrayType(elem))
     return documents.select(
         F.col("doc_id").alias("table_id"),
         F.explode(_build("doc_id")).alias("c"),
@@ -543,7 +543,7 @@ def synth_delta_dv_files(documents: DataFrame) -> DataFrame:
     single sidecar holds a DECOY bitmap first (every row of part-1 —
     reading the wrong offset empties the file) and the real run-range
     bitmap second."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     elem = StructType(
         [
@@ -568,7 +568,7 @@ def synth_delta_dv_files(documents: DataFrame) -> DataFrame:
             )
         return pd.Series(out)
 
-    _build = pandas_udf(_build_fn, ArrayType(elem), PandasUDFType.SCALAR)
+    _build = pandas_udf(_build_fn, ArrayType(elem))
     return documents.select(
         F.col("doc_id").alias("table_id"),
         F.explode(_build("doc_id")).alias("c"),

@@ -245,7 +245,7 @@ def synth_delta_log_rows(doc_id: int) -> list[tuple[int, int, str]]:
 def synth_delta_logs(documents: DataFrame) -> DataFrame:
     """(table_id, version, payload) commit files for every document's
     synthetic table, built executor-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -271,7 +271,7 @@ def synth_delta_logs(documents: DataFrame) -> DataFrame:
             ]
         )
 
-    _build = pandas_udf(_build_fn, ArrayType(elem), PandasUDFType.SCALAR)
+    _build = pandas_udf(_build_fn, ArrayType(elem))
     return (
         documents.select(
             F.col("doc_id").alias("table_id"),
@@ -347,7 +347,7 @@ def synth_delta_checkpoint_fixture(documents: DataFrame):
     (loading it + the tail resurrects part-(V-2)-0 — hash-caught);
     JSON commits BEFORE C are withheld (log cleanup), so ignoring the
     checkpoint is also hash-caught."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import (
         ArrayType,
         BinaryType,
@@ -409,9 +409,9 @@ def synth_delta_checkpoint_fixture(documents: DataFrame):
             )
         return pd.Series(out)
 
-    _ptr = pandas_udf(_ptr_fn, StringType(), PandasUDFType.SCALAR)
-    _cks = pandas_udf(_cks_fn, ArrayType(ck_elem), PandasUDFType.SCALAR)
-    _tail = pandas_udf(_tail_fn, ArrayType(log_elem), PandasUDFType.SCALAR)
+    _ptr = pandas_udf(_ptr_fn, StringType())
+    _cks = pandas_udf(_cks_fn, ArrayType(ck_elem))
+    _tail = pandas_udf(_tail_fn, ArrayType(log_elem))
     ptr_df = documents.select(
         F.col("doc_id").alias("table_id"),
         _ptr("doc_id").alias("payload"),

@@ -31,7 +31,6 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     IntegerType,
     LongType,
@@ -39,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .payload import synth_bytes
 
 # ---------------------------------------------------------------------------
 # MPEG audio (MP3) frame walk — ISO/IEC 11172-3 §2.4.1.3 header layout
@@ -1021,19 +1022,9 @@ def mp3_audio_metadata(media: DataFrame) -> DataFrame:
 def synth_fmp4_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of fragmented MP4s, one per document —
     executor-side builder, same pattern as synth_container_media."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id, n_chars):
-        out = []
-        for d, n in zip(doc_id, n_chars):
-            out.append(synth_fmp4_bytes(int(d), int(n)))
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "n_chars").alias("payload"),
+        synth_bytes(synth_fmp4_bytes, "doc_id", "n_chars").alias("payload"),
     )
 
 
@@ -1612,27 +1603,14 @@ def synth_container_media(documents: DataFrame) -> DataFrame:
     synthetic MP4, odd -> synthetic MP3 (builders above; closed-form
     demux output). Pandas-UDF built so the bytes are produced
     executor-side, partition-parallel — no driver materialization."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    # explicit SCALAR eval type (same pattern as udf_surface's
-    # GROUPED_AGG): `from __future__ import annotations` stringifies any
-    # pd.Series hints and the UDF's __globals__ can't resolve them
-    def _build_fn(doc_id, n_chars):
-        out = []
-        for d, n in zip(doc_id, n_chars):
-            d, n = int(d), int(n)
-            out.append(
-                synth_mp4_bytes(d, n) if d % 2 == 0 else synth_mp3_bytes(d, n)
-            )
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
+    def _container(d, n):
+        return synth_mp4_bytes(d, n) if d % 2 == 0 else synth_mp3_bytes(d, n)
 
     return documents.select(
         F.col("doc_id").alias("media_id"),
         F.when(F.col("doc_id") % 2 == 0, "video").otherwise("audio").alias("kind"),
-        _build("doc_id", "n_chars").alias("payload"),
+        synth_bytes(_container, "doc_id", "n_chars").alias("payload"),
     )
 
 
@@ -1650,27 +1628,18 @@ def synth_corrupt_mp4_media(documents: DataFrame) -> DataFrame:
     (rows kept, error category) is closed-form in doc_id, so
     x_demux_quarantine hash-certifies that a corrupt container yields a
     quarantine row while intact files in the same scan flow untouched."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    def _build_fn(doc_id, n_chars):
-        import pandas as pd
-
-        out = []
-        for d, n in zip(doc_id, n_chars):
-            d, n = int(d), int(n)
-            raw = synth_mp4_bytes(d, n)
-            if d % 3 == 1:
-                raw = raw[:-20]
-            elif d % 3 == 2:
-                raw = b"\x00" * 8 + raw[8:]
-            out.append(raw)
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
+    def _corrupt(d, n):
+        raw = synth_mp4_bytes(d, n)
+        if d % 3 == 1:
+            return raw[:-20]
+        if d % 3 == 2:
+            return b"\x00" * 8 + raw[8:]
+        return raw
 
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "n_chars").alias("payload"),
+        synth_bytes(_corrupt, "doc_id", "n_chars").alias("payload"),
     )
 
 
@@ -2043,22 +2012,9 @@ def synth_ogg_bytes(doc_id: int, n_chars: int) -> bytes:
 
 def synth_ogg_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of deterministic Ogg files, executor-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id, n_chars):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_ogg_bytes(int(d), int(n))
-                for d, n in zip(doc_id, n_chars)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "n_chars").alias("payload"),
+        synth_bytes(synth_ogg_bytes, "doc_id", "n_chars").alias("payload"),
     )
 
 
@@ -2263,17 +2219,9 @@ def synth_m3u8_bytes(doc_id: int) -> bytes:
 
 def synth_m3u8_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of deterministic HLS playlists."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        return pd.Series([synth_m3u8_bytes(int(d)) for d in doc_id])
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_m3u8_bytes, "doc_id").alias("payload"),
     )
 
 

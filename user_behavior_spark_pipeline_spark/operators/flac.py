@@ -38,12 +38,13 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .payload import synth_bytes
 
 # ---------------------------------------------------------------------------
 # CRCs (FLAC frame header CRC-8 poly 0x07, frame CRC-16 poly 0x8005,
@@ -761,13 +762,7 @@ def flac_audio_stats(media: DataFrame) -> DataFrame:
 
 def synth_flac_media(documents: DataFrame) -> DataFrame:
     """documents -> (doc_id, payload) fixture streams."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(BinaryType())
-    def _build(doc_ids):
-        return pd.Series([synth_flac_bytes(int(d)) for d in doc_ids])
-
     return documents.select(
-        documents["doc_id"], _build(documents["doc_id"]).alias("payload")
+        documents["doc_id"],
+        synth_bytes(synth_flac_bytes, documents["doc_id"]).alias("payload"),
     )

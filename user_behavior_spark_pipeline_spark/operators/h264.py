@@ -40,12 +40,13 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .payload import synth_bytes
 
 _NAL_NAMES = {
     1: "slice",
@@ -603,15 +604,7 @@ def synth_h264_stream(doc_id: int) -> bytes:
 
 def synth_h264_media(documents: DataFrame) -> DataFrame:
     """documents -> (doc_id, payload) fixture streams."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(BinaryType())
-    def _build(doc_ids):
-        return pd.Series(
-            [synth_h264_stream(int(d)) for d in doc_ids]
-        )
-
     return documents.select(
-        documents["doc_id"], _build(documents["doc_id"]).alias("payload")
+        documents["doc_id"],
+        synth_bytes(synth_h264_stream, documents["doc_id"]).alias("payload"),
     )

@@ -586,7 +586,7 @@ def synth_iceberg_rows(
 
 def synth_iceberg_metadata(documents: DataFrame) -> DataFrame:
     """(table_id, payload JSON string) per document-table."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     def _build_fn(doc_id):
         import pandas as pd
@@ -598,7 +598,7 @@ def synth_iceberg_metadata(documents: DataFrame) -> DataFrame:
             ]
         )
 
-    _build = pandas_udf(_build_fn, StringType(), PandasUDFType.SCALAR)
+    _build = pandas_udf(_build_fn, StringType())
     return documents.select(
         F.col("doc_id").alias("table_id"),
         _build("doc_id").alias("payload"),
@@ -608,7 +608,7 @@ def synth_iceberg_metadata(documents: DataFrame) -> DataFrame:
 def synth_iceberg_manifests(documents: DataFrame) -> DataFrame:
     """(table_id, file_name, payload) — every manifest list and
     manifest of every table, built executor-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     elem = StructType(
         [
@@ -624,7 +624,7 @@ def synth_iceberg_manifests(documents: DataFrame) -> DataFrame:
             [synth_iceberg_rows(int(d))[1] for d in doc_id]
         )
 
-    _build = pandas_udf(_build_fn, ArrayType(elem), PandasUDFType.SCALAR)
+    _build = pandas_udf(_build_fn, ArrayType(elem))
     return documents.select(
         F.col("doc_id").alias("table_id"),
         F.explode(_build("doc_id")).alias("c"),
@@ -940,7 +940,7 @@ def synth_iceberg_v2_rows(
 
 def synth_iceberg_v2_metadata(documents: DataFrame) -> DataFrame:
     """(table_id, payload JSON string) per document-table, v2 tree."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     def _build_fn(doc_id):
         import pandas as pd
@@ -952,7 +952,7 @@ def synth_iceberg_v2_metadata(documents: DataFrame) -> DataFrame:
             ]
         )
 
-    _build = pandas_udf(_build_fn, StringType(), PandasUDFType.SCALAR)
+    _build = pandas_udf(_build_fn, StringType())
     return documents.select(
         F.col("doc_id").alias("table_id"),
         _build("doc_id").alias("payload"),
@@ -962,7 +962,7 @@ def synth_iceberg_v2_metadata(documents: DataFrame) -> DataFrame:
 def synth_iceberg_v2_manifests(documents: DataFrame) -> DataFrame:
     """(table_id, file_name, payload) — every Avro file of every v2
     table (manifest lists, manifests, data files, delete files)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     elem = StructType(
         [
@@ -978,7 +978,7 @@ def synth_iceberg_v2_manifests(documents: DataFrame) -> DataFrame:
             [synth_iceberg_v2_rows(int(d))[1] for d in doc_id]
         )
 
-    _build = pandas_udf(_build_fn, ArrayType(elem), PandasUDFType.SCALAR)
+    _build = pandas_udf(_build_fn, ArrayType(elem))
     return documents.select(
         F.col("doc_id").alias("table_id"),
         F.explode(_build("doc_id")).alias("c"),

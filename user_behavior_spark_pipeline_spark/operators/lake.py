@@ -27,13 +27,14 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .payload import synth_bytes
 
 
 def parquet_footer(payload: bytes) -> dict:
@@ -142,15 +143,7 @@ def synth_parquet_bytes(doc_id: int) -> bytes:
 
 def synth_parquet_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of deterministic Parquet files."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        return pd.Series([synth_parquet_bytes(int(d)) for d in doc_id])
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_parquet_bytes, "doc_id").alias("payload"),
     )

@@ -35,13 +35,14 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .payload import synth_bytes
 
 # element IDs (with marker bits, as they appear on the wire)
 _EBML_HEADER = 0x1A45DFA3
@@ -453,20 +454,11 @@ def synth_mkv_bytes(doc_id: int, unknown_size_segment: bool = False) -> bytes:
 def synth_mkv_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of deterministic WebM files; the odd half
     uses the unknown-size Segment (live-stream shape)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    def _build_fn(doc_id):
-        import pandas as pd
+    def _webm(d):
+        return synth_mkv_bytes(d, unknown_size_segment=d % 2 == 1)
 
-        return pd.Series(
-            [
-                synth_mkv_bytes(int(d), unknown_size_segment=int(d) % 2 == 1)
-                for d in doc_id
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(_webm, "doc_id").alias("payload"),
     )

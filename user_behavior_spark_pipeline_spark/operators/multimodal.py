@@ -55,6 +55,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .payload import synth_bytes
+
 KINDS = ("image", "audio", "video")
 
 MEDIA_SCHEMA = StructType(
@@ -1406,33 +1408,25 @@ def synth_exif_media(documents: DataFrame) -> DataFrame:
     'maker<doc_id%3>', model = 'model <doc_id>', pixel dims 16x8;
     even docs little-endian TIFF, odd big-endian, so one query
     certifies both byte orders."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    def _build_fn(media_id):
-        import pandas as pd
+    def _exif_jpeg(d):
+        seg = exif_app1_segment(
+            {
+                "make": f"maker{d % 3}",
+                "model": f"model {d}",
+                "orientation": d % 8 + 1,
+                "datetime": "2026:01:01 00:00:00",
+                "pixel_width": 16,
+                "pixel_height": 8,
+            },
+            little_endian=d % 2 == 0,
+        )
+        jpg = jpeg_encode_gray_dc(16, 8, [d % 100, 0])
+        return jpg[:2] + seg + jpg[2:]
 
-        out = []
-        for m in media_id:
-            d = int(m)
-            seg = exif_app1_segment(
-                {
-                    "make": f"maker{d % 3}",
-                    "model": f"model {d}",
-                    "orientation": d % 8 + 1,
-                    "datetime": "2026:01:01 00:00:00",
-                    "pixel_width": 16,
-                    "pixel_height": 8,
-                },
-                little_endian=d % 2 == 0,
-            )
-            jpg = jpeg_encode_gray_dc(16, 8, [d % 100, 0])
-            out.append(jpg[:2] + seg + jpg[2:])
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(_exif_jpeg, "doc_id").alias("payload"),
     )
 
 
@@ -2682,22 +2676,9 @@ def synth_png_meta_bytes(doc_id: int, text: str) -> bytes:
 
 def synth_png_meta_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of metadata-rich PNGs, executor-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id, text):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_png_meta_bytes(int(d), str(t))
-                for d, t in zip(doc_id, text)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "text").alias("payload"),
+        synth_bytes(synth_png_meta_bytes, "doc_id", "text").alias("payload"),
     )
 
 
@@ -2711,61 +2692,53 @@ def synth_tiff_variant_media(documents: DataFrame) -> DataFrame:
     hide), 5d+4 = TILED 6x6 LZW + predictor (edge tiles padded — the
     GeoTIFF/pyramid shape, r11). The raster is SQL-derivable, so one oracle certifies
     strip assembly, both codecs, the predictor and both byte orders."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    def _build_fn(media_id):
-        import pandas as pd
+    def _tiff(m):
+        d, v = m // 5, m % 5
+        n = 768 if v == 3 else 256
+        px = [(d * 31 + i * 7) % 256 for i in range(n)]
+        if v == 0:
+            raw = tiff_encode(16, 16, px)
+        elif v == 4:
+            raw = tiff_encode(
+                16,
+                16,
+                px,
+                little_endian=d % 2 == 0,
+                compression=5,
+                predictor=2,
+                tile=(6, 6),
+            )
+        elif v == 1:
+            raw = tiff_encode(
+                16,
+                16,
+                px,
+                little_endian=False,
+                rows_per_strip=5,
+                compression=32773,
+            )
+        elif v == 2:
+            raw = tiff_encode(
+                16,
+                16,
+                px,
+                rows_per_strip=7,
+                compression=5,
+                predictor=2,
+            )
+        else:
+            raw = tiff_encode(
+                16,
+                16,
+                px,
+                channels=3,
+                little_endian=False,
+                compression=5,
+                predictor=2,
+            )
+        return raw
 
-        out = []
-        for m in media_id:
-            m = int(m)
-            d, v = m // 5, m % 5
-            n = 768 if v == 3 else 256
-            px = [(d * 31 + i * 7) % 256 for i in range(n)]
-            if v == 0:
-                raw = tiff_encode(16, 16, px)
-            elif v == 4:
-                raw = tiff_encode(
-                    16,
-                    16,
-                    px,
-                    little_endian=d % 2 == 0,
-                    compression=5,
-                    predictor=2,
-                    tile=(6, 6),
-                )
-            elif v == 1:
-                raw = tiff_encode(
-                    16,
-                    16,
-                    px,
-                    little_endian=False,
-                    rows_per_strip=5,
-                    compression=32773,
-                )
-            elif v == 2:
-                raw = tiff_encode(
-                    16,
-                    16,
-                    px,
-                    rows_per_strip=7,
-                    compression=5,
-                    predictor=2,
-                )
-            else:
-                raw = tiff_encode(
-                    16,
-                    16,
-                    px,
-                    channels=3,
-                    little_endian=False,
-                    compression=5,
-                    predictor=2,
-                )
-            out.append(raw)
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     ids = documents.select(
         F.explode(
             F.array(
@@ -2773,7 +2746,9 @@ def synth_tiff_variant_media(documents: DataFrame) -> DataFrame:
             )
         ).alias("media_id")
     )
-    return ids.select("media_id", _build("media_id").alias("payload"))
+    return ids.select(
+        "media_id", synth_bytes(_tiff, "media_id").alias("payload")
+    )
 
 
 def _bmp_decode(payload: bytes) -> dict:
@@ -3009,7 +2984,7 @@ def sniff_media_type(payload: bytes) -> str:
 def media_type_column(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Append a ``media_type`` column via an Arrow-batched sniff of the
     payload prefix — the routing step before the typed walkers."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     def _sniff_fn(vals):
         import pandas as pd
@@ -3021,8 +2996,72 @@ def media_type_column(media: DataFrame, payload_col: str = "payload") -> DataFra
             ]
         )
 
-    _sniff = pandas_udf(_sniff_fn, StringType(), PandasUDFType.SCALAR)
+    _sniff = pandas_udf(_sniff_fn, StringType())
     return media.withColumn("media_type", _sniff(payload_col))
+
+
+def synth_mixed_media_bytes(doc_id: int) -> bytes:
+    """One payload of a rotating container family per document, from the
+    repo's own builders: ``doc_id % 17`` picks PNG, PGM, WARC, PDF, FLAC,
+    ID3-MP3, MP4, tar, GIF, BMP, ZIP, Avro, NPY, WebP, Ogg, Matroska or
+    xz-tar (17, a prime, so every family sees both doc parities)."""
+    from .avro import synth_avro_bytes
+    from .demux import (
+        synth_flac_bytes,
+        synth_id3_mp3_bytes,
+        synth_mp4_bytes,
+        synth_ogg_bytes,
+    )
+    from .mkv import synth_mkv_bytes
+    from .pdf import synth_pdf_bytes
+    from .tensors import npy_encode
+    from .warc import synth_warc_bytes
+    from .webdataset import synth_webdataset_bytes, synth_zip_bytes
+
+    d = doc_id
+    k = d % 17
+    if k == 0:
+        return png_encode_gray(8, 8, [d % 256] * 64)
+    if k == 1:
+        return b"P5 2 2 255\n" + bytes(4)
+    if k == 2:
+        return synth_warc_bytes(d, "x")
+    if k == 3:
+        return synth_pdf_bytes(d, "x")
+    if k == 4:
+        return synth_flac_bytes(d, 2)
+    if k == 5:
+        return synth_id3_mp3_bytes(d, 2)
+    if k == 6:
+        return synth_mp4_bytes(d, 2)
+    if k == 7:
+        # plain tar shard: 15d+1 ≡ 1 (mod 5) -> plain under the
+        # gzip/plain/bz2/xz/zstd rotation, ≡ 1 (mod 3) -> 2 samples =
+        # 6 members
+        return synth_webdataset_bytes(15 * d + 1, "x")
+    if k == 8:
+        return gif_encode_indexed(5, 4, bytes(range(12)), [d % 4] * 20)
+    if k == 9:
+        return bmp_encode_rgb24(3, 2, [d % 256] * 18)
+    if k == 10:
+        return synth_zip_bytes(d, "x")
+    if k == 11:
+        return synth_avro_bytes(d)
+    if k == 12:
+        n = d % 4 + 2
+        return npy_encode(
+            list(range(n)), (n,), "<f4" if d % 2 == 0 else ">i8"
+        )
+    if k == 13:
+        return synth_webp_bytes(d % 50 + 2, d % 40 + 2, "vp8l")
+    if k == 14:
+        return synth_ogg_bytes(d, 2)
+    if k == 15:
+        return synth_mkv_bytes(d)
+    # xz-compressed tar shard: sniffs as 'xz'; the tar walker is
+    # transparent to it (10d+3 ≡ 3 (mod 5) -> xz under the five-way
+    # rotation; ≡ d (mod 3) keeps the member count keyed on doc_id)
+    return synth_webdataset_bytes(10 * d + 3, "x")
 
 
 def decode_real(payload: bytes, kind: str) -> dict:
@@ -3403,26 +3442,20 @@ def synth_jpeg_pair_media(documents: DataFrame) -> DataFrame:
     (media_id = 2*doc_id + 1). DC values are closed-form in doc_id
     (dc0 = doc_id%256 - 128, dc1 = (7*doc_id)%256 - 128), so the
     decoded flat tiles are SQL-derivable: pixel = clip(2*dc + 128)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    def _build_fn(media_id):
-        import pandas as pd
+    def _jpeg(m):
+        d = m // 2
+        dcs = [d % 256 - 128, (7 * d) % 256 - 128]
+        return jpeg_encode_gray_dc(16, 8, dcs, progressive=m % 2 == 1)
 
-        out = []
-        for m in media_id:
-            m = int(m)
-            d = m // 2
-            dcs = [d % 256 - 128, (7 * d) % 256 - 128]
-            out.append(jpeg_encode_gray_dc(16, 8, dcs, progressive=m % 2 == 1))
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     ids = documents.select(
         F.explode(
             F.array(F.col("doc_id") * 2, F.col("doc_id") * 2 + 1)
         ).alias("media_id")
     )
-    return ids.select("media_id", _build("media_id").alias("payload"))
+    return ids.select(
+        "media_id", synth_bytes(_jpeg, "media_id").alias("payload")
+    )
 
 
 def png_encode_palette_gray_adam7(
@@ -3743,7 +3776,6 @@ def synth_image_pair_media(documents: DataFrame, size: int = 16) -> DataFrame:
     are ~2^-64 — the expected pair set is EXACTLY the per-doc
     6-pair clique over {4d..4d+3}: byte-different containers,
     pixel-identical content."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
     def _pixels(doc_id: int) -> list[int]:
         # splitmix64-style finalizer per (doc, position), numpy-vectorized
@@ -3769,34 +3801,20 @@ def synth_image_pair_media(documents: DataFrame, size: int = 16) -> DataFrame:
             x ^= x >> np.uint64(31)
         return (x & np.uint64(0xFF)).astype(np.uint8).tolist()
 
-    def _build_fn(media_id):
-        import pandas as pd
-
-        out = []
-        for m in media_id:
-            m = int(m)
-            px = _pixels(m // 4)
-            k = m % 4
-            if k == 0:
-                out.append(png_encode_gray(size, size, px))
-            elif k == 1:
-                out.append(
-                    f"P5 {size} {size} 255\n".encode() + bytes(px)
-                )
-            elif k == 2:
-                # the SAME raster under indexed-color + Adam7 interlace
-                out.append(png_encode_palette_gray_adam7(size, size, px))
-            else:
-                # r11: and under big-endian baseline TIFF strips
-                out.append(
-                    tiff_encode(
-                        size, size, px,
-                        little_endian=False, rows_per_strip=size // 2,
-                    )
-                )
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
+    def _container(m):
+        px = _pixels(m // 4)
+        k = m % 4
+        if k == 0:
+            return png_encode_gray(size, size, px)
+        if k == 1:
+            return f"P5 {size} {size} 255\n".encode() + bytes(px)
+        if k == 2:
+            # the SAME raster under indexed-color + Adam7 interlace
+            return png_encode_palette_gray_adam7(size, size, px)
+        # r11: and under big-endian baseline TIFF strips
+        return tiff_encode(
+            size, size, px, little_endian=False, rows_per_strip=size // 2
+        )
 
     ids = documents.select(
         F.explode(
@@ -3805,7 +3823,9 @@ def synth_image_pair_media(documents: DataFrame, size: int = 16) -> DataFrame:
             )
         ).alias("media_id")
     )
-    return ids.select("media_id", _build("media_id").alias("payload"))
+    return ids.select(
+        "media_id", synth_bytes(_container, "media_id").alias("payload")
+    )
 
 
 _M64 = (1 << 64) - 1
@@ -3876,31 +3896,21 @@ def synth_image_near_pair_media(documents: DataFrame, size: int = 16) -> DataFra
     the expected pair set at max_hamming=3 is exactly
     {(2d, 2d+1, d % 4)}: a missed band, a broken popcount verify, or a
     decoder inconsistency between the containers all change the rows."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    def _build_fn(media_id):
-        import pandas as pd
-
-        out = []
-        for m in media_id:
-            m = int(m)
-            d = m // 2
-            pattern = image_block_pattern(d)
-            if m % 2 == 0:
-                out.append(
-                    png_encode_gray(size, size, _pattern_raster(pattern, size))
-                )
-            else:
-                pattern ^= image_pattern_flips(d, d % 4)
-                px = _pattern_raster(pattern, size)
-                out.append(f"P5 {size} {size} 255\n".encode() + bytes(px))
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
+    def _pair(m):
+        d = m // 2
+        pattern = image_block_pattern(d)
+        if m % 2 == 0:
+            return png_encode_gray(size, size, _pattern_raster(pattern, size))
+        pattern ^= image_pattern_flips(d, d % 4)
+        px = _pattern_raster(pattern, size)
+        return f"P5 {size} {size} 255\n".encode() + bytes(px)
 
     ids = documents.select(
         F.explode(
             F.array(F.col("doc_id") * 2, F.col("doc_id") * 2 + 1)
         ).alias("media_id")
     )
-    return ids.select("media_id", _build("media_id").alias("payload"))
+    return ids.select(
+        "media_id", synth_bytes(_pair, "media_id").alias("payload")
+    )

@@ -46,13 +46,14 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .payload import synth_bytes
 
 _ESCAPES = {
     ord("n"): "\n",
@@ -1627,42 +1628,16 @@ def _running_offsets(bodies) -> list[int]:
 
 def synth_pdf_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of deterministic PDFs, executor-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id, text):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_pdf_bytes(int(d), str(t))
-                for d, t in zip(doc_id, text)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "text").alias("payload"),
+        synth_bytes(synth_pdf_bytes, "doc_id", "text").alias("payload"),
     )
 
 
 def synth_pdf_modern_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of deterministic MODERN-layout (PDF 1.5
     xref-stream + ObjStm) PDFs, executor-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id, text):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_pdf_modern_bytes(int(d), str(t))
-                for d, t in zip(doc_id, text)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "text").alias("payload"),
+        synth_bytes(synth_pdf_modern_bytes, "doc_id", "text").alias("payload"),
     )

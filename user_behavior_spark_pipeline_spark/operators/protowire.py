@@ -31,13 +31,14 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .payload import synth_bytes
 
 
 def proto_varint_decode(data: bytes, pos: int) -> tuple[int, int]:
@@ -176,20 +177,7 @@ def synth_proto_bytes(doc_id: int, text: str) -> bytes:
 
 def synth_proto_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of deterministic protobuf messages."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id, text):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_proto_bytes(int(d), str(t))
-                for d, t in zip(doc_id, text)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "text").alias("payload"),
+        synth_bytes(synth_proto_bytes, "doc_id", "text").alias("payload"),
     )

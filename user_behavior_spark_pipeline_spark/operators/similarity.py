@@ -242,8 +242,9 @@ def pair_dot_udf():
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    # NB: no type hints — `from __future__ import annotations` stringifies
-    # them, which pandas_udf's signature inference rejects
+    # NB: no type hints — `from __future__ import annotations` makes them
+    # strings that pyspark resolves from module globals only, and pd is
+    # local here; unhinted, pandas_udf defaults to SCALAR
     @pandas_udf("double")
     def dots(e1, e2):
         a = np.array(e1.tolist(), dtype=np.float64)
@@ -355,8 +356,8 @@ def assign_cells(normed: DataFrame, cdf: DataFrame, cent=None) -> DataFrame:
 
         c_t = np.ascontiguousarray(cent, dtype=np.float64).T
 
-        # NB: no type hints — `from __future__ import annotations`
-        # stringifies them, which pandas_udf's inference rejects
+        # NB: no type hints — they would have to resolve from module
+        # globals (see dots); unhinted, pandas_udf defaults to SCALAR
         @pandas_udf("int")
         def _cell(ne):
             x = np.array(ne.tolist(), dtype=np.float64)
@@ -461,8 +462,9 @@ def pandas_cosine_topk(
     q_mat = np.array([e for _, e in q_keep], dtype=np.float64)
     q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
 
-    # NB: no type hints — `from __future__ import annotations` stringifies
-    # them, which pandas_udf's signature inference rejects
+    # NB: no type hints — `from __future__ import annotations` makes them
+    # strings that pyspark resolves from module globals only, and pd is
+    # local here; unhinted, pandas_udf defaults to SCALAR
     @pandas_udf("array<double>")
     def cosines(batch):
         m = np.array(batch.tolist(), dtype=np.float64)

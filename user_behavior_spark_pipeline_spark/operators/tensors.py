@@ -34,13 +34,14 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .payload import synth_bytes
 
 _NPY_MAGIC = b"\x93NUMPY"
 
@@ -318,15 +319,7 @@ def synth_npz_bytes(doc_id: int) -> bytes:
 
 def synth_npz_media(documents: DataFrame) -> DataFrame:
     """(media_id, payload) of deterministic NPZ files, executor-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        return pd.Series([synth_npz_bytes(int(d)) for d in doc_id])
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_npz_bytes, "doc_id").alias("payload"),
     )

@@ -187,7 +187,7 @@ def write_packed_shards(
         ).alias("file_id"),
     )
 
-    def _build(keys, pdf) -> "pd.DataFrame":  # noqa: F821
+    def _build(keys, pdf):
         import numpy as np
         import pandas as pd
 

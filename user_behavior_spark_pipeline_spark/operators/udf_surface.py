@@ -18,6 +18,7 @@ so results hash-match the SQL oracle."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -85,18 +86,17 @@ def per_type_stats_grouped_agg(events: DataFrame) -> DataFrame:
     UDFs with JVM aggregates in one .agg() (INVALID_PANDAS_UDF_PLACEMENT),
     so every aggregate here is pandas; prefer native aggs unless the kernel
     needs the full series (e.g. robust statistics)."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # NB: no type hints on the inner fns (see similarity.pandas_cosine_topk);
-    # GROUPED_AGG must be explicit — the default SCALAR type would make
-    # Spark treat the call as a projection, not an aggregate
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def total_cents(v):
+    # the `pd.Series -> int` hints make these GROUPED_AGG; under
+    # `from __future__ import annotations` pyspark resolves them from
+    # module globals only, hence the module-level pandas import
+    @pandas_udf("long")
+    def total_cents(v: pd.Series) -> int:
         return int((v * 100).round().astype("int64").sum())
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def n_rows(v):
+    @pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
         return len(v)
 
     return events.groupBy("event_type").agg(

@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .payload import synth_bytes
+
 _CRLF = b"\r\n"
 
 
@@ -432,30 +434,19 @@ def synth_warc_archives(
     response bodies to the escaped-HTML page form; ``http_envelope``
     wraps them in a full HTTP/1.1 message, the real Common Crawl record
     shape (see synth_warc_bytes)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    def _build_fn(doc_id, text):
-        import pandas as pd
-
-        out = []
-        for d, t in zip(doc_id, text):
-            d = int(d)
-            out.append(
-                synth_warc_bytes(
-                    d,
-                    str(t),
-                    gzip_members=d % 3 == 0,
-                    html=html,
-                    http_envelope=http_envelope,
-                )
-            )
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
+    def _archive(d, t):
+        return synth_warc_bytes(
+            d,
+            t,
+            gzip_members=d % 3 == 0,
+            html=html,
+            http_envelope=http_envelope,
+        )
 
     return documents.select(
         F.col("doc_id").alias("archive_id"),
-        _build("doc_id", "text").alias("payload"),
+        synth_bytes(_archive, "doc_id", "text").alias("payload"),
     )
 
 
@@ -473,7 +464,7 @@ def warc_digest_verify(records: DataFrame) -> DataFrame:
     record carries no digest; false on mismatch — planted bit rot — or
     a malformed/unsupported digest label). A pipeline quarantines or
     re-fetches ``digest_ok = false`` records before text extraction."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     def _b32_hex_fn(vals):
         import base64
@@ -493,7 +484,7 @@ def warc_digest_verify(records: DataFrame) -> DataFrame:
                 out.append("")  # malformed digest: never matches
         return pd.Series(out)
 
-    _b32_hex = pandas_udf(_b32_hex_fn, StringType(), PandasUDFType.SCALAR)
+    _b32_hex = pandas_udf(_b32_hex_fn, StringType())
     digest = F.col("block_digest")
     algo = F.lower(F.substring_index(digest, ":", 1))
     val = F.substring_index(digest, ":", -1)
@@ -534,42 +525,33 @@ def synth_corrupt_warc_archives(documents: DataFrame) -> DataFrame:
     doc_id, which is what lets x_warc_quarantine hash-certify that
     corruption is ROUTED (good records kept, error surfaced) rather
     than fatal or silently dropped."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    def _build_fn(doc_id, text):
-        import pandas as pd
-
-        out = []
-        for d, t in zip(doc_id, text):
-            d = int(d)
-            k = d % 5
-            raw = synth_warc_bytes(d, str(t), gzip_members=(k == 4))
-            if k == 4:
-                # flip a byte of the LAST member's CRC32 (trailer is
-                # CRC32+ISIZE, 8 bytes): inflate decodes cleanly, the
-                # data check fails -> deterministic zlib.error, and the
-                # first member stays salvageable
-                raw = raw[:-8] + bytes([raw[-8] ^ 0xFF]) + raw[-7:]
-            elif k == 1:
-                raw += (
-                    b"WARC/1.0\r\nWARC-Type: response\r\n"
-                    b"Content-Length: 100\r\n\r\nshort"
-                )
-            elif k == 2:
-                raw = b"JUNK?" + raw[5:]
-            elif k == 3:
-                raw += (
-                    b"WARC/1.0\r\nWARC-Type: response\r\n"
-                    b"Content-Length: -5\r\n\r\nxxxxx\r\n\r\n"
-                )
-            out.append(raw)
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
+    def _corrupt(d, t):
+        k = d % 5
+        raw = synth_warc_bytes(d, t, gzip_members=(k == 4))
+        if k == 4:
+            # flip a byte of the LAST member's CRC32 (trailer is
+            # CRC32+ISIZE, 8 bytes): inflate decodes cleanly, the
+            # data check fails -> deterministic zlib.error, and the
+            # first member stays salvageable
+            raw = raw[:-8] + bytes([raw[-8] ^ 0xFF]) + raw[-7:]
+        elif k == 1:
+            raw += (
+                b"WARC/1.0\r\nWARC-Type: response\r\n"
+                b"Content-Length: 100\r\n\r\nshort"
+            )
+        elif k == 2:
+            raw = b"JUNK?" + raw[5:]
+        elif k == 3:
+            raw += (
+                b"WARC/1.0\r\nWARC-Type: response\r\n"
+                b"Content-Length: -5\r\n\r\nxxxxx\r\n\r\n"
+            )
+        return raw
 
     return documents.select(
         F.col("doc_id").alias("archive_id"),
-        _build("doc_id", "text").alias("payload"),
+        synth_bytes(_corrupt, "doc_id", "text").alias("payload"),
     )
 
 
@@ -1053,7 +1035,7 @@ def split_http_response(
     )
     chunked = head.rlike(r"(?im)^transfer-encoding:[ \t]*chunked[ \t]*$")
 
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     def _dechunk_fn(raw):
         import pandas as pd
@@ -1069,7 +1051,7 @@ def split_http_response(
                 out.append(None)
         return pd.Series(out)
 
-    _dechunk = pandas_udf(_dechunk_fn, BinaryType(), PandasUDFType.SCALAR)
+    _dechunk = pandas_udf(_dechunk_fn, BinaryType())
 
     raw_entity = F.encode(tail, "ISO-8859-1")
     payload = F.when(
@@ -1245,15 +1227,7 @@ def synth_feed_bytes(doc_id: int) -> bytes:
 
 def synth_feed_media(documents: DataFrame) -> DataFrame:
     """(feed_id, payload) of deterministic feeds, executor-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        return pd.Series([synth_feed_bytes(int(d)) for d in doc_id])
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("feed_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_feed_bytes, "doc_id").alias("payload"),
     )

@@ -35,6 +35,7 @@ from .compress import (
     snappy_framed_compress,
     zstd_compress,
 )
+from .payload import synth_bytes
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -466,22 +467,9 @@ def synth_webdataset_bytes(doc_id: int, text: str) -> bytes:
 
 def synth_webdataset_shards(documents: DataFrame) -> DataFrame:
     """(shard_id, payload) of deterministic WebDataset shards."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id, text):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_webdataset_bytes(int(d), str(t))
-                for d, t in zip(doc_id, text)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("shard_id"),
-        _build("doc_id", "text").alias("payload"),
+        synth_bytes(synth_webdataset_bytes, "doc_id", "text").alias("payload"),
     )
 
 
@@ -609,20 +597,7 @@ def synth_jsonl_shard_bytes(doc_id: int, text: str) -> bytes:
 
 def synth_jsonl_shards(documents: DataFrame) -> DataFrame:
     """(shard_id, payload) of deterministic compressed-JSONL shards."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    def _build_fn(doc_id, text):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_jsonl_shard_bytes(int(d), str(t))
-                for d, t in zip(doc_id, text)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     return documents.select(
         F.col("doc_id").alias("shard_id"),
-        _build("doc_id", "text").alias("payload"),
+        synth_bytes(synth_jsonl_shard_bytes, "doc_id", "text").alias("payload"),
     )

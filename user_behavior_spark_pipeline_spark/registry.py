@@ -44,6 +44,7 @@ from .fixtures import (
     _table,
     _valid,
 )
+from .operators.payload import synth_bytes
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -3743,8 +3744,6 @@ def x_demux_audio_tags(spark, sf_dir):
     MP3 bytes on the odd half — one demux.audio_tags pass, headers
     only, quarantine on corruption."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType
 
     from .operators.demux import (
         audio_tags,
@@ -3752,24 +3751,13 @@ def x_demux_audio_tags(spark, sf_dir):
         synth_id3_mp3_bytes,
     )
 
-    def _build_fn(doc_id, n_chars):
-        import pandas as pd
+    def _audio(d, n):
+        return synth_flac_bytes(d, n) if d % 2 == 0 else synth_id3_mp3_bytes(d, n)
 
-        out = []
-        for d, n in zip(doc_id, n_chars):
-            d, n = int(d), int(n)
-            out.append(
-                synth_flac_bytes(d, n)
-                if d % 2 == 0
-                else synth_id3_mp3_bytes(d, n)
-            )
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "n_chars").alias("payload"),
+        synth_bytes(_audio, "doc_id", "n_chars").alias("payload"),
     )
     return audio_tags(media).drop("parse_error")
 
@@ -3840,26 +3828,13 @@ def x_zip_entries(spark, sf_dir):
     (alternating methods) pin the walker against spec math; tests also
     cross-check both directions against stdlib zipfile."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType
 
     from .operators.webdataset import synth_zip_bytes, zip_entries
 
-    def _build_fn(doc_id, text):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_zip_bytes(int(d), str(t))
-                for d, t in zip(doc_id, text)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents")
     archives = docs.select(
         F.col("doc_id").alias("archive_id"),
-        _build("doc_id", "text").alias("payload"),
+        synth_bytes(synth_zip_bytes, "doc_id", "text").alias("payload"),
     )
     return zip_entries(archives).filter(
         F.col("parse_error").isNull()
@@ -4230,32 +4205,22 @@ def x_arrow_untrusted(spark, sf_dir):
     formats fail deterministically); valid docs must hash-match the
     trusted path's closed form, poisoned docs quarantine id-for-id."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType
 
     from .operators.arrow_ipc import arrow_ipc_records, synth_arrow_bytes
 
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        out = []
-        for d in doc_id:
-            d = int(d)
-            raw = synth_arrow_bytes(d)
-            if d % 7 == 0:
-                b = bytearray(raw)
-                b[8:16] = b"\xff" * 8
-                b[-16:] = b"\xff" * 16
-                raw = bytes(b)
-            out.append(raw)
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
+    def _smashed(d):
+        raw = synth_arrow_bytes(d)
+        if d % 7 == 0:
+            b = bytearray(raw)
+            b[8:16] = b"\xff" * 8
+            b[-16:] = b"\xff" * 16
+            raw = bytes(b)
+        return raw
 
     def _synth(docs):
         return docs.select(
             F.col("doc_id").alias("media_id"),
-            _build("doc_id").alias("payload"),
+            synth_bytes(_smashed, "doc_id").alias("payload"),
         )
 
     media = _staged_media(spark, sf_dir, "arrow_untrusted_media", _synth)
@@ -4518,9 +4483,7 @@ def x_demux_elst(spark, sf_dir):
     (box-size fix-up utility), so the oracle also pins that the sample
     INDEX is untouched — edit lists move presentation, never bytes."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
     from pyspark.sql.types import (
-        BinaryType,
         LongType,
         StructField,
         StructType,
@@ -4528,21 +4491,10 @@ def x_demux_elst(spark, sf_dir):
 
     from .operators.demux import mp4_demux, synth_mp4_elst_bytes
 
-    def _build_fn(doc_id, n_chars):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_mp4_elst_bytes(int(d), int(n))
-                for d, n in zip(doc_id, n_chars)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "n_chars").alias("payload"),
+        synth_bytes(synth_mp4_elst_bytes, "doc_id", "n_chars").alias("payload"),
     )
 
     def _dec(batches):
@@ -4697,9 +4649,7 @@ def x_multimodal_wav(spark, sf_dir):
     Scoped to the deterministic doc_id%5==0 fifth (same policy as the
     other per-media certificates)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
     from pyspark.sql.types import (
-        BinaryType,
         LongType,
         StructField,
         StructType,
@@ -4707,25 +4657,18 @@ def x_multimodal_wav(spark, sf_dir):
 
     from .operators.multimodal import _wav_decode, wav_encode
 
-    def _build_fn(media_id):
-        import pandas as pd
+    def _wav(m):
+        d, v = m // 3, m % 3
+        vals = [(d * 7 + j * 11) % 200 - 100 for j in range(10)]
+        fmt = ("pcm16", "float32", "ext-float32")[v]
+        return wav_encode(vals, 16000, 1, fmt)
 
-        out = []
-        for m in media_id:
-            m = int(m)
-            d, v = m // 3, m % 3
-            vals = [(d * 7 + j * 11) % 200 - 100 for j in range(10)]
-            fmt = ("pcm16", "float32", "ext-float32")[v]
-            out.append(wav_encode(vals, 16000, 1, fmt))
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents").filter("doc_id % 5 = 0")
     media = docs.select(
         F.explode(
             F.array(*[F.col("doc_id") * 3 + F.lit(i) for i in range(3)])
         ).alias("media_id")
-    ).select("media_id", _build("media_id").alias("payload"))
+    ).select("media_id", synth_bytes(_wav, "media_id").alias("payload"))
 
     def _dec(batches):
         import pandas as pd
@@ -4792,9 +4735,7 @@ def x_multimodal_jpeg_lossless(spark, sf_dir):
     decoder round-trip. Scoped doc_id%5==0 like the other per-image
     certificates."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
     from pyspark.sql.types import (
-        BinaryType,
         IntegerType,
         LongType,
         StructField,
@@ -4803,32 +4744,20 @@ def x_multimodal_jpeg_lossless(spark, sf_dir):
 
     from .operators.multimodal import decode_real, jpeg_encode_lossless
 
-    def _build_fn(media_id):
-        import pandas as pd
+    def _lossless(m):
+        d, v = m // 2, m % 2
+        if v == 0:
+            px = [(d * 31 + i * 7) % 256 for i in range(96)]
+            return jpeg_encode_lossless(12, 8, px, 8, d % 7 + 1)
+        px = [(d * 131 + i * 17) % 4096 for i in range(96)]
+        return jpeg_encode_lossless(12, 8, px, 12, (d + 3) % 7 + 1)
 
-        out = []
-        for m in media_id:
-            m = int(m)
-            d, v = m // 2, m % 2
-            if v == 0:
-                px = [(d * 31 + i * 7) % 256 for i in range(96)]
-                out.append(
-                    jpeg_encode_lossless(12, 8, px, 8, d % 7 + 1)
-                )
-            else:
-                px = [(d * 131 + i * 17) % 4096 for i in range(96)]
-                out.append(
-                    jpeg_encode_lossless(12, 8, px, 12, (d + 3) % 7 + 1)
-                )
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents").filter("doc_id % 5 = 0")
     media = docs.select(
         F.explode(
             F.array(F.col("doc_id") * 2, F.col("doc_id") * 2 + 1)
         ).alias("media_id")
-    ).select("media_id", _build("media_id").alias("payload"))
+    ).select("media_id", synth_bytes(_lossless, "media_id").alias("payload"))
 
     def _dec(batches):
         import pandas as pd
@@ -4974,8 +4903,6 @@ def x_image_stats(spark, sf_dir):
     pixels. The odd fixture half is deliberately BLANK (flat RGB BMP)
     so the degenerate case the gate exists for is driver-certified."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType
 
     from .operators.multimodal import (
         bmp_encode_rgb24,
@@ -4983,27 +4910,17 @@ def x_image_stats(spark, sf_dir):
         png_encode_gray,
     )
 
-    def _build_fn(doc_id):
-        import pandas as pd
+    def _image(d):
+        if d % 2 == 0:
+            return png_encode_gray(
+                4, 4, [(d * 31 + i * 7) % 256 for i in range(16)]
+            )
+        return bmp_encode_rgb24(3, 2, [d % 256] * 18)
 
-        out = []
-        for d in doc_id:
-            d = int(d)
-            if d % 2 == 0:
-                out.append(
-                    png_encode_gray(
-                        4, 4, [(d * 31 + i * 7) % 256 for i in range(16)]
-                    )
-                )
-            else:
-                out.append(bmp_encode_rgb24(3, 2, [d % 256] * 18))
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(_image, "doc_id").alias("payload"),
     )
     return image_stats(media).drop("parse_error")
 
@@ -5038,31 +4955,22 @@ def x_audio_quality(spark, sf_dir):
     clip counter genuinely counts; all sums are integers end to end so
     the oracle is exact."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType
 
     from .operators.multimodal import audio_quality, wav_encode
 
-    def _build_fn(doc_id):
-        import pandas as pd
+    def _wav(d):
+        vals = [
+            32767
+            if j % 5 == 0
+            else ((d * 13 + j * 7) % 200 - 100) * 300
+            for j in range(d % 6 + 8)
+        ]
+        return wav_encode(vals, 16000, 1, "pcm16")
 
-        out = []
-        for d in doc_id:
-            d = int(d)
-            vals = [
-                32767
-                if j % 5 == 0
-                else ((d * 13 + j * 7) % 200 - 100) * 300
-                for j in range(d % 6 + 8)
-            ]
-            out.append(wav_encode(vals, 16000, 1, "pcm16"))
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(_wav, "doc_id").alias("payload"),
     )
     return audio_quality(media).drop("parse_error")
 
@@ -5140,9 +5048,7 @@ def x_multimodal_dims(spark, sf_dir):
     JPEG half so the marker walk (not the decoder) is what's
     certified."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
     from pyspark.sql.types import (
-        BinaryType,
         IntegerType,
         LongType,
         StringType,
@@ -5161,52 +5067,34 @@ def x_multimodal_dims(spark, sf_dir):
         tiff_encode,
     )
 
-    def _build_fn(doc_id):
-        import pandas as pd
+    def _image(d):
+        k = d % 9
+        w, h = d % 7 + 1, d % 5 + 1
+        if k == 0:
+            return png_encode_gray(w, h, [d % 256] * (w * h))
+        if k == 1:
+            return gif_encode_indexed(
+                w, h, bytes(range(12)), [d % 4] * (w * h)
+            )
+        if k == 2:
+            return bmp_encode_rgb24(w, h, [d % 256] * (3 * w * h))
+        if k == 3:
+            return tiff_encode(
+                w, h, [d % 256] * (w * h), little_endian=d % 2 == 0
+            )
+        if k == 4:
+            return jpeg_encode_gray_dc(
+                16, 8, [d % 128, 0], progressive=d % 2 == 1
+            )
+        if k == 8:
+            return synth_ico_bytes(d)
+        bw, bh = d % 1000 + 1, d % 800 + 1
+        return synth_webp_bytes(bw, bh, ("vp8x", "vp8", "vp8l")[k - 5])
 
-        out = []
-        for d in doc_id:
-            d = int(d)
-            k = d % 9
-            w, h = d % 7 + 1, d % 5 + 1
-            if k == 0:
-                out.append(png_encode_gray(w, h, [d % 256] * (w * h)))
-            elif k == 1:
-                out.append(
-                    gif_encode_indexed(
-                        w, h, bytes(range(12)), [d % 4] * (w * h)
-                    )
-                )
-            elif k == 2:
-                out.append(bmp_encode_rgb24(w, h, [d % 256] * (3 * w * h)))
-            elif k == 3:
-                out.append(
-                    tiff_encode(
-                        w, h, [d % 256] * (w * h), little_endian=d % 2 == 0
-                    )
-                )
-            elif k == 4:
-                out.append(
-                    jpeg_encode_gray_dc(
-                        16, 8, [d % 128, 0], progressive=d % 2 == 1
-                    )
-                )
-            elif k == 8:
-                out.append(synth_ico_bytes(d))
-            else:
-                bw, bh = d % 1000 + 1, d % 800 + 1
-                out.append(
-                    synth_webp_bytes(
-                        bw, bh, ("vp8x", "vp8", "vp8l")[k - 5]
-                    )
-                )
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(_image, "doc_id").alias("payload"),
     )
 
     def _probe(batches):
@@ -5298,26 +5186,13 @@ def x_demux_subtitles(spark, sf_dir):
     (comma vs dot, VTT settings after the arrow, NOTE blocks, cue
     identifiers) and text assembly."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType
 
     from .operators.demux import subtitle_cues, synth_subtitle_bytes
 
-    def _build_fn(doc_id, n_chars):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                synth_subtitle_bytes(int(d), int(n))
-                for d, n in zip(doc_id, n_chars)
-            ]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id", "n_chars").alias("payload"),
+        synth_bytes(synth_subtitle_bytes, "doc_id", "n_chars").alias("payload"),
     )
     return subtitle_cues(media).drop("parse_error")
 
@@ -5769,23 +5644,13 @@ def x_warc_sitemap(spark, sf_dir):
     no XML entity-expansion attack surface, salvages truncated files
     the way crawlers do."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType
 
     from .operators.warc import sitemap_entries, synth_sitemap_bytes
 
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        return pd.Series(
-            [synth_sitemap_bytes(int(d)) for d in doc_id]
-        )
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("sitemap_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_sitemap_bytes, "doc_id").alias("payload"),
     )
     out = sitemap_entries(media)
     # NULL-free lastmod for a stable driver row sort (see
@@ -6297,100 +6162,16 @@ def x_multimodal_sniff(spark, sf_dir):
     multimodal.media_type_column must route every one correctly —
     prefix checks only, no decode, 'unknown' never an exception."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType
 
-    from .operators.multimodal import media_type_column, png_encode_gray
+    from .operators.multimodal import (
+        media_type_column,
+        synth_mixed_media_bytes,
+    )
 
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        from .operators.avro import synth_avro_bytes
-        from .operators.demux import (
-            synth_flac_bytes,
-            synth_id3_mp3_bytes,
-            synth_mp4_bytes,
-            synth_ogg_bytes,
-        )
-        from .operators.mkv import synth_mkv_bytes
-        from .operators.multimodal import (
-            bmp_encode_rgb24,
-            gif_encode_indexed,
-            synth_webp_bytes,
-        )
-        from .operators.pdf import synth_pdf_bytes
-        from .operators.tensors import npy_encode
-        from .operators.warc import synth_warc_bytes
-        from .operators.webdataset import (
-            synth_webdataset_bytes,
-            synth_zip_bytes,
-        )
-
-        out = []
-        for d in doc_id:
-            d = int(d)
-            k = d % 17
-            if k == 0:
-                out.append(png_encode_gray(8, 8, [d % 256] * 64))
-            elif k == 1:
-                out.append(b"P5 2 2 255\n" + bytes(4))
-            elif k == 2:
-                out.append(synth_warc_bytes(d, "x"))
-            elif k == 3:
-                out.append(synth_pdf_bytes(d, "x"))
-            elif k == 4:
-                out.append(synth_flac_bytes(d, 2))
-            elif k == 5:
-                out.append(synth_id3_mp3_bytes(d, 2))
-            elif k == 6:
-                out.append(synth_mp4_bytes(d, 2))
-            elif k == 7:
-                # plain tar shard: 15d+1 ≡ 1 (mod 5) -> plain under
-                # the gzip/plain/bz2/xz/zstd rotation, ≡ 1 (mod 3) ->
-                # 2 samples = 6 members
-                out.append(synth_webdataset_bytes(15 * d + 1, "x"))
-            elif k == 8:
-                out.append(
-                    gif_encode_indexed(
-                        5, 4, bytes(range(12)), [d % 4] * 20
-                    )
-                )
-            elif k == 9:
-                out.append(bmp_encode_rgb24(3, 2, [d % 256] * 18))
-            elif k == 10:
-                out.append(synth_zip_bytes(d, "x"))
-            elif k == 11:
-                out.append(synth_avro_bytes(d))
-            elif k == 12:
-                n = d % 4 + 2
-                out.append(
-                    npy_encode(
-                        list(range(n)),
-                        (n,),
-                        "<f4" if d % 2 == 0 else ">i8",
-                    )
-                )
-            elif k == 13:
-                out.append(
-                    synth_webp_bytes(d % 50 + 2, d % 40 + 2, "vp8l")
-                )
-            elif k == 14:
-                out.append(synth_ogg_bytes(d, 2))
-            elif k == 15:
-                out.append(synth_mkv_bytes(d))
-            else:
-                # xz-compressed tar shard: sniffs as 'xz'; the tar
-                # walker is transparent to it (10d+3 ≡ 3 (mod 5) -> xz
-                # under the five-way rotation; ≡ d (mod 3) keeps the
-                # member count keyed on doc_id)
-                out.append(synth_webdataset_bytes(10 * d + 3, "x"))
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_mixed_media_bytes, "doc_id").alias("payload"),
     )
     return media_type_column(media).select("media_id", "media_type")
 
@@ -6444,101 +6225,13 @@ def x_corpus_mixed_ingest(spark, sf_dir):
     purely to bound the per-pass build cost; the heavier families keep
     their own dedicated certificates.)"""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType
 
-    from .operators.multimodal import png_encode_gray
+    from .operators.multimodal import synth_mixed_media_bytes
 
-    def _build_fn(doc_id):
-        import pandas as pd
-
-        from .operators.avro import synth_avro_bytes
-        from .operators.demux import (
-            synth_flac_bytes,
-            synth_id3_mp3_bytes,
-            synth_mp4_bytes,
-            synth_ogg_bytes,
-        )
-        from .operators.mkv import synth_mkv_bytes
-        from .operators.pdf import synth_pdf_bytes
-        from .operators.tensors import npy_encode
-        from .operators.warc import synth_warc_bytes
-        from .operators.webdataset import (
-            synth_webdataset_bytes,
-            synth_zip_bytes,
-        )
-
-        from .operators.multimodal import (
-            bmp_encode_rgb24,
-            gif_encode_indexed,
-            synth_webp_bytes,
-        )
-
-        out = []
-        for d in doc_id:
-            d = int(d)
-            k = d % 17
-            if k == 0:
-                out.append(png_encode_gray(8, 8, [d % 256] * 64))
-            elif k == 1:
-                out.append(b"P5 2 2 255\n" + bytes(4))
-            elif k == 2:
-                out.append(synth_warc_bytes(d, "x"))
-            elif k == 3:
-                out.append(synth_pdf_bytes(d, "x"))
-            elif k == 4:
-                out.append(synth_flac_bytes(d, 2))
-            elif k == 5:
-                out.append(synth_id3_mp3_bytes(d, 2))
-            elif k == 6:
-                out.append(synth_mp4_bytes(d, 2))
-            elif k == 7:
-                # plain tar shard: 15d+1 ≡ 1 (mod 5) -> plain under
-                # the gzip/plain/bz2/xz/zstd rotation, ≡ 1 (mod 3) ->
-                # 2 samples = 6 members
-                out.append(synth_webdataset_bytes(15 * d + 1, "x"))
-            elif k == 8:
-                out.append(
-                    gif_encode_indexed(
-                        5, 4, bytes(range(12)), [d % 4] * 20
-                    )
-                )
-            elif k == 9:
-                out.append(bmp_encode_rgb24(3, 2, [d % 256] * 18))
-            elif k == 10:
-                out.append(synth_zip_bytes(d, "x"))
-            elif k == 11:
-                out.append(synth_avro_bytes(d))
-            elif k == 12:
-                n = d % 4 + 2
-                out.append(
-                    npy_encode(
-                        list(range(n)),
-                        (n,),
-                        "<f4" if d % 2 == 0 else ">i8",
-                    )
-                )
-            elif k == 13:
-                out.append(
-                    synth_webp_bytes(d % 50 + 2, d % 40 + 2, "vp8l")
-                )
-            elif k == 14:
-                out.append(synth_ogg_bytes(d, 2))
-            elif k == 15:
-                out.append(synth_mkv_bytes(d))
-            else:
-                # xz-compressed tar shard: sniffs as 'xz'; the tar
-                # walker is transparent to it (10d+3 ≡ 3 (mod 5) -> xz
-                # under the five-way rotation; ≡ d (mod 3) keeps the
-                # member count keyed on doc_id)
-                out.append(synth_webdataset_bytes(10 * d + 3, "x"))
-        return pd.Series(out)
-
-    _build = pandas_udf(_build_fn, BinaryType(), PandasUDFType.SCALAR)
     docs = _table(spark, sf_dir, "documents").filter("doc_id % 3 != 0")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
-        _build("doc_id").alias("payload"),
+        synth_bytes(synth_mixed_media_bytes, "doc_id").alias("payload"),
     )
 
     from pyspark.sql.types import (
