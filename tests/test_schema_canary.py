@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import pytest
 
+from tests.py4j_count import py4j_calls
 from user_behavior_spark_pipeline_spark.sources import tables
 from user_behavior_spark_pipeline_spark.sources.tables import TABLES, load_table
 
@@ -62,29 +63,64 @@ def test_documents_text_is_ascii_word_soup(spark, sf_dir):
 
 
 def test_warm_load_table_runs_no_job(spark, sf_dir):
-    """The first read of a file infers its schema with a job; a later read
-    of the unchanged file reuses the memoized schema and runs none."""
-    load_table(spark, sf_dir, "orders")
+    """The first read of a file resolves it with a job; a later read of
+    the unchanged file reuses the memoized relation, so it runs no job.
+    Its py4j round trips are the key's four conf reads and the one call
+    that wraps the memoized relation; a read that resolves the file again
+    makes 17 even with the schema given."""
+    load_table(spark, sf_dir, "region")
     sc = spark.sparkContext
     sc.setJobGroup("load_table_warm", "load_table_warm")
     try:
-        load_table(spark, sf_dir, "orders")
+        _, calls = py4j_calls(lambda: load_table(spark, sf_dir, "region"))
         assert sc.statusTracker().getJobIdsForGroup("load_table_warm") == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    assert calls <= 6, calls
 
 
 @pytest.mark.parametrize("table", TABLES)
 def test_memoized_schema_is_the_inferred_one(spark, sf_dir, table, monkeypatch):
-    """The memo holds exactly what Spark infers, and a read served from
-    it has the same schema as a read that infers."""
+    """The memo holds the read Spark resolves, and a load served from it
+    has the same schema as a load that reads the file."""
     path = f"{sf_dir}/{table}.parquet"
     load_table(spark, sf_dir, table)
     warm = load_table(spark, sf_dir, table).schema
-    key = tables._schema_key(spark, path)
-    assert tables._SCHEMAS[key] == spark.read.parquet(path).schema
-    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    key = tables._relation_key(spark, path)
+    assert tables._RELATIONS[key][0].schema == spark.read.parquet(path).schema
+    monkeypatch.setattr(tables, "_RELATIONS", {})
     assert load_table(spark, sf_dir, table).schema == warm
+
+
+def test_self_join_of_two_loads_matches_plain_reads(spark, sf_dir):
+    """Each load has its own attribute ids, so two loads of one table
+    join like two independent reads."""
+    import pyspark.sql.functions as F
+
+    path = f"{sf_dir}/orders.parquet"
+
+    def pairs(a, b):
+        return a.join(
+            b.where(F.col("o_orderstatus") == "F"),
+            a["o_custkey"] == b["o_custkey"],
+        ).count()
+
+    loaded = pairs(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "orders")
+    )
+    plain = pairs(spark.read.parquet(path), spark.read.parquet(path))
+    assert loaded == plain > 0
+
+
+def test_memo_never_serves_another_session(spark, sf_dir):
+    """A second session sharing the context gets a frame of its own
+    session, never the first session's memoized one."""
+    load_table(spark, sf_dir, "nation")
+    other = spark.newSession()
+    df = load_table(other, sf_dir, "nation")
+    assert df.sparkSession is other
+    assert df._jdf.sparkSession().equals(other._jsparkSession)
+    assert load_table(spark, sf_dir, "nation").sparkSession is spark
 
 
 def test_rewritten_file_is_inferred_again(spark, tmp_path):
@@ -114,7 +150,7 @@ def test_schema_memo_stays_bounded_under_concurrent_inserts(monkeypatch):
     import sys
     import threading
 
-    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    monkeypatch.setattr(tables, "_RELATIONS", {})
     errors = []
 
     def insert(t):
@@ -136,4 +172,4 @@ def test_schema_memo_stays_bounded_under_concurrent_inserts(monkeypatch):
         sys.setswitchinterval(old)
     assert not any(th.is_alive() for th in threads)
     assert errors == []
-    assert len(tables._SCHEMAS) == tables._SCHEMA_MEMO_MAX
+    assert len(tables._RELATIONS) == tables._RELATION_MEMO_MAX

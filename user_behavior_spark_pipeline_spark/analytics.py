@@ -17,11 +17,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sqltext import ident
+
+# Built from SQL expression strings (sqltext.py): a string costs a few py4j
+# round trips however large it is, a Column chain a few per call.
+
 # --- OP-Q-COUNT (README.md:622-631) ---
 
 
 def count_events(df: DataFrame) -> DataFrame:
-    return df.agg(F.count(F.lit(1)).alias("num_entries"))
+    return df.selectExpr("count(1) AS num_entries")
 
 
 # --- OP-Q-LIMIT (README.md:636-651) — made deterministic via ORDER BY ---
@@ -35,14 +40,16 @@ def first_events(df: DataFrame, order_col: str, n: int = 10) -> DataFrame:
 
     Plans as TakeOrderedAndProject: per-partition top-n then merge — no
     global sort."""
-    return df.orderBy(order_col).limit(n)
+    return df.orderBy(F.expr(ident(order_col))).limit(n)
 
 
 # --- OP-Q-GROUPBY-1 (README.md:657-668) ---
 
 
 def events_by(df: DataFrame, key: str, count_alias: str = "num_events") -> DataFrame:
-    return df.groupBy(key).agg(F.count(F.lit(1)).alias(count_alias))
+    return df.groupBy(F.expr(ident(key))).agg(
+        F.expr(f"count(1) AS {ident(count_alias)}")
+    )
 
 
 # --- OP-Q-GROUPBY-2 (README.md:776-791) ---
@@ -52,8 +59,11 @@ def events_by_host_and_type(
     df: DataFrame, host_col: str = "Host", type_col: str = "event_type"
 ) -> DataFrame:
     return (
-        df.groupBy(F.col(host_col).alias("host"), F.col(type_col).alias("event_type"))
-        .agg(F.count(F.lit(1)).alias("num_events"))
+        df.groupBy(
+            F.expr(f"{ident(host_col)} AS host"),
+            F.expr(f"{ident(type_col)} AS event_type"),
+        )
+        .agg(F.expr("count(1) AS num_events"))
         .orderBy(F.desc("event_type"))
     )
 
@@ -68,10 +78,10 @@ def distinct_host_type_detail(
     detail_col: str = "event_detail",
 ) -> DataFrame:
     return (
-        df.select(
-            F.col(host_col).alias("host"),
-            F.col(type_col).alias("event_type"),
-            F.col(detail_col).alias("event_detail"),
+        df.selectExpr(
+            f"{ident(host_col)} AS host",
+            f"{ident(type_col)} AS event_type",
+            f"{ident(detail_col)} AS event_detail",
         )
         .distinct()
         .orderBy(F.asc("event_type"), F.desc("event_detail"))

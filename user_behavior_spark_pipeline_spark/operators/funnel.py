@@ -34,8 +34,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sqltext import ident, literal
 
 
 def funnel_reach(
@@ -70,22 +72,27 @@ def funnel_reach(
     """
     if len(steps) < 2:
         raise ValueError("a funnel needs at least 2 steps")
+    user, etype, ts = ident(user_col), ident(type_col), ident(ts_col)
     # map event types to dense ids; each STEP POSITION then references a
     # type id — the step list itself travels as a literal array the fold
     # indexes by depth (supports repeated types at different positions)
     uniq = list(dict.fromkeys(steps))
     tid_of = {t: i for i, t in enumerate(uniq)}
-    tid_col = F.when(F.col(type_col) == uniq[0], F.lit(0))
-    for t in uniq[1:]:
-        tid_col = tid_col.when(F.col(type_col) == t, F.lit(tid_of[t]))
-    step_tids = F.array(*[F.lit(tid_of[s]).cast("int") for s in steps])
+    tid_col = " ".join(
+        f"WHEN {etype} = {literal(t)} THEN {i}" for t, i in tid_of.items()
+    )
+    step_tids = ", ".join(f"CAST({tid_of[s]} AS INT)" for s in steps)
     # types appearing at positions >= 2 can advance the chain; an event
     # type appearing ONLY as step 1 never needs collecting
-    later_types = set(steps[1:])
-    ev = events.filter(F.col(type_col).isin(*steps)).select(
-        F.col(user_col).alias("user_id"),
-        tid_col.cast("int").alias("tid"),
-        F.col(ts_col).alias("ts"),
+    later_tids = ", ".join(
+        str(i) for i in sorted(tid_of[t] for t in set(steps[1:]))
+    )
+    ev = events.where(
+        f"{etype} IN ({', '.join(literal(s) for s in steps)})"
+    ).selectExpr(
+        f"{user} AS user_id",
+        f"CAST(CASE {tid_col} END AS INT) AS tid",
+        f"{ts} AS ts",
     )
     # ONE array of (ts, idx) per user. The chain is then a single sorted
     # fold per row — t_k = earliest step-k event strictly after t_{k-1} is
@@ -96,61 +103,48 @@ def funnel_reach(
     # per-element lambda (the HOF-inlining pitfall documented at
     # dedup.shingles), re-evaluating it once per element. Measured: 10
     # users x 320k events took 943 s; the sorted fold takes seconds.
-    later_tids = sorted(tid_of[t] for t in later_types)
     agg = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("tid") == tid_of[steps[0]], F.col("ts"))
-        ).alias("t1"),
-        F.collect_list(
-            F.when(
-                F.col("tid").isin(later_tids), F.struct("ts", "tid")
-            )
-        ).alias("_evts"),
+        F.expr(f"min(CASE WHEN tid = {tid_of[steps[0]]} THEN ts END) AS t1"),
+        F.expr(
+            f"collect_list(CASE WHEN tid IN ({later_tids}) THEN struct(ts, tid) END)"
+            " AS _evts"
+        ),
     )
-    out = agg.filter(F.col("t1").isNotNull())
     # array_sort on struct(ts, tid): time order, tid as tie-break — ties
     # in ts cannot advance the chain either way (strict > below), so the
-    # tie-break never changes the result, it only makes the scan stable
-    init = F.struct(
-        F.lit(1).cast("int").alias("depth"),
-        F.array(F.col("t1")).alias("times"),
+    # tie-break never changes the result, it only makes the scan stable.
+    # get() is 0-based and NULL-safe past the end: at full depth the
+    # required-type lookup is NULL, the step test is NULL, and the fold
+    # keeps acc (element_at would raise under ANSI when depth ==
+    # len(steps)). times = [t1, t2, ... t_depth]: the greedy chain.
+    times = (
+        "aggregate(array_sort(_evts),"
+        " named_struct('depth', CAST(1 AS INT), 'times', array(t1)),"
+        " (acc, e) -> CASE WHEN"
+        f" e.tid = get(array({step_tids}), CAST(acc.depth AS INT))"
+        " AND e.ts > element_at(acc.times, -1)"
+        " THEN named_struct('depth', acc.depth + CAST(1 AS INT),"
+        " 'times', concat(acc.times, array(e.ts)))"
+        " ELSE acc END).times"
     )
-
-    def _advance(acc, e):
-        # F.get is 0-based and NULL-safe past the end: at full depth the
-        # required-type lookup is NULL, ok is NULL, and the fold keeps acc
-        # (element_at would raise under ANSI when depth == len(steps))
-        ok = (
-            e["tid"] == F.get(step_tids, acc["depth"].cast("int"))
-        ) & (e["ts"] > F.element_at(acc["times"], -1))
-        return F.when(
-            ok,
-            F.struct(
-                (acc["depth"] + F.lit(1).cast("int")).alias("depth"),
-                F.concat(acc["times"], F.array(e["ts"])).alias("times"),
-            ),
-        ).otherwise(acc)
-
-    # times = [t1, t2, ... t_depth]: the greedy chain's timestamps
-    times = F.aggregate(F.array_sort(F.col("_evts")), init, _advance)["times"]
-    out = out.select("user_id", "t1", times.alias("_times"))
+    out = agg.where("t1 IS NOT NULL").selectExpr(
+        "user_id", "t1", f"{times} AS _times"
+    )
     if horizon_seconds is None:
-        reached = F.size("_times")
+        reached = "size(_times)"
     else:
         # steps inside the horizon are prefix-monotone (times ascend);
         # NTZ-safe seconds: NTZ - NTZ is a day-time interval, compared
         # against a literal interval — no session-timezone dependence
-        bound = F.make_dt_interval(
-            F.lit(0), F.lit(0), F.lit(0), F.lit(horizon_seconds)
+        reached = (
+            "size(filter(_times, t -> (t - t1)"
+            f" <= make_dt_interval(0, 0, 0, {int(horizon_seconds)})))"
         )
-        reached = F.size(
-            F.filter(F.col("_times"), lambda t: (t - F.col("t1")) <= bound)
-        )
-    return out.select(
+    return out.selectExpr(
         "user_id",
-        reached.cast("long").alias("steps_reached"),
-        F.col("t1").alias("t_first"),
-        F.element_at(F.col("_times"), reached.cast("int")).alias("t_last"),
+        f"CAST({reached} AS BIGINT) AS steps_reached",
+        "t1 AS t_first",
+        f"element_at(_times, CAST({reached} AS INT)) AS t_last",
     )
 
 
@@ -170,23 +164,16 @@ def funnel_counts(
     task runs, and a funnel with no step-1 event still yields every step
     with 0 users."""
     reach = funnel_reach(events, steps, horizon_seconds, **kwargs)
-    counts = reach.agg(
-        *[
-            F.count_if(F.col("steps_reached") >= k).alias(f"_n{k}")
-            for k in range(1, len(steps) + 1)
-        ]
+    n = range(1, len(steps) + 1)
+    counts = reach.selectExpr(
+        *[f"count_if(steps_reached >= {k}) AS _n{k}" for k in n]
     )
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(k).cast("long").alias("step_index"),
-                F.lit(s).alias("step"),
-                F.col(f"_n{k}").alias("n_users"),
-            )
-            for k, s in enumerate(steps, start=1)
-        ]
+    rows = ", ".join(
+        f"named_struct('step_index', CAST({k} AS BIGINT),"
+        f" 'step', {literal(s)}, 'n_users', _n{k})"
+        for k, s in zip(n, steps)
     )
-    return counts.select(F.inline(rows))
+    return counts.selectExpr(f"inline(array({rows}))")
 
 
 def retention_matrix(
@@ -211,37 +198,34 @@ def retention_matrix(
     Columns: cohort_day (first period start, yyyy-MM-dd), periods_later
     (0 = the cohort period itself), n_active.
     """
+    user, ts = ident(user_col), ident(ts_col)
     # a NULL user has no cohort (the oracle's inner join drops it)
-    ev = events.where(F.col(user_col).isNotNull()).select(
-        F.col(user_col).alias("user_id"),
-        F.date_trunc("day", F.col(ts_col)).alias("day"),
+    ev = events.where(f"{user} IS NOT NULL").selectExpr(
+        f"{user} AS user_id", f"date_trunc('day', {ts}) AS day"
     )
     # snap the cohort to its epoch-aligned bucket start so every member of
     # a calendar bucket shares one cohort label
-    cohort_start = F.date_sub(
-        F.col("first_day").cast("date"),
-        F.datediff(
-            F.col("first_day").cast("date"), F.lit("1970-01-01").cast("date")
+    first = "CAST(first_day AS DATE)"
+    cohorted = (
+        ev.selectExpr("*", "min(day) OVER (PARTITION BY user_id) AS first_day")
+        .selectExpr(
+            "*",
+            f"date_sub({first}, datediff({first}, CAST('1970-01-01' AS DATE))"
+            f" % {int(bucket_days)}) AS cohort_start",
         )
-        % bucket_days,
-    )
-    first_day = F.min("day").over(Window.partitionBy("user_id"))
-    cohorted = ev.withColumn("first_day", first_day).withColumn(
-        "cohort_start", cohort_start
-    ).select(
-        "user_id",
-        "cohort_start",
-        (
-            F.datediff(F.col("day").cast("date"), F.col("cohort_start"))
-            / bucket_days
+        .selectExpr(
+            "user_id",
+            "cohort_start",
+            f"CAST(datediff(CAST(day AS DATE), cohort_start) / {int(bucket_days)}"
+            " AS BIGINT) AS periods_later",
         )
-        .cast("long")
-        .alias("periods_later"),
     )
-    return cohorted.groupBy("cohort_start", "periods_later").agg(
-        F.countDistinct("user_id").alias("n_active")
-    ).select(
-        F.date_format("cohort_start", "yyyy-MM-dd").alias("cohort_day"),
-        "periods_later",
-        "n_active",
+    return (
+        cohorted.groupBy("cohort_start", "periods_later")
+        .agg(F.expr("count(DISTINCT user_id) AS n_active"))
+        .selectExpr(
+            "date_format(cohort_start, 'yyyy-MM-dd') AS cohort_day",
+            "periods_later",
+            "n_active",
+        )
     )

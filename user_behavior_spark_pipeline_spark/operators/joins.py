@@ -54,21 +54,25 @@ def revenue_per_region_nation(
 ) -> DataFrame:
     """4-way star join: revenue = sum(extendedprice * (1 - discount)) per
     (region, nation). Dims broadcast; one shuffle total (the final group-by).
+    Built from SQL strings (``money_e4`` and ``sum_money`` spelled out), a
+    few py4j round trips per clause instead of per Column call.
     """
-    rev = money_e4(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")))
+    rev = "CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)"
     return (
-        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        lineitem.join(orders, F.expr("l_orderkey = o_orderkey"))
         # customer grows with scale factor — no forced broadcast (a hint
         # bypasses autoBroadcastJoinThreshold and would OOM at 100 TB);
         # AQE/static stats still broadcast it while it fits. nation and
         # region are FIXED-size (25/5 rows at any SF): hint is always right.
-        .join(customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
+        .join(customer, F.expr("o_custkey = c_custkey"))
+        .join(F.broadcast(nation), F.expr("c_nationkey = n_nationkey"))
+        .join(F.broadcast(region), F.expr("n_regionkey = r_regionkey"))
+        .groupBy(F.expr("r_name AS region"), F.expr("n_name AS nation"))
         .agg(
-            sum_money(rev).alias("revenue_x10000"),
-            F.count(F.lit(1)).alias("num_items"),
+            F.expr(
+                f"CAST(sum(CAST({rev} AS DECIMAL(38,0))) AS BIGINT) AS revenue_x10000"
+            ),
+            F.expr("count(1) AS num_items"),
         )
     )
 

@@ -59,7 +59,7 @@ def udtf_tokenize(spark: SparkSession, documents: DataFrame, max_doc_id: int = 2
     token's position (lateral join). Oracle twin: UNNEST WITH ORDINALITY."""
     import re
 
-    from pyspark.sql.functions import lit, udtf
+    from pyspark.sql.functions import udtf
 
     @udtf(returnType="token_idx int, token string")
     class Tokenize:

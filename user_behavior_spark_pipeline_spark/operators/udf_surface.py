@@ -21,7 +21,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
     StructField,
     StructType,

@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,

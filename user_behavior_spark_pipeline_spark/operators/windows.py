@@ -22,16 +22,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sqltext import literal
+
 
 def top_orders_per_customer(orders: DataFrame, k: int = 3) -> DataFrame:
     """Top-k orders per customer by price; deterministic tie-break on key."""
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
     return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("o_custkey", "o_orderkey", "rn")
+        orders.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY o_custkey"
+            " ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn",
+        )
+        .where(f"rn <= {int(k)}")
+        .selectExpr("o_custkey", "o_orderkey", "rn")
     )
 
 
@@ -101,12 +104,10 @@ def user_sessions(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     the event count and the session start as epoch seconds (exact across
     engines; sub-second truncated)."""
     return (
-        events.groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("num_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("w.start")).alias("session_start_s"),
-            "num_events",
+        events.groupBy("user_id", F.expr(f"session_window(ts, {literal(gap)}) AS w"))
+        .agg(F.expr("count(1) AS num_events"))
+        .selectExpr(
+            "user_id", "unix_timestamp(w.start) AS session_start_s", "num_events"
         )
     )
 

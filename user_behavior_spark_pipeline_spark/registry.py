@@ -4825,8 +4825,6 @@ def x_warc_feeds(spark, sf_dir):
     links come from href attributes, gzip transparent). The closed
     form pins both dialects and both title encodings; corruption
     quarantines."""
-    from pyspark.sql import functions as F
-
     from .operators.warc import feed_entries, synth_feed_media
 
     docs = _table(spark, sf_dir, "documents")
@@ -4866,8 +4864,6 @@ def x_demux_hls(spark, sf_dir):
     to per-variant rows (BANDWIDTH/RESOLUTION, quoted attribute lists
     with embedded commas). Corruption (missing header, bad duration,
     dangling EXTINF, URI without a tag) quarantines."""
-    from pyspark.sql import functions as F
-
     from .operators.demux import hls_playlists, synth_m3u8_media
 
     docs = _table(spark, sf_dir, "documents")
@@ -5005,8 +5001,6 @@ def x_png_metadata(spark, sf_dir):
     the bit rot Arrow IPC cannot. Unicode text rides iTXt end to end;
     the closed form pins all five chunk families and both EXIF byte
     orders (rotating with parity)."""
-    from pyspark.sql import functions as F
-
     from .operators.multimodal import png_text_rows, synth_png_meta_media
 
     docs = _table(spark, sf_dir, "documents")
@@ -5220,8 +5214,6 @@ def x_demux_fmp4(spark, sf_dir):
 
     docs = _table(spark, sf_dir, "documents").filter("doc_id % 2 = 1")
     samples = mp4_sample_ranges(synth_fmp4_media(docs))
-    from pyspark.sql import functions as F
-
     return samples.select(
         "media_id",
         "track_id",
@@ -5422,8 +5414,6 @@ def x_warc_http(spark, sf_dir):
     land mid-tag, so skipping the dechunker breaks the hash, and
     extracting over the raw body would leak header text into the
     answer."""
-    from pyspark.sql import functions as F
-
     from .operators.warc import (
         extract_html_text,
         split_http_response,

@@ -15,7 +15,7 @@ from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType, TimestampType
+from pyspark.sql.types import LongType, TimestampType
 
 TABLES = (
     "region",
@@ -37,15 +37,20 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
-_SCHEMA_MEMO_MAX = 256
-_SCHEMAS: dict[tuple, StructType] = {}
-_SCHEMAS_LOCK = threading.Lock()
+_RELATION_MEMO_MAX = 256
+# key -> (the first read's frame, which holds the session; its resolved
+# BaseRelation)
+_RELATIONS: dict[tuple, tuple[DataFrame, object]] = {}
+_RELATIONS_LOCK = threading.Lock()
 
 
-def _schema_key(spark: SparkSession, path: str) -> tuple | None:
-    """Memo key of a local regular file: (abspath, size, mtime_ns, inode,
-    inference confs). None for a directory, a remote URI or a missing
-    path, which keep the plain read (and Spark's own error)."""
+def _relation_key(spark: SparkSession, path: str) -> tuple | None:
+    """Memo key of a local regular file: (session, abspath, size,
+    mtime_ns, inode, inference confs). None for a directory, a remote URI
+    or a missing path, which keep the plain read (and Spark's own error).
+
+    The session is its ``id``: a memoized entry holds its session, so no
+    other session can take that id while the entry lives."""
     if urlsplit(path).scheme:
         return None
     try:
@@ -55,40 +60,61 @@ def _schema_key(spark: SparkSession, path: str) -> tuple | None:
     if not stat.S_ISREG(st.st_mode):
         return None
     confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
-    return (os.path.abspath(path), st.st_size, st.st_mtime_ns, st.st_ino, confs)
+    return (
+        id(spark),
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        st.st_ino,
+        confs,
+    )
+
+
+def _remember(key: tuple, entry: tuple) -> None:
+    with _RELATIONS_LOCK:
+        if len(_RELATIONS) >= _RELATION_MEMO_MAX:
+            del _RELATIONS[next(iter(_RELATIONS))]
+        _RELATIONS[key] = entry
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    key = _schema_key(spark, path)
+    """A read of ``path``, from the memo when it holds the file's resolved
+    relation."""
+    key = _relation_key(spark, path)
     if key is None:
         return spark.read.parquet(path)
-    with _SCHEMAS_LOCK:
-        schema = _SCHEMAS.get(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
+    with _RELATIONS_LOCK:
+        hit = _RELATIONS.get(key)
+    if hit is not None:
+        # a new LogicalRelation over the resolved relation, which is what
+        # spark.read builds once it has resolved one: the plan of a plain
+        # read, with attribute ids of its own
+        jdf = spark._jsparkSession.baseRelationToDataFrame(hit[1])
+        return DataFrame(jdf, spark)
     df = spark.read.parquet(path)
-    _remember(key, df.schema)
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRelation":
+        _remember(key, (df, plan.relation()))
     return df
 
 
-def _remember(key: tuple, schema: StructType) -> None:
-    with _SCHEMAS_LOCK:
-        if len(_SCHEMAS) >= _SCHEMA_MEMO_MAX:
-            del _SCHEMAS[next(iter(_SCHEMAS))]
-        _SCHEMAS[key] = schema
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read ``<sf_dir>/<name>.parquet``.
+    """Read ``<sf_dir>/<name>.parquet`` (``events`` with ``ts`` as
+    TIMESTAMP_NTZ).
 
     A plain parquet read runs a one-task job to infer the schema from the
-    footer on every call. For a local regular file the inferred schema is
-    memoized (at most ``_SCHEMA_MEMO_MAX`` entries, oldest dropped first)
-    under the file's absolute path, size, mtime_ns and inode plus the
-    session's parquet inference confs, and later reads pass it in, so
-    they run no job. A rewritten file (new inode or mtime, as when the
-    test data is regenerated) misses and is inferred again. Directories
-    and remote URIs always use the plain read.
+    footer and then resolves the file into a relation (about 7 ms of
+    driver time), on every call. For a local regular file the resolved
+    relation is memoized (at most ``_RELATION_MEMO_MAX`` entries, oldest
+    dropped first) under the session, the file's absolute path, size,
+    mtime_ns and inode and the session's parquet inference confs. A warm
+    load wraps it in a new ``LogicalRelation``: the plan of a plain read,
+    with attribute ids of its own, so two loads of one table in one query
+    join like two reads, and it runs no job and resolves nothing. A
+    rewritten file (new inode or mtime, as when the test data is
+    regenerated) misses and is read again; another session never gets
+    this session's relation. Directories and remote URIs always use the
+    plain read.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
