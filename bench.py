@@ -42,10 +42,7 @@ the driver contract fields are unchanged).
 
 Layer counters go to BENCH_DETAIL.json only: each query's ``spread`` entry
 holds ``codegen_compiles``, the Janino compiles of each sample (aligned with
-``all``), read just before and just after the timed window, and
-``build_ms``, each sample's builder-call wall time (the driver-side plan
-build, plus any eager work the builder runs) from one ``perf_counter`` read
-between the build and the write. A query whose
+``all``), read just before and just after the timed window. A query whose
 samples ran micro-batches (the ``x_stream_*`` family, whose streams run
 inside the builder) also holds ``stream_batches`` and ``stream_phase_ms``:
 per sample, the progress events one ``StreamingQueryListener`` saw and
@@ -165,8 +162,6 @@ def main() -> None:
     # aligned with samples[name]; read after the timed window
     batches: dict[str, list[int]] = {n: [] for n in bench_names}
     phase_ms: dict[str, list[dict[str, int]]] = {n: [] for n in bench_names}
-    # the builder call's wall time per sample (ms), aligned likewise
-    build_ms: dict[str, list[float]] = {n: [] for n in bench_names}
     bench_start = time.perf_counter()
 
     def _sample(name: str) -> None:
@@ -186,7 +181,6 @@ def main() -> None:
         seen = len(progress.durations)
         t0 = time.perf_counter()
         df = QUERIES[name](spark, sf_dir)
-        built = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         # reclaim executor storage held by shared-intermediate caches
         # (cache_shared registry) — inside the timed window: releasing a
@@ -204,7 +198,6 @@ def main() -> None:
         # is the point.
         release_keyed()
         samples[name].append(round(time.perf_counter() - t0, 3))
-        build_ms[name].append(round((built - t0) * 1000.0, 1))
         compiles[name].append(codegen_compiles(spark) - compiled)
         listener_bus.waitUntilEmpty()
         ran = progress.durations[seen:]
@@ -273,7 +266,6 @@ def main() -> None:
             "all": t,
             "n_samples": len(t),
             "codegen_compiles": compiles[n],
-            "build_ms": build_ms[n],
         }
         for n, t in samples.items()
         if t

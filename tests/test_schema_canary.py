@@ -81,13 +81,20 @@ def test_warm_load_table_runs_no_job(spark, sf_dir):
 
 @pytest.mark.parametrize("table", TABLES)
 def test_memoized_schema_is_the_inferred_one(spark, sf_dir, table, monkeypatch):
-    """The memo holds the read Spark resolves, and a load served from it
-    has the same schema as a load that reads the file."""
+    """The memoized relation has the schema Spark infers for the file,
+    and a load served from it has the same schema as a load that reads
+    the file."""
+    import json
+
+    from pyspark.sql.types import StructType
+
     path = f"{sf_dir}/{table}.parquet"
     load_table(spark, sf_dir, table)
     warm = load_table(spark, sf_dir, table).schema
     key = tables._relation_key(spark, path)
-    assert tables._RELATIONS[key][0].schema == spark.read.parquet(path).schema
+    relation = tables._RELATIONS[key][1]
+    served = StructType.fromJson(json.loads(relation.schema().json()))
+    assert served == spark.read.parquet(path).schema
     monkeypatch.setattr(tables, "_RELATIONS", {})
     assert load_table(spark, sf_dir, table).schema == warm
 

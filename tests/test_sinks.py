@@ -72,36 +72,6 @@ def test_max_records_per_file_bounds_files(spark, sf_dir, tmp_path):
     assert len(files) >= n_rows // 100
 
 
-def test_partitioned_write_is_one_file_per_partition_value(spark, sf_dir, tmp_path):
-    """The rebalance hint gathers each partition value's rows before the
-    write: an input spread over 8 tasks lands as one file per value, and
-    ``max_records_per_file`` still splits each value's rows into
-    ceil(rows / bound) files."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    ev = load_table(spark, sf_dir, "events").repartition(8)
-
-    def layout(out):
-        return {
-            d: [pq.read_metadata(f).num_rows for f in glob.glob(f"{d}/*.parquet")]
-            for d in glob.glob(f"{out}/event_type=*")
-        }
-
-    one = str(tmp_path / "one_per_value")
-    write_partitioned(ev, one, ["event_type"])
-    files = layout(one)
-    assert len(files) > 1
-    assert all(len(rows) == 1 for rows in files.values()), files
-    bounded = str(tmp_path / "bounded")
-    write_partitioned(ev, bounded, ["event_type"], max_records_per_file=100)
-    for d, rows in layout(bounded).items():
-        assert max(rows) <= 100
-        assert len(rows) == -(-sum(rows) // 100), (d, rows)
-    assert sum(map(sum, layout(bounded).values())) == ev.count()
-
-
 def test_compaction_restores_file_count_and_data(spark, sf_dir, tmp_path):
     from user_behavior_spark_pipeline_spark.sinks import compact_parquet_dir
 

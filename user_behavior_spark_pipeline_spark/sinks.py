@@ -16,9 +16,6 @@ The reference's only batch sink is ``.write.mode('overwrite').parquet(...)``
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .sqltext import ident
 
 
 def write_partitioned(
@@ -28,17 +25,17 @@ def write_partitioned(
     mode: str = "overwrite",
     max_records_per_file: int | None = None,
 ) -> None:
-    """Write ``df`` as parquet partitioned by ``partition_cols``.
+    """Write ``df`` as parquet under ``path``, one directory per value of
+    ``partition_cols``.
 
-    A ``rebalance`` hint on the partition columns shuffles the rows of
-    each partition value together first, so AQE writes one file per value
-    per advisory-size chunk
-    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) instead of one
-    small file per input task per value, and a scan of the result opens a
-    file per value, not per task. ``max_records_per_file`` still splits a
-    chunk past that many rows."""
-    rebalance = [F.expr(ident(c)) for c in partition_cols]
-    writer = df.hint("rebalance", *rebalance).write.mode(mode)
+    The write adds no shuffle: each task writes one file per partition
+    value it holds, so a write makes up to tasks × values files, and
+    ``max_records_per_file`` splits a file past that many rows. A
+    ``rebalance`` hint on the partition columns would write one file per
+    value, at the price of a shuffle that costs ingest more than the
+    smaller lake saves its scans (SCALE.md, "Driver-side builds and the
+    lake layout")."""
+    writer = df.write.mode(mode)
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.partitionBy(*partition_cols).parquet(path)

@@ -38,9 +38,9 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
 _RELATION_MEMO_MAX = 256
-# key -> (the first read's frame, which holds the session; its resolved
+# key -> (the session, pinned so its id is not reused; the file's resolved
 # BaseRelation)
-_RELATIONS: dict[tuple, tuple[DataFrame, object]] = {}
+_RELATIONS: dict[tuple, tuple[SparkSession, object]] = {}
 _RELATIONS_LOCK = threading.Lock()
 
 
@@ -49,7 +49,7 @@ def _relation_key(spark: SparkSession, path: str) -> tuple | None:
     mtime_ns, inode, inference confs). None for a directory, a remote URI
     or a missing path, which keep the plain read (and Spark's own error).
 
-    The session is its ``id``: a memoized entry holds its session, so no
+    The session is its ``id``: a memoized entry pins its session, so no
     other session can take that id while the entry lives."""
     if urlsplit(path).scheme:
         return None
@@ -94,7 +94,7 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() == "LogicalRelation":
-        _remember(key, (df, plan.relation()))
+        _remember(key, (spark, plan.relation()))
     return df
 
 
@@ -113,8 +113,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     join like two reads, and it runs no job and resolves nothing. A
     rewritten file (new inode or mtime, as when the test data is
     regenerated) misses and is read again; another session never gets
-    this session's relation. Directories and remote URIs always use the
-    plain read.
+    this session's relation. Each entry pins its session (a stopped one
+    or one from ``newSession()`` too) until the entry is dropped.
+    Directories and remote URIs always use the plain read.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
