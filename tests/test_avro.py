@@ -4,9 +4,6 @@ examples ARE the oracle), container walk, quarantine."""
 
 from __future__ import annotations
 
-import struct
-import zlib
-
 import pytest
 
 from user_behavior_spark_pipeline_spark.operators.avro import (

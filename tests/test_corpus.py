@@ -7,7 +7,6 @@ pinned on constructed inputs where the right answer is known by hand.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from user_behavior_spark_pipeline_spark.operators.corpus import (
     chunk_documents,

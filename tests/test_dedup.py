@@ -5,13 +5,60 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from user_behavior_spark_pipeline_spark.operators.dedup import (
-    exact_duplicates,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_near_pairs,
 )
 from user_behavior_spark_pipeline_spark.sources.tables import load_table
+
+
+def _exact_duplicates(documents):
+    """Reference exact dedup: one text-keyed groupBy, (min doc_id, copies)
+    per distinct text."""
+    return documents.groupBy("text").agg(
+        F.min("doc_id").alias("min_doc_id"),
+        F.count(F.lit(1)).alias("n_copies"),
+    ).select("min_doc_id", "n_copies")
+
+
+def _embedding_near_dup_pairs(embeddings, threshold):
+    """Reference exact embedding-cosine pairs: the corpus matrix is
+    collected to the driver and each Arrow batch scores against it as one
+    numpy matmul. (vec_id_1, vec_id_2, cosine_x1e6), i<j, half-up at the
+    1e-6 grain."""
+    import numpy as np
+
+    rows = embeddings.select("vec_id", "embedding").collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+
+    def _score(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+            x /= np.linalg.norm(x, axis=1, keepdims=True)
+            xid = pdf["vec_id"].to_numpy(dtype=np.int64)
+            sims = x @ mat.T
+            mask = (sims >= threshold) & (xid[:, None] < ids[None, :])
+            i, j = np.nonzero(mask)
+            yield pd.DataFrame(
+                {
+                    "vec_id_1": xid[i],
+                    "vec_id_2": ids[j],
+                    "cosine_x1e6": np.floor(sims[i, j] * 1_000_000 + 0.5).astype(
+                        np.int64
+                    ),
+                }
+            )
+
+    return embeddings.select("vec_id", "embedding").mapInPandas(
+        _score, "vec_id_1 long, vec_id_2 long, cosine_x1e6 long"
+    )
 
 
 @pytest.fixture(scope="module")
@@ -100,12 +147,17 @@ def test_simhash_default_threshold_recall(docs, true_pairs):
 
 
 def test_exact_dedup_counts_planted_duplicates(spark):
+    from user_behavior_spark_pipeline_spark.operators.dedup import (
+        exact_duplicates_hashed,
+    )
+
     df = spark.createDataFrame(
         [(1, "aaa"), (2, "bbb"), (3, "aaa"), (4, "aaa"), (5, "ccc")],
         "doc_id long, text string",
     )
     out = {
-        r["min_doc_id"]: r["n_copies"] for r in exact_duplicates(df).collect()
+        r["min_doc_id"]: r["n_copies"]
+        for r in exact_duplicates_hashed(df).collect()
     }
     assert out == {1: 3, 2: 1, 5: 1}
 
@@ -114,11 +166,9 @@ def test_embedding_lsh_recall_on_perturbed_near_dups(spark, sf_dir):
     """Plant NEAR (not exact) duplicates — each vector scaled per-element by
     a deterministic factor that keeps cosine ~0.97 — and require high recall
     from the LSH path against the exact path on the same corpus."""
-    from pyspark.sql import functions as F
-
     from user_behavior_spark_pipeline_spark.operators.dedup import (
+        embedding_near_dup_blocked,
         embedding_near_dup_lsh,
-        embedding_near_dup_pairs,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").limit(200)
@@ -136,7 +186,7 @@ def test_embedding_lsh_recall_on_perturbed_near_dups(spark, sf_dir):
     exact = set(
         map(
             tuple,
-            embedding_near_dup_pairs(planted, threshold=0.9)
+            embedding_near_dup_blocked(planted, threshold=0.9)
             .select("vec_id_1", "vec_id_2")
             .toPandas()
             .values,
@@ -184,8 +234,6 @@ def test_semantic_dedup_catches_planted_paraphrases(spark, sf_dir):
     pairs of the corpus-recall test, a near-identical pair only splits
     when it straddles a Voronoi boundary. Same deterministic perturbation
     as the LSH recall test above."""
-    from pyspark.sql import functions as F
-
     from user_behavior_spark_pipeline_spark.operators.dedup import (
         semantic_near_dup_pairs,
     )
@@ -227,23 +275,6 @@ def test_lsh_auto_knobs_scale_with_corpus():
     for n in (8192, 8192 * 8, 8192 * 32, 8192 * 1024):
         bits, _ = lsh_auto_knobs(n)
         assert n / (1 << bits) <= 8192 / (1 << 8) + 1e-9
-
-
-def test_embedding_near_dup_exact_baseline_refuses_unbounded_collect(
-    spark, sf_dir
-):
-    """The all-pairs oracle baseline collects the corpus matrix to the
-    driver — past max_collect_rows it must refuse with a pointer to the
-    scale paths instead of attempting the collect."""
-    import pytest
-
-    from user_behavior_spark_pipeline_spark.operators.dedup import (
-        embedding_near_dup_pairs,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="embedding_near_dup_blocked"):
-        embedding_near_dup_pairs(emb, threshold=0.4, max_collect_rows=10)
 
 
 def test_dedup_components_transitive_merge(spark):
@@ -296,14 +327,13 @@ def test_blocked_exact_equals_collected_exact(spark, sf_dir):
     collect-based exact form bit-for-bit (same rounding grain)."""
     from user_behavior_spark_pipeline_spark.operators.dedup import (
         embedding_near_dup_blocked,
-        embedding_near_dup_pairs,
     )
     from user_behavior_spark_pipeline_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     key = lambda r: (r["vec_id_1"], r["vec_id_2"], r["cosine_x1e6"])
     blocked = sorted(map(key, embedding_near_dup_blocked(emb, 0.4).collect()))
-    exact = sorted(map(key, embedding_near_dup_pairs(emb, 0.4).collect()))
+    exact = sorted(map(key, _embedding_near_dup_pairs(emb, 0.4).collect()))
     assert blocked == exact and len(blocked) > 0
 
 
@@ -415,8 +445,6 @@ def test_portable_token_hash_matches_duckdb(spark):
     and DuckDB ('0x'||…::BIGINT) — the cross-engine contract behind
     x_dedup_simhash_portable. Property-checked over awkward strings."""
     import duckdb
-
-    from pyspark.sql import functions as F
 
     from user_behavior_spark_pipeline_spark.operators.dedup import (
         _portable_token_hash,
@@ -1020,7 +1048,7 @@ def test_exact_duplicates_hashed_equals_text_keyed(spark, docs):
         exact_duplicates_hashed,
     )
 
-    want = sorted(map(tuple, exact_duplicates(docs).collect()))
+    want = sorted(map(tuple, _exact_duplicates(docs).collect()))
     got = sorted(map(tuple, exact_duplicates_hashed(docs).collect()))
     assert got == want
 
@@ -1036,7 +1064,7 @@ def test_exact_duplicates_hashed_equals_text_keyed(spark, docs):
         "doc_id long, text string",
     )
     want = sorted(
-        map(tuple, exact_duplicates(edge).collect()),
+        map(tuple, _exact_duplicates(edge).collect()),
         key=lambda t: (t[0] is None, t),
     )
     got = sorted(

@@ -5,7 +5,6 @@ merge-on-read replay traps (supersession, decoy offset, quarantine)."""
 from __future__ import annotations
 
 import struct
-import zlib
 
 import pytest
 

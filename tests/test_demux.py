@@ -899,8 +899,6 @@ def test_ogg_corruption_quarantine_shapes():
 
 
 def test_ogg_operator_quarantines(spark):
-    from pyspark.sql import functions as F
-
     from user_behavior_spark_pipeline_spark.operators.demux import (
         ogg_audio_metadata,
         synth_ogg_media,

@@ -116,7 +116,7 @@ def test_registration_order_is_pinned():
 
     order = sorted(QUERIES, key=lambda k: QUERIES[k].__code__.co_firstlineno)
     digest = hashlib.sha1("\n".join(order).encode()).hexdigest()
-    assert digest == "6f113f163d64ee9f6867169bae4a8191d0ee65a8", order
+    assert digest == "e94c79afb246af7fb913b0c6a74d351918fc09e1", order
     assert _rotation_order(order, _HISTORY, ORACLES) == list(QUERIES)
     oracled = [k for k in order if k in ORACLES]
     assert _rotation_order(oracled, _HISTORY, ORACLES) == list(ORACLES)

@@ -1,8 +1,8 @@
 """The share-once seam (materialize.py) and the localCheckpoint pattern
 its callers use: the iterative components loop — the heaviest consumer of
 per-round checkpoints — keeps its chain + clique components, a lazy
-checkpoint truncates lineage and re-reads stably, and the shared and
-keyed caches register and release."""
+checkpoint truncates lineage and re-reads stably, and the shared cache
+registers and releases, leaving nothing cached."""
 
 from __future__ import annotations
 
@@ -71,41 +71,28 @@ def test_cache_cap_eviction_warns(spark):
         M.release_shared()
 
 
-def test_cache_shared_by_key_shares_and_releases(spark):
-    """Keyed share: same key -> the SAME cached frame (no recompute),
-    different key -> distinct; release_keyed drains; release_shared must
-    NOT touch keyed entries (cross-query reuse is the point)."""
-    calls = []
-
-    def build(tag):
-        def _b():
-            calls.append(tag)
-            return spark.range(3).toDF("x")
-        return _b
-
-    M.release_keyed()
-    a1 = M.cache_shared_by_key(("t", 1), build("a"), spark)
-    a2 = M.cache_shared_by_key(("t", 1), build("a"), spark)
-    b1 = M.cache_shared_by_key(("t", 2), build("b"), spark)
-    assert a1 is a2 and a1 is not b1
-    assert calls == ["a", "b"]  # a warm hit never runs the builder
-    assert a1.storageLevel.useMemory
-    M.release_shared()  # per-query reclaim must not evict keyed entries
-    assert a1.storageLevel.useMemory
-    assert M.release_keyed() == 2
-    assert not a1.storageLevel.useMemory
-
-
-def test_ann_trio_shares_one_baseline(spark, sf_dir):
-    """x_sim_lsh / x_sim_ivf / x_sim_pq pin exactly ONE shared exact
-    baseline per corpus (VERDICT r05 #4)."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "x_dedup_substring",
+        "x_dedup_strip",
+        "x_dedup_report",
+        "x_sim_lsh",
+        "x_sim_ivf",
+        "x_sim_pq",
+    ],
+)
+def test_release_shared_leaves_nothing_cached(spark, sf_dir, name):
+    """The queries that reuse an intermediate (the MEM-runs table of the
+    dedup trio, the exact ANN baseline of the certified trio) compute it
+    per call: after the query runs and release_shared() drains the
+    shared registry, the session's CacheManager holds no entry."""
     from user_behavior_spark_pipeline_spark.registry import QUERIES
 
-    M.release_keyed()
-    for q in ("x_sim_lsh", "x_sim_ivf", "x_sim_pq"):
-        QUERIES[q](spark, sf_dir).count()
-    assert len(M._KEYED_SHARED) == 1
-    M.release_keyed()
+    spark.catalog.clearCache()
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    M.release_shared()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_lazy_local_checkpoint_truncates_and_reuses(spark):

@@ -8,7 +8,6 @@ import pytest
 from user_behavior_spark_pipeline_spark.operators.multimodal import (
     decode_features,
     decode_real,
-    media_metadata,
     resize_plan,
     sample_frames,
     synth_media,
@@ -960,8 +959,6 @@ def test_pattern_raster_ahash_identity():
 def test_image_near_dup_hamming_end_to_end(spark):
     """Planted <=3-bit perturbations across byte-different containers
     pair at their exact distance; nothing else pairs."""
-    from pyspark.sql import functions as F
-
     from user_behavior_spark_pipeline_spark.operators.multimodal import (
         image_near_dup_pairs_hamming,
         synth_image_near_pair_media,
@@ -2318,8 +2315,6 @@ def test_image_dimensions_probe_all_formats():
         image_dimensions(png_encode_gray(7, 3, [0] * 21)[:20])
     # a JPEG whose SOF the full decoder REJECTS (SOF9 arithmetic)
     # still probes: dims are header facts, not decode facts
-    import struct
-
     raw = bytearray(jpeg_encode_gray_dc(16, 8, [0, 0]))
     i = raw.index(b"\xff\xc0")
     raw[i + 1] = 0xC9

@@ -3,8 +3,6 @@ builder, builder roundtrip closed form, operator quarantine."""
 
 from __future__ import annotations
 
-import zlib
-
 import pytest
 
 from user_behavior_spark_pipeline_spark.operators.pdf import (

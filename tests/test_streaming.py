@@ -311,8 +311,6 @@ def test_left_outer_stream_stream_join_emits_null_after_watermark(
 def test_custom_stream_source_resumes_from_checkpoint_offset(spark, tmp_path):
     """The Python streaming source's offsets live in the checkpoint: a
     second run with a larger row cap must process ONLY the delta."""
-    import pyspark.sql.functions as F
-
     from user_behavior_spark_pipeline_spark.sources.eventgen import register
 
     register(spark)

@@ -6,7 +6,6 @@ from __future__ import annotations
 import datetime
 
 import pyspark.sql.functions as F
-import pytest
 
 from user_behavior_spark_pipeline_spark.operators.upsert import (
     latest_snapshot,

@@ -131,8 +131,6 @@ def test_warc_records_operator(spark, sf_dir):
 def test_extract_html_text_inverts_escape_and_strips(spark):
     """Nasty inputs through build -> parse -> extract: entities, literal
     escape sequences, whitespace runs, tag-lookalikes in text."""
-    import pandas as pd
-
     from user_behavior_spark_pipeline_spark.operators.warc import (
         extract_html_text,
         synth_warc_bytes,
@@ -211,10 +209,6 @@ def test_warc_html_extraction_property_pure_python():
 
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-
-    from user_behavior_spark_pipeline_spark.operators.warc import (
-        _escape_html,
-    )
 
     @settings(
         max_examples=200,

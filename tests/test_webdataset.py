@@ -5,13 +5,11 @@ from __future__ import annotations
 
 import io
 import tarfile
-import zlib
 
 import pytest
 
 from user_behavior_spark_pipeline_spark.operators.webdataset import (
     synth_webdataset_bytes,
-    synth_webdataset_shards,
     tar_members,
     webdataset_members,
     webdataset_samples,

@@ -189,8 +189,6 @@ _GPT2_RX_APPROX = (
 
 def build_byte_pool() -> dict[str, int]:
     """The char-level pool with every 5th word accent-substituted."""
-    import re as _re  # noqa: F401  (documented approximation above)
-
     pool = build_word_pool()
     out: dict[str, int] = {}
     for idx, (w, f) in enumerate(sorted(pool.items())):

@@ -1,5 +1,5 @@
-"""Share-once seam for corpus-sized and cross-query intermediates
-(SCALE.md "Durability caveat").
+"""Share-once seam for corpus-sized intermediates (SCALE.md "Durability
+caveat").
 
 Durability is a per-call-site choice made in code: small derived tables
 truncate lineage with ``df.localCheckpoint()`` at their call site, and
@@ -9,14 +9,14 @@ corpus-sized frame would double its storage.
 
 :func:`cache_shared` registers its frame so sessions running many queries
 reclaim executor storage with :func:`release_shared` between queries.
-:func:`cache_shared_by_key` pins small frames several registered queries
-rebuild identically; :func:`release_keyed` drains those.
+There is no cross-query cache: each query computes its own inputs, so
+after :func:`release_shared` the session holds no cached frame.
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # frames cached by cache_shared that are still holding executor storage;
 # release_shared drains it. Bounded: sessions that never call
@@ -67,57 +67,10 @@ def cache_shared(df: DataFrame) -> tuple[DataFrame, int]:
     return cached, n
 
 
-_KEYED_SHARED: dict[tuple, DataFrame] = {}
-
-
-def cache_shared_by_key(key, builder, spark: SparkSession, eager=True) -> DataFrame:
-    """SESSION-LIFETIME keyed share for small derived frames that several
-    REGISTERED QUERIES recompute identically (VERDICT r05 #4: the three
-    certified ANN queries each rebuilt the same exact-top-k baseline).
-    Entries survive :func:`release_shared` — reuse across queries is the
-    point — so this is ONLY for frames small enough to pin for the
-    session. The key is namespaced by ``spark``'s application id, so a
-    frame from a stopped session is never served to a new one;
-    :func:`release_keyed` clears explicitly. The hit check runs BEFORE
-    ``builder()``, so a warm hit skips plan construction entirely
-    (0.3–0.6 s of py4j expression-building).
-
-    ``eager=False`` registers the persist WITHOUT the eager count: the
-    caller's next action populates the cache as a side effect, saving one
-    blocking driver job per cold build. ONLY for frames whose first
-    consumer references them exactly once (the ANN certificate's exact
-    baseline feeds one join) — a lazily-persisted frame first touched by
-    two concurrent stages computes its lineage in both. Later consumers
-    via the same key read the by-then-populated cache."""
-    full_key = (spark.sparkContext.applicationId, key)
-    hit = _KEYED_SHARED.get(full_key)
-    if hit is not None:
-        return hit
-    # prune entries from OTHER application ids: they belong to stopped
-    # sessions (a process restarting Spark repeatedly must not accumulate
-    # dead DataFrame references). A process running two LIVE sessions
-    # would thrash this prune — don't share the seam across concurrent
-    # sessions (nothing in this repo does).
-    for stale in [k for k in _KEYED_SHARED if k[0] != full_key[0]]:
-        _KEYED_SHARED.pop(stale, None)
-    cached = builder().persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        cached.count()
-    _KEYED_SHARED[full_key] = cached
-    return cached
-
-
 def release_keyed() -> int:
-    """Unpersist and forget every keyed shared frame. Returns the count."""
-    n = 0
-    while _KEYED_SHARED:
-        _, df = _KEYED_SHARED.popitem()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+    # kept only because perfbench/workloads.py imports and calls it: no
+    # frame outlives release_shared(), so there is nothing to release
+    return 0
 
 
 def release_shared() -> int:

@@ -16,9 +16,7 @@ At 100 TB each stage is one of the already-audited shapes (SCALE.md): a
 scan-side filter, a hash-agg, and the shingle self-join — the composition
 adds no new shuffle pattern. If the near-dup stage is swapped for
 embedding-based matching, compose with dedup.embedding_near_dup_lsh (the
-sign-random-projection path) — NEVER dedup.embedding_near_dup_pairs, whose
-driver-side corpus collect is the documented exact-oracle baseline and
-stops scaling around ~10M×64d.
+sign-random-projection path) or, exact, dedup.embedding_near_dup_blocked.
 """
 
 from __future__ import annotations

@@ -171,29 +171,19 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def exact_duplicates(documents: DataFrame, key: str = "text") -> DataFrame:
-    """Exact dedup groups: representative (min doc_id) + cardinality per
-    distinct text. The dedup'd corpus is the min_doc_id rows."""
-    return documents.groupBy(F.col(key)).agg(
-        F.min("doc_id").alias("min_doc_id"),
-        F.count(F.lit(1)).alias("n_copies"),
-    ).select("min_doc_id", "n_copies")
-
-
 def exact_duplicates_hashed(
     documents: DataFrame, key: str = "text"
 ) -> DataFrame:
-    """Exact dedup groups keyed on ``xxhash64(text)`` with an in-group
-    exact-text verify — the 100 TB form of :func:`exact_duplicates`
-    (VERDICT r15 #8, the declared variant; exact_duplicates stays the
-    text-keyed original). The text-keyed groupBy ships every document's
+    """Exact dedup groups: representative (min doc_id) + cardinality per
+    distinct text, keyed on ``xxhash64(text)`` with an in-group exact-text
+    verify. A text-keyed groupBy ships every document's
     full text through its exchange; here the FIRST aggregation shuffles
     16 bytes/row (hash + doc_id, text pruned from the scan), and only
     rows whose hash appears >= 2 times — actual duplicates plus the
     vanishingly rare 64-bit collision — re-shuffle WITH their text for
     the exact verify group (the duplicated_spans hash-first shape).
 
-    Output is IDENTICAL to exact_duplicates: a collision between two
+    Output is IDENTICAL to a text-keyed groupBy: a collision between two
     different texts lands both in the verify stage, whose exact-text
     groupBy separates them; a hash seen once is necessarily a text seen
     once, so singletons skip the text shuffle entirely."""
@@ -443,7 +433,6 @@ def dedup_report(
     max_shingle_df: int | None = None,
     max_anchor_df: int | None = None,
     max_anchor_tf: int | None = None,
-    share_key: str | None = None,
 ) -> DataFrame:
     """Per-document DEDUP REPORT — every duplication signal this module
     computes, joined into one row per document (the triage table a
@@ -494,16 +483,12 @@ def dedup_report(
     # (guide §2.6 "overlap independent jobs"); Spark's scheduler
     # interleaves them, and both results are joined lazily below.
     def _runs_chain() -> DataFrame:
-        r = maximal_duplicated_substrings(
+        return maximal_duplicated_substrings(
             documents,
             n=substr_n,
             max_anchor_df=max_anchor_df,
             max_anchor_tf=max_anchor_tf,
-            share_key=share_key,
-        )
-        if share_key is None:
-            r = r.localCheckpoint()
-        return r
+        ).localCheckpoint()
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -578,8 +563,7 @@ def dedup_report(
         .agg(F.max("c").alias("max_contained_x1e6"))
     )
     # runs feeds BOTH branches of the coverage union below — materialized
-    # once inside _runs_chain (the fan-out-recompute pathology, SCALE.md);
-    # under share_key the keyed seam already persisted it.
+    # once inside _runs_chain (the fan-out-recompute pathology, SCALE.md).
     #
     # Covered-token count = |union of the per-doc token intervals
     # [start, start+n_tokens-1]| — computed as the classic interval
@@ -717,8 +701,6 @@ def maximal_duplicated_substrings(
     min_tokens: int | None = None,
     max_anchor_df: int | None = None,
     max_anchor_tf: int | None = None,
-    share_key: str | None = None,
-    share_eager: bool = True,
 ) -> DataFrame:
     """ARBITRARY-LENGTH verbatim-substring dedup: every maximal token run
     shared verbatim by a document pair, with its positions and length —
@@ -766,42 +748,11 @@ def maximal_duplicated_substrings(
     dedup signal; like the df cap it is computed string-exact over the
     candidate set.
 
-    ``share_key``: the run list is SMALL (one row per maximal shared
-    run) but its discovery is the expensive stage, and three registered
-    queries consume the same runs (detection, strip action, report).
-    Passing a corpus identity string routes the result through
-    materialize.cache_shared_by_key — computed once per session per
-    (corpus, n, min_tokens, caps), the ANN-baseline pattern. None
-    (default) computes per call. ``share_eager=False`` skips the eager
-    count on a COLD build (the caller's own action populates the keyed
-    persist — one blocking job fewer); only for callers whose first plan
-    references the runs exactly once (substring: the output IS the runs;
-    strip: one interval groupBy). dedup_report references runs twice in
-    one plan (the coverage union) and must keep the eager default."""
+    The runs are computed per call. A caller whose plan reads them more
+    than once truncates them itself (:func:`dedup_report` checkpoints
+    them before its coverage union)."""
     if min_tokens is None:
         min_tokens = n
-    if share_key is not None:
-        from ..materialize import cache_shared_by_key
-
-        return cache_shared_by_key(
-            (
-                "mem_runs",
-                share_key,
-                n,
-                min_tokens,
-                max_anchor_df,
-                max_anchor_tf,
-            ),
-            lambda: maximal_duplicated_substrings(
-                documents,
-                n=n,
-                min_tokens=min_tokens,
-                max_anchor_df=max_anchor_df,
-                max_anchor_tf=max_anchor_tf,
-            ),
-            spark=documents.sparkSession,
-            eager=share_eager,
-        )
     tokenized = _spread(documents).select(
         "doc_id", F.split(F.col("text"), "\\s+").alias("_toks")
     )
@@ -1027,7 +978,6 @@ def strip_duplicated_substrings(
     min_tokens: int | None = None,
     max_anchor_df: int | None = None,
     max_anchor_tf: int | None = None,
-    share_key: str | None = None,
 ) -> DataFrame:
     """The dedup ACTION for verbatim repeats (Lee et al.'s "Deduplicating
     Training Data Makes Language Models Better" removal step): every
@@ -1062,8 +1012,6 @@ def strip_duplicated_substrings(
         min_tokens=min_tokens,
         max_anchor_df=max_anchor_df,
         max_anchor_tf=max_anchor_tf,
-        share_key=share_key,
-        share_eager=False,  # single consumer: the interval groupBy below
     )
     ivals = runs.groupBy(F.col("doc_id_2").alias("doc_id")).agg(
         F.collect_list(
@@ -1173,69 +1121,6 @@ def minhash_lsh_pairs(
     )
     return _pair_jaccard(sh, pairs_filter=candidates).filter(
         F.col("jaccard_x1e6") >= int(threshold * 1_000_000)
-    )
-
-
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.4,
-    max_collect_rows: int = 500_000,
-) -> DataFrame:
-    """Exact embedding-cosine near-duplicate pairs: (vec_id_1, vec_id_2,
-    cosine_x1e6) for every pair with cosine >= threshold.
-
-    Block-broadcast design: the normalized corpus matrix (N × d doubles) is
-    collected once and captured in a ``mapInPandas`` closure — each Arrow
-    batch of rows scores against the whole matrix as ONE numpy matmul, so
-    the O(N²) work runs vectorized and map-side with no shuffle at all.
-    This is the ORACLE BASELINE, deliberately driver-bounded:
-    ``max_collect_rows`` refuses corpora past the collect's comfort zone
-    (500k × 64 doubles ≈ 256 MB) instead of OOM-ing the driver — at
-    scale, run :func:`embedding_near_dup_blocked` (distributed-exact,
-    bit-for-bit equal) or :func:`embedding_near_dup_lsh` (candidate
-    pruning, the 100 TB path). The guard closes round-3's one standing
-    scale-killer: this function can no longer run unbounded."""
-    import numpy as np
-
-    # take(cap+1) IS the guarded collect in one pass: under the cap it
-    # returns every row; one row over proves the violation without a
-    # separate count() job re-executing the upstream pipeline
-    rows = embeddings.select("vec_id", "embedding").take(max_collect_rows + 1)
-    if len(rows) > max_collect_rows:
-        raise ValueError(
-            f"embedding_near_dup_pairs collects the corpus matrix to the "
-            f"driver and got > {max_collect_rows} rows (max_collect_rows)."
-            " This form is the test-scale oracle baseline; for large "
-            "corpora use embedding_near_dup_blocked (distributed-exact, "
-            "identical output) or embedding_near_dup_lsh (LSH-pruned)."
-        )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-
-    def _score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            x /= np.linalg.norm(x, axis=1, keepdims=True)
-            xid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            sims = x @ mat.T
-            # i < j ordering + threshold, half-up at the 1e-6 grain
-            mask = (sims >= threshold) & (xid[:, None] < ids[None, :])
-            i, j = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "vec_id_1": xid[i],
-                    "vec_id_2": ids[j],
-                    "cosine_x1e6": np.floor(sims[i, j] * 1_000_000 + 0.5).astype(
-                        np.int64
-                    ),
-                }
-            )
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        _score, "vec_id_1 long, vec_id_2 long, cosine_x1e6 long"
     )
 
 
@@ -1632,20 +1517,19 @@ def embedding_near_dup_blocked(
     every block pair (b, j>=b), side B to (i<=b, b), so every unordered
     vector pair meets in EXACTLY one (i, j) cogroup. Scoring runs as
     ``cogroup().applyInPandas``: each group is two Arrow batches turned
-    into ONE (N/B × N/B) matrix product — the same vectorized kernel as
-    the collect-based baseline, but per group and distributed. (A pure-JVM
-    pair join was measured 10-40× slower here: per-pair dot products run
-    as interpreted higher-order functions, and unrolling them blows out
-    codegen — bulk matmul is precisely the Pandas-UDF sweet spot.)
+    into ONE (N/B × N/B) matrix product, per group and distributed. (A
+    pure-JVM pair join was measured 10-40× slower here: per-pair dot
+    products run as interpreted higher-order functions, and unrolling them
+    blows out codegen — bulk matmul is precisely the Pandas-UDF sweet
+    spot.)
 
     Cost model at 100 TB: Arrow-shuffles N·(n_blocks+1) vectors (NOT two
     per pair); per-task memory is two N/B-vector blocks; compute is the
     inherent N²/2 of EXACT all-pairs, spread over B(B+1)/2 groups — tune
-    ``n_blocks`` so a block pair fits executor memory. This is the rung
-    between :func:`embedding_near_dup_pairs` (driver-collected matrix,
-    caps at one machine) and :func:`embedding_near_dup_lsh` (avoids N²
-    by candidate pruning). Same output contract as both: (vec_id_1,
-    vec_id_2, cosine_x1e6), i<j, cosine >= threshold.
+    ``n_blocks`` so a block pair fits executor memory. This is the exact
+    rung under :func:`embedding_near_dup_lsh` (avoids N² by candidate
+    pruning), with the same output contract: (vec_id_1, vec_id_2,
+    cosine_x1e6), i<j, cosine >= threshold.
     """
     import numpy as np
     import pandas as pd
@@ -1659,9 +1543,12 @@ def embedding_near_dup_blocked(
         F.col("blk").alias("bi"),
         F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("bj"),
     )
+    # identity aliases give side B's value columns ids of their own:
+    # without them the cogroup's UDF reads side A's ids for both sides,
+    # and over a union input side B arrives with its grouping columns only
     b = base.select(
-        "vec_id",
-        "embedding",
+        F.col("vec_id").alias("vec_id"),
+        F.col("embedding").alias("embedding"),
         F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("bi"),
         F.col("blk").alias("bj"),
     )
@@ -1694,8 +1581,8 @@ def embedding_near_dup_blocked(
             {
                 "vec_id_1": lo,
                 "vec_id_2": hi,
-                # half-up at the 1e-6 grain — same rounding as the numpy
-                # baseline and the DuckDB oracle
+                # half-up at the 1e-6 grain — same rounding as the
+                # DuckDB oracle
                 "cosine_x1e6": np.floor(sims[i, j] * 1_000_000 + 0.5).astype(
                     np.int64
                 ),

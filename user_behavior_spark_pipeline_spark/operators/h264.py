@@ -108,19 +108,19 @@ class _BitWriter:
     def __init__(self) -> None:
         self.bits: list[int] = []
 
-    def u(self, value: int, n: int) -> "._BitWriter":
+    def u(self, value: int, n: int) -> _BitWriter:
         for i in range(n - 1, -1, -1):
             self.bits.append((value >> i) & 1)
         return self
 
-    def ue(self, value: int) -> "._BitWriter":
+    def ue(self, value: int) -> _BitWriter:
         k = value + 1
         n = k.bit_length()
         self.u(0, n - 1)
         self.u(k, n)
         return self
 
-    def se(self, value: int) -> "._BitWriter":
+    def se(self, value: int) -> _BitWriter:
         return self.ue(2 * value - 1 if value > 0 else -2 * value)
 
     def rbsp(self) -> bytes:

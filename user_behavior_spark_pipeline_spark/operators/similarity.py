@@ -937,7 +937,6 @@ def certified_ann_topk(
     k: int = 5,
     recall_floor: float = 0.2,
     planted_offset: int = 1 << 40,
-    baseline_key: str | None = None,
     **kwargs,
 ) -> DataFrame:
     """Self-certifying wrapper for the approximate top-k paths (LSH / IVF /
@@ -973,14 +972,8 @@ def certified_ann_topk(
     ``vec_id < num_queries``. The 2^40 default clears any realistic
     corpus (10^12 ids) while leaving 2^22 headroom to long overflow.
 
-    ``baseline_key``: the exact brute-force baseline depends only on the
-    corpus and (num_queries, k, planted_offset) — NOT on the method — so
-    callers certifying several methods over the same corpus (the
-    x_sim_lsh/ivf/pq trio) pass a corpus identity string and the baseline
-    is computed once per session and shared via
-    materialize.cache_shared_by_key (num_queries x k rows pinned;
-    VERDICT r05 #4). None (default) recomputes per call — correctness
-    never depends on the share."""
+    The exact brute-force baseline is built in the same plan and feeds
+    one left join, so each call computes its own."""
     methods = {"lsh": lsh_bucketed_topk, "ivf": ivf_topk, "pq": pq_topk}
     fn = methods[method]
     planted = embeddings.filter(F.col("vec_id") < num_queries).withColumn(
@@ -989,27 +982,9 @@ def certified_ann_topk(
     corpus = embeddings.unionByName(planted)
     approx = fn(corpus, num_queries, k, **kwargs)
 
-    def _baseline() -> DataFrame:
-        return brute_force_topk(corpus, num_queries, k).select(
-            "query_id", "neighbor_id", F.lit(True).alias("in_exact")
-        )
-
-    if baseline_key is not None:
-        from ..materialize import cache_shared_by_key
-
-        # eager=False: the baseline feeds exactly ONE consumer below (the
-        # left join), so the certificate's own action populates the keyed
-        # cache — no separate blocking persist+count job per cold build
-        # (with bench hygiene draining keyed caches per sample, the cold
-        # build is the common case, not the exception)
-        exact = cache_shared_by_key(
-            ("ann_exact_baseline", baseline_key, num_queries, k, planted_offset),
-            _baseline,
-            spark=embeddings.sparkSession,
-            eager=False,
-        )
-    else:
-        exact = _baseline()
+    exact = brute_force_topk(corpus, num_queries, k).select(
+        "query_id", "neighbor_id", F.lit(True).alias("in_exact")
+    )
     floor_x100 = int(round(recall_floor * 100))
     return (
         approx.join(exact, ["query_id", "neighbor_id"], "left")

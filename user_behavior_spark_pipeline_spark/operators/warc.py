@@ -683,8 +683,6 @@ def robots_url_filter(
     joined = urls.join(robots, "host", "left")
 
     def _decide(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
         for batch in batches:
             cache: dict[bytes, dict] = {}
             allowed = []

@@ -853,8 +853,6 @@ def x_sample_reservoir(spark, sf_dir):
     membership. Runs the SKEW-SAFE two-phase form (local top-k pruning
     before the global window) — the oracle states the naive single-window
     definition, pinning the lossless-pruning equivalence."""
-    from pyspark.sql import functions as F
-
     from .operators.sampling import reservoir_per_group
 
     return reservoir_per_group(
@@ -1694,8 +1692,6 @@ def x_parquet_footer(spark, sf_dir):
     codec (UNCOMPRESSED/SNAPPY/GZIP) and row-group splits; pairs with
     the layout.py compaction/z-order operators that fix what this
     probe finds."""
-    from pyspark.sql import functions as F
-
     from .operators.lake import parquet_footers, synth_parquet_media
 
     media = _staged_media(
@@ -2227,20 +2223,6 @@ _SHINGLE_PAIRS_SQL = (
 
 
 @query(
-    "x_dedup_exact",
-    oracle=(
-        "SELECT MIN(doc_id) AS min_doc_id, COUNT(*) AS n_copies "
-        "FROM documents GROUP BY text"
-    ),
-)
-def x_dedup_exact(spark, sf_dir):
-    """Exact dedup: hash-groupBy on text, deterministic representative."""
-    from .operators.dedup import exact_duplicates
-
-    return exact_duplicates(_table(spark, sf_dir, "documents"))
-
-
-@query(
     "x_dedup_exact_hashed",
     oracle=(
         "SELECT MIN(doc_id) AS min_doc_id, COUNT(*) AS n_copies "
@@ -2248,13 +2230,13 @@ def x_dedup_exact(spark, sf_dir):
     ),
 )
 def x_dedup_exact_hashed(spark, sf_dir):
-    """Exact dedup, HASH-KEYED (the declared 100 TB variant — VERDICT
-    r15 #8): same representative set as x_dedup_exact, but the first
-    exchange carries xxhash64(text) + doc_id (16 bytes/row) instead of
-    every document's text; only duplicate-hash rows re-shuffle with
-    text for the in-group exact verify, so collisions cannot merge
-    distinct texts. Same oracle as x_dedup_exact — identical output by
-    construction."""
+    """Exact dedup, HASH-KEYED: one row per distinct text with its
+    min-doc_id representative and copy count. The first exchange carries
+    xxhash64(text) + doc_id (16 bytes/row) instead of every document's
+    text; only duplicate-hash rows re-shuffle with text for the in-group
+    exact verify, so collisions cannot merge distinct texts. Equality
+    with a plain text-keyed groupBy is pinned in
+    tests/test_dedup.py::test_exact_duplicates_hashed_equals_text_keyed."""
     from .operators.dedup import exact_duplicates_hashed
 
     return exact_duplicates_hashed(_table(spark, sf_dir, "documents"))
@@ -2314,9 +2296,7 @@ def x_dedup_substring(spark, sf_dir):
     from .operators.dedup import maximal_duplicated_substrings
 
     return maximal_duplicated_substrings(
-        _table(spark, sf_dir, "documents"), n=5,
-        share_key=f"{sf_dir}:documents",
-        share_eager=False,  # the runs ARE the output — single consumer
+        _table(spark, sf_dir, "documents"), n=5
     )
 
 
@@ -2360,8 +2340,7 @@ def x_dedup_strip(spark, sf_dir):
     from .operators.dedup import strip_duplicated_substrings
 
     return strip_duplicated_substrings(
-        _table(spark, sf_dir, "documents"), n=5,
-        share_key=f"{sf_dir}:documents",
+        _table(spark, sf_dir, "documents"), n=5
     )
 
 
@@ -2447,9 +2426,7 @@ def x_dedup_report(spark, sf_dir):
     materialization feeds both pair signals."""
     from .operators.dedup import dedup_report
 
-    return dedup_report(
-        _table(spark, sf_dir, "documents"), share_key=f"{sf_dir}:documents"
-    )
+    return dedup_report(_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -2549,26 +2526,6 @@ def x_dedup_minhash(spark, sf_dir):
 
 
 @query(
-    "x_dedup_embedding",
-    oracle=(
-        "WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb "
-        "FROM embeddings) "
-        "SELECT a.vec_id AS vec_id_1, b.vec_id AS vec_id_2, "
-        "CAST(ROUND(list_cosine_similarity(a.emb, b.emb) * 1000000) AS BIGINT) "
-        "AS cosine_x1e6 "
-        "FROM n a, n b WHERE a.vec_id < b.vec_id "
-        "AND list_cosine_similarity(a.emb, b.emb) >= 0.4"
-    ),
-)
-def x_dedup_embedding(spark, sf_dir):
-    """Embedding-cosine near-dup pairs, exact all-pairs form (the oracle
-    baseline; the LSH form below is the 100 TB path)."""
-    from .operators.dedup import embedding_near_dup_pairs
-
-    return embedding_near_dup_pairs(_table(spark, sf_dir, "embeddings"), threshold=0.4)
-
-
-@query(
     "x_dedup_embedding_blocked",
     oracle=(
         "WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb "
@@ -2584,9 +2541,9 @@ def x_dedup_embedding_blocked(spark, sf_dir):
     """Exact embedding near-dup WITHOUT the driver-side matrix collect:
     block-replicated theta join — every unordered pair meets in exactly one
     block-pair join group, per-task memory bounded by N/n_blocks vectors.
-    Same oracle as x_dedup_embedding: the two exact forms must agree
-    bit-for-bit; this one is the distributed-exact rung between the numpy
-    baseline and the LSH scale path."""
+    The exact rung under the LSH scale path (x_dedup_embedding_lsh);
+    equality with a collected numpy all-pairs reference is pinned in
+    tests/test_dedup.py::test_blocked_exact_equals_collected_exact."""
     from .operators.dedup import embedding_near_dup_blocked
 
     return embedding_near_dup_blocked(
@@ -2822,7 +2779,8 @@ def x_sim_bruteforce(spark, sf_dir):
 @query("x_sim_pandas", oracle=_COSINE_TOPK_SQL)
 def x_sim_pandas(spark, sf_dir):
     """Same top-k via Arrow-batched numpy pandas_udf (OP-X-UDF-SURFACE) —
-    must reproduce the JVM path's ranks exactly."""
+    must reproduce the JVM path's ranks exactly. The twin waits for
+    ROADMAP item 5 (one batched GEMM kernel for the family)."""
     from .operators.similarity import pandas_cosine_topk
 
     return pandas_cosine_topk(_table(spark, sf_dir, "embeddings"), 10, 5)
@@ -2869,8 +2827,7 @@ def x_sim_lsh(spark, sf_dir):
     from .operators.similarity import certified_ann_topk
 
     return certified_ann_topk(
-        _table(spark, sf_dir, "embeddings"), "lsh", 10, 5,
-        baseline_key=f"{sf_dir}:embeddings",
+        _table(spark, sf_dir, "embeddings"), "lsh", 10, 5
     )
 
 
@@ -2881,12 +2838,13 @@ def x_sim_ivf(spark, sf_dir):
     run self-certifying: the planted exact copy is assigned to the query's
     own nearest cell — the first cell probed — so planted_ok is
     deterministic for any trained centroid set; recall floor as in LSH.
-    Full-rank parity in x_sim_ivf_exhaustive (nprobe == n_centroids)."""
+    Full-rank parity in x_sim_ivf_exhaustive (nprobe == n_centroids).
+    Shares x_sim_lsh's certificate oracle: each ANN method certifies
+    itself against the same all-TRUE rows."""
     from .operators.similarity import certified_ann_topk
 
     return certified_ann_topk(
-        _table(spark, sf_dir, "embeddings"), "ivf", 10, 5,
-        baseline_key=f"{sf_dir}:embeddings",
+        _table(spark, sf_dir, "embeddings"), "ivf", 10, 5
     )
 
 
@@ -2898,6 +2856,7 @@ def x_sim_pq(spark, sf_dir):
     exceeds quantization noise (holds by orders of magnitude on any
     non-degenerate embedding corpus); recall floor as in LSH. Exactness of
     the encode/score pipeline is hash-proved by x_sim_pq_exhaustive.
+    Shares x_sim_lsh's certificate oracle, as x_sim_ivf does.
 
     TRIAGE NOTE (ADVICE r05): unlike LSH/IVF — where planted retrieval is
     DETERMINISTIC (identical signature / identical nearest centroid) —
@@ -2911,8 +2870,7 @@ def x_sim_pq(spark, sf_dir):
     from .operators.similarity import certified_ann_topk
 
     return certified_ann_topk(
-        _table(spark, sf_dir, "embeddings"), "pq", 10, 5, m=16, n_codes=64,
-        baseline_key=f"{sf_dir}:embeddings",
+        _table(spark, sf_dir, "embeddings"), "pq", 10, 5, m=16, n_codes=64
     )
 
 
@@ -3007,7 +2965,8 @@ def x_approx_percentile(spark, sf_dir):
 def x_approx_mergeable(spark, sf_dir):
     """Mergeable Datasketches HLL: daily sketches unioned into per-type
     totals (the incremental-rollup pattern) — estimate must land within 5%
-    of exact."""
+    of exact. Shares x_approx_distinct's oracle because it is a different
+    sketch under the same bound."""
     from .operators.approx import distinct_users_mergeable_sketch
 
     return distinct_users_mergeable_sketch(_table(spark, sf_dir, "events"))
@@ -3123,7 +3082,9 @@ def x_stream_windowed(spark, sf_dir):
 )
 def x_stream_dedup(spark, sf_dir):
     """Streaming dedup: every record delivered twice, exactly one survives
-    per offset (dropDuplicatesWithinWatermark — watermark-bounded state)."""
+    per offset (dropDuplicatesWithinWatermark — watermark-bounded state).
+    Shares ref_count's oracle because the results coincide: one survivor
+    per twice-delivered record leaves exactly the batch row count."""
     from pyspark.sql import functions as F
 
     from .streaming.jobs import dedup_stream, file_stream_source
@@ -3296,7 +3257,9 @@ def x_stream_session(spark, sf_dir):
 def x_stream_static_join(spark, sf_dir):
     """Stream-static broadcast join (the README.md:819 'players × events'
     wish, streaming form): event stream enriched against the customer
-    dimension, aggregated per market segment."""
+    dimension, aggregated per market segment. Shares x_join_salted's
+    oracle because the results coincide: both are the plain events x
+    customer rollup per segment."""
     from .streaming.jobs import stream_static_join_stream
 
     stream = _events_stream(spark, sf_dir).select("user_id", "value")
@@ -4567,8 +4530,6 @@ def x_demux_ogg(spark, sf_dir):
     subtracted). Headers only — audio packets are counted, never
     decoded; corruption (bad capture, CRC, truncation, grouped
     multiplex) quarantines."""
-    from pyspark.sql import functions as F
-
     from .operators.demux import ogg_audio_metadata, synth_ogg_media
 
     media = _staged_media(spark, sf_dir, "ogg_media", synth_ogg_media)
@@ -6775,7 +6736,8 @@ def ref_source_orc(spark, sf_dir):
 @query("ref_source_json", oracle=_FMT_ORACLE)
 def ref_source_json(spark, sf_dir):
     """JSON-lines source with INFERRED schema (the OP-INFER escape hatch,
-    idiomatic form — spark.read.json, no RDD round-trip)."""
+    idiomatic form — spark.read.json, no RDD round-trip). A format pair
+    with ref_source_csv: same staged events, same rollup, same oracle."""
     src = _stage_format(spark, sf_dir, "json")
     return _format_rollup(spark.read.json(src))
 
@@ -7961,6 +7923,30 @@ _BPE_BYTE_SQL = (
 )
 
 
+def _bpe_byte_stats(spark, sf_dir, vocab_json: str, merges_txt: str):
+    """(doc_id, n_tokens, id_sum, first_id) of the byte-level BPE id
+    stream of each document's fixture text, encoded with the tokenizer
+    file pair ``(vocab_json, merges_txt)`` — the body the BPE twins
+    share, which keeps their plans identical."""
+    from pyspark.sql import functions as F
+
+    from .operators.bpe_bytes import bpe_byte_ids_arrow, synth_bpe_byte_text
+
+    docs = _table(spark, sf_dir, "documents").withColumn(
+        "text", synth_bpe_byte_text(F.col("doc_id"))
+    )
+    ids = bpe_byte_ids_arrow(F.col("text"), vocab_json, merges_txt)
+    t = docs.select("doc_id", ids.alias("_ids"))
+    return t.select(
+        "doc_id",
+        F.size("_ids").cast("long").alias("n_tokens"),
+        F.aggregate(
+            "_ids", F.lit(0).cast("long"), lambda a, x: a + x
+        ).alias("id_sum"),
+        F.element_at("_ids", 1).alias("first_id"),
+    )
+
+
 @query("x_corpus_bpe_bytelevel", oracle=_BPE_BYTE_SQL)
 def x_corpus_bpe_bytelevel(spark, sf_dir):
     """BYTE-level BPE with the GPT-2 pre-tokenizer and a real
@@ -7978,24 +7964,9 @@ def x_corpus_bpe_bytelevel(spark, sf_dir):
     oracle embeds id statistics generated by an independent naive
     implementation, so loader+mapping+pretokenizer+kernel must ALL
     agree for the hash."""
-    from pyspark.sql import functions as F
-
-    from .operators.bpe_bytes import bpe_byte_ids_arrow, synth_bpe_byte_text
     from .operators.bpe_vocab import GPT2_MERGES_TXT, GPT2_VOCAB_JSON
 
-    docs = _table(spark, sf_dir, "documents").withColumn(
-        "text", synth_bpe_byte_text(F.col("doc_id"))
-    )
-    ids = bpe_byte_ids_arrow(F.col("text"), GPT2_VOCAB_JSON, GPT2_MERGES_TXT)
-    t = docs.select("doc_id", ids.alias("_ids"))
-    return t.select(
-        "doc_id",
-        F.size("_ids").cast("long").alias("n_tokens"),
-        F.aggregate(
-            "_ids", F.lit(0).cast("long"), lambda a, x: a + x
-        ).alias("id_sum"),
-        F.element_at("_ids", 1).alias("first_id"),
-    )
+    return _bpe_byte_stats(spark, sf_dir, GPT2_VOCAB_JSON, GPT2_MERGES_TXT)
 
 
 @query("x_corpus_bpe_50k", oracle=_BPE_BYTE_SQL)
@@ -8013,28 +7984,9 @@ def x_corpus_bpe_50k(spark, sf_dir):
     the closed-form oracle (encodings provably identical under both
     tables; test_bpe_bytes) keeps the 50k run hash-certified, not just
     timed."""
-    from pyspark.sql import functions as F
+    from .operators.bpe_bytes import gen_scaled_tokenizer
 
-    from .operators.bpe_bytes import (
-        bpe_byte_ids_arrow,
-        gen_scaled_tokenizer,
-        synth_bpe_byte_text,
-    )
-
-    vj, mt = gen_scaled_tokenizer(50_000)
-    docs = _table(spark, sf_dir, "documents").withColumn(
-        "text", synth_bpe_byte_text(F.col("doc_id"))
-    )
-    ids = bpe_byte_ids_arrow(F.col("text"), vj, mt)
-    t = docs.select("doc_id", ids.alias("_ids"))
-    return t.select(
-        "doc_id",
-        F.size("_ids").cast("long").alias("n_tokens"),
-        F.aggregate(
-            "_ids", F.lit(0).cast("long"), lambda a, x: a + x
-        ).alias("id_sum"),
-        F.element_at("_ids", 1).alias("first_id"),
-    )
+    return _bpe_byte_stats(spark, sf_dir, *gen_scaled_tokenizer(50_000))
 
 
 @query(
